@@ -242,7 +242,7 @@ object FileSkipping {
                         manifest: Option[DataFrame] = None): DataFrame =
     manifest.flatMap(_.select("file").limit(1).collect().headOption)
       .map(_.getString(0)) match {
-      case Some(f) => spark.read.parquet(f).limit(0)
+      case Some(f) => DriverParquet.typedReader(spark, None, f).parquet(f).limit(0)
       case None =>
         spark.read.option("recursiveFileLookup", "true").parquet(dataDir).limit(0)
     }
@@ -291,13 +291,15 @@ object FileSkipping {
 
   /** Fresh per-file stats for `files` — one pass over the replacements.
     * `extraCols` appends `min_<c>`/`max_<c>` for each listed column, the
-    * multi-dimension stats a z-ordered OCC table's snapshots carry. */
+    * multi-dimension stats a z-ordered OCC table's snapshots carry. The
+    * read is typed from the first file's footer on the driver
+    * ([[DriverParquet.footerSchema]]) — no schema-inference job. */
   private def statsFor(spark: SparkSession, files: Seq[String], keyCol: String,
                        extraCols: Seq[String] = Nil): DataFrame = {
     val aggs = Seq(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
       count(lit(1)).as("n_rows"), count(col(keyCol)).as("n_keys")) ++
       extraCols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read.parquet(files: _*)
+    DriverParquet.typedReader(spark, None, files.min).parquet(files: _*)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
   }
@@ -532,7 +534,7 @@ object FileSkipping {
     * bounded by [[vacuumFeeds]] retention, or by the cursor window for
     * incremental consumers), pre-evolution slots null-fill. */
   private def readSlotUnion(spark: SparkSession, slots: Seq[String]): DataFrame =
-    slots.map(s => spark.read.parquet(s))
+    slots.map(s => DriverParquet.typedReader(spark, None, s).parquet(s))
       .reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** INCREMENTAL committed-feed consumption (round-11 verdict: the batch
@@ -603,13 +605,12 @@ object FileSkipping {
         "across the range layout; express it as DELETE + INSERT (or MERGE)")
     val (rv, snap) = pinned.getOrElse(VersionLog.begin(spark, versionsDir))
     if (txnApplied(spark, versionsDir, rv, txn)) return (rv, 0L, 0)
-    val reader = VersionLog.schemaAt(spark, versionsDir, rv)
-      .map(spark.read.schema).getOrElse(spark.read)
     val overlapMap = dvMapOf(snap,
       snap.filter(coalesce(col("max_key") >= lo && col("min_key") <= hi, lit(false)))
         .select("file").collect().map(_.getString(0)).toSeq)
     if (overlapMap.isEmpty) return (rv, 0L, 0)
-    val touched = VersionLog.readRowsWithDv(spark, reader, overlapMap).cache()
+    val touched = VersionLog.readRowsWithDv(spark,
+      VersionLog.schemaAt(spark, versionsDir, rv), overlapMap).cache()
     try {
       val unknown = assignments.map(_._1)
         .filterNot(a => touched.columns.exists(_.equalsIgnoreCase(a)))
@@ -693,8 +694,11 @@ object FileSkipping {
     require(slots.nonEmpty,
       s"no committed transaction feed slots under $cdcDir — nothing to read changes from")
     val hit = slots.filter { case (v, _) => v >= fromV && v <= toV }
+    // each slot typed from its own footer (slots of different versions
+    // may straddle a schema evolution; the union aligns them by name)
     def withVersion(v: Int, slot: String) =
-      spark.read.parquet(slot).withColumn("_commit_version", lit(v.toLong))
+      DriverParquet.typedReader(spark, None, slot).parquet(slot)
+        .withColumn("_commit_version", lit(v.toLong))
     if (hit.isEmpty)
       withVersion(slots.head._1, slots.head._2).limit(0)
     else
@@ -872,7 +876,9 @@ object FileSkipping {
             "this transaction was in flight; size the vacuum retention window past " +
             "the longest transaction, then re-run this mutation against the new head")
       try snap.select("file").limit(1).collect().headOption match {
-        case Some(r) => spark.read.parquet(r.getString(0)).schema
+        case Some(r) =>
+          val f = r.getString(0)
+          DriverParquet.footerSchema(spark, f).getOrElse(spark.read.parquet(f).schema)
         case None => throw new UntypedEmptyTable(
           s"version v$v of $versionsDir references zero files and records no schema — " +
             "cannot type this transaction's reads; bootstrap the log with a schema " +
@@ -1164,16 +1170,13 @@ object FileSkipping {
       // would resurrect every DV-deleted row into the replacements (the
       // replacements carry no dv pointer — the merge MATERIALIZES the
       // hit files' DVs as a side effect, Delta's behavior)
-      val touched = (stored match {
-        case Some(st) =>
-          if (hit.isEmpty)
+      val touched = (
+        if (hit.nonEmpty) VersionLog.readRowsWithDv(spark, stored, dvMapOf(snap, hit.toIndexedSeq))
+        else stored match {
+          case Some(st) =>
             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-          else VersionLog.readRowsWithDv(spark, spark.read.schema(st),
-            dvMapOf(snap, hit.toIndexedSeq))
-        case None =>
-          if (hit.isEmpty) emptyLike(spark, dataDir, Some(snap))
-          else VersionLog.readRowsWithDv(spark, spark.read, dvMapOf(snap, hit.toIndexedSeq))
-      }).cache()
+          case None => emptyLike(spark, dataDir, Some(snap))
+        }).cache()
       try {
         val evolved = schemaContract(touched.schema, delta.schema, evolveSchema, "MERGE delta")
         val deltaKeys = delta.select(keyCol)
@@ -1318,16 +1321,14 @@ object FileSkipping {
       val victims: Seq[String] =
         if (smArms.nonEmpty) snap.select("file").collect().map(_.getString(0)).toSeq.sorted
         else rangeHitFiles(snap, delta.select(col(keyCol))).toSeq
-      val touched = (stored match {
-        case Some(st) =>
-          if (victims.isEmpty)
+      val touched = (
+        if (victims.nonEmpty)
+          VersionLog.readRowsWithDv(spark, stored, dvMapOf(snap, victims.toIndexedSeq))
+        else stored match {
+          case Some(st) =>
             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-          else VersionLog.readRowsWithDv(spark, spark.read.schema(st),
-            dvMapOf(snap, victims.toIndexedSeq))
-        case None =>
-          if (victims.isEmpty) emptyLike(spark, dataDir, Some(snap))
-          else VersionLog.readRowsWithDv(spark, spark.read, dvMapOf(snap, victims.toIndexedSeq))
-      }).cache()
+          case None => emptyLike(spark, dataDir, Some(snap))
+        }).cache()
       try {
         schemaContract(touched.schema, delta.schema, evolveSchema = false, "MERGE source")
         val tableCols = touched.columns.toIndexedSeq
@@ -1467,8 +1468,7 @@ object FileSkipping {
     // post-evolution snapshots mix file schemas: read the pinned files
     // WITH the version's recorded schema when one exists, so the feed
     // and the boundary rewrite keep every (null-filled) evolved column
-    val reader = VersionLog.schemaAt(spark, versionsDir, rv)
-      .map(spark.read.schema).getOrElse(spark.read)
+    val schema = VersionLog.schemaAt(spark, versionsDir, rv)
     val nullFree =
       if (snap.columns.contains("n_keys")) col("n_keys") === col("n_rows")
       else lit(false)
@@ -1492,7 +1492,7 @@ object FileSkipping {
     // row must neither re-emit to the feed nor resurrect through the
     // boundary rewrite (whose replacement files carry no dv pointer)
     cdcDir.foreach { dir =>
-      val vdf = VersionLog.readRowsWithDv(spark, reader,
+      val vdf = VersionLog.readRowsWithDv(spark, schema,
           dvMapOf(snap, (full ++ partial).toIndexedSeq))
         .filter(col(keyCol) >= lo && col(keyCol) <= hi)
       vdf.select(lit("delete").as("op") +: vdf.columns.map(col): _*)
@@ -1504,7 +1504,7 @@ object FileSkipping {
     val fresh =
       if (partial.isEmpty) { fs.delete(slotPath, true); Seq.empty[String] }
       else {
-        VersionLog.readRowsWithDv(spark, reader, dvMapOf(snap, partial.toIndexedSeq))
+        VersionLog.readRowsWithDv(spark, schema, dvMapOf(snap, partial.toIndexedSeq))
           .filter(col(keyCol).isNull || !(col(keyCol) >= lo && col(keyCol) <= hi))
           .write.mode("overwrite").parquet(slot)
         listParquet(fs, slotPath).toSeq.sorted
@@ -1588,8 +1588,7 @@ object FileSkipping {
                        txn: Option[(String, Long)] = None): (Int, Long, Int) = {
     val (rv, snap) = pinned.getOrElse(VersionLog.begin(spark, versionsDir))
     if (txnApplied(spark, versionsDir, rv, txn)) return (rv, 0L, 0)
-    val reader = VersionLog.schemaAt(spark, versionsDir, rv)
-      .map(spark.read.schema).getOrElse(spark.read)
+    val schema = VersionLog.schemaAt(spark, versionsDir, rv)
     val overlap = snap
       .filter(coalesce(col("max_key") >= lo && col("min_key") <= hi, lit(false)))
     val overlapMap = dvMapOf(snap,
@@ -1600,7 +1599,8 @@ object FileSkipping {
     // relation, never through a union/join — then the files' EXISTING
     // sidecar rows anti-join out (a row already deleted must neither
     // re-emit to the feed nor re-enter the sidecar union below)
-    val raw = reader.parquet(overlapMap.map(_._1): _*)
+    val raw = DriverParquet.typedReader(spark, schema, overlapMap.head._1)
+      .parquet(overlapMap.map(_._1): _*)
     def fresh(stem: String): String = Iterator.from(0)
       .map(i => if (i == 0) stem else s"$stem$i")
       .find(c => !raw.columns.contains(c)).get
@@ -1618,7 +1618,8 @@ object FileSkipping {
       else {
         import spark.implicits._
         Some(priorPairs.map(_._2).distinct.sorted.map { d =>
-          spark.read.parquet(d).select(col("file"), col("pos"), lit(d).as("__dv"))
+          DriverParquet.typedReader(spark, None, d).parquet(d)
+            .select(col("file"), col("pos"), lit(d).as("__dv"))
         }.reduce(_ unionByName _)
           .join(broadcast(priorPairs.toDF("file", "__dv")), Seq("file", "__dv"), "left_semi")
           .select(col("file"), col("pos")))
@@ -1875,15 +1876,14 @@ object FileSkipping {
     val partial = tagged.filter(r =>
         r.getBoolean(r.fieldIndex("__overlap")) && !r.getBoolean(r.fieldIndex("__covered")))
       .map(_.getString(0))
-    val reader = VersionLog.schemaAt(spark, versionsDir, rv)
-      .map(spark.read.schema).getOrElse(spark.read)
+    val schema = VersionLog.schemaAt(spark, versionsDir, rv)
     val outCols = table.getOrElse(rows.schema).fieldNames.toIndexedSeq
     cdcDir.foreach { dir =>
       val ins = rows.select(lit("insert").as("op") +: outCols.map(col): _*)
       val dels =
         if (full.isEmpty && partial.isEmpty) None
         else Some {
-          VersionLog.readRowsWithDv(spark, reader,
+          VersionLog.readRowsWithDv(spark, schema,
               dvMapOf(snap, (full ++ partial).toIndexedSeq))
             .filter(col(keyCol) >= lo && col(keyCol) <= hi)
             .select(lit("delete").as("op") +: outCols.map(col): _*)
@@ -1898,7 +1898,7 @@ object FileSkipping {
     // files, live DVs applied) land first; the replacement rows append
     // beside them, column-aligned — one slot, one listing, one commit
     if (partial.nonEmpty)
-      VersionLog.readRowsWithDv(spark, reader, dvMapOf(snap, partial.toIndexedSeq))
+      VersionLog.readRowsWithDv(spark, schema, dvMapOf(snap, partial.toIndexedSeq))
         .filter(col(keyCol).isNull || !(col(keyCol) >= lo && col(keyCol) <= hi))
         .select(outCols.map(col): _*)
         .write.mode("overwrite").parquet(slot)
@@ -2231,11 +2231,10 @@ object FileSkipping {
     val files = snap.select("file").collect().map(_.getString(0)).sorted.toIndexedSeq
     require(files.nonEmpty, s"nothing to z-order at v$rv of $versionsDir")
     val n = if (outFiles > 0) outFiles else files.length
-    val reader = VersionLog.schemaAt(spark, versionsDir, rv)
-      .map(spark.read.schema).getOrElse(spark.read)
+    val schema = VersionLog.schemaAt(spark, versionsDir, rv)
     // DV-applied (and thereby materialized — the z-ordered replacements
     // carry no dv pointer): a raw read would resurrect deleted rows
-    val df = VersionLog.readRowsWithDv(spark, reader, dvMapOf(snap, files))
+    val df = VersionLog.readRowsWithDv(spark, schema, dvMapOf(snap, files))
     // one stats pass normalizes every dim to [0, 2^bits)
     val extAggs = dims.flatMap(c =>
       Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
@@ -2431,10 +2430,10 @@ object FileSkipping {
     }
     val candMap = dvMapOf(snap,
       candidates.select("file").collect().map(_.getString(0)).toSeq)
-    val small = candMap.map(_._1).filter { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      fs.exists(p) && fs.getFileStatus(p).getLen < smallBytes
-    }.toSet
+    // one stat per candidate; a missing live file fails loudly, naming it
+    val sizes = candMap.map { case (f, _) =>
+      f -> VersionLog.liveFileLen(fs, f, versionsDir, rv) }.toMap
+    val small = sizes.filter(_._2 < smallBytes).keySet
     // OPTIMIZE also MATERIALIZES deletion vectors (Delta's behavior): a
     // DV'd file is a rewrite candidate regardless of size — reading it
     // DV-applied and writing it clean is exactly what retires the
@@ -2445,18 +2444,14 @@ object FileSkipping {
     val rewriteMap = candMap.filter { case (f, _) => small(f) || dvd(f) }
     if (rewriteMap.length < 2 && dvd.isEmpty) return (rv, 0, 0)
     if (rewriteMap.isEmpty) return (rv, 0, 0)
-    val totalBytes = rewriteMap.map { case (f, _) =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen }.sum
+    val totalBytes = rewriteMap.map { case (f, _) => sizes(f) }.sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val slot = s"$dataDir/txn-$txnId"
     // read WITH the pinned version's recorded schema when one exists:
     // post-evolution the smalls mix file schemas, and a footer-sampled
     // read would silently DROP the evolved column from the compacted
     // replacements — the exact silent-loss shape the schema record closes
-    VersionLog.readRowsWithDv(spark,
-        VersionLog.schemaAt(spark, versionsDir, rv)
-          .map(spark.read.schema).getOrElse(spark.read),
-        rewriteMap)
+    VersionLog.readRowsWithDv(spark, VersionLog.schemaAt(spark, versionsDir, rv), rewriteMap)
       .repartitionByRange(nOut, col(keyCol))
       .sortWithinPartitions(keyCol)
       .write.mode("overwrite").parquet(slot)
@@ -2614,17 +2609,18 @@ object FileSkipping {
                              ranges: Seq[(String, Column, Column)]): DataFrame = {
     val man = VersionLog.manifestAt(spark, versionsDir, v)
     val rows = VersionLog.dvRowsOf(man.filter(multiRangeAdmit(ranges)))
-    val reader = VersionLog.schemaAt(spark, versionsDir, v)
-      .map(spark.read.schema).getOrElse(spark.read)
+    val schema = VersionLog.schemaAt(spark, versionsDir, v)
     if (rows.isEmpty)
       // schema from any file of the snapshot (footer-only read); a
       // zero-FILE snapshot must not throw NoSuchElementException out of
       // head() (round-11 review) — a typed empty read handles it
       man.select("file").limit(1).collect().headOption match {
-        case Some(r) => reader.parquet(r.getString(0)).limit(0)
+        case Some(r) =>
+          val f = r.getString(0)
+          DriverParquet.typedReader(spark, schema, f).parquet(f).limit(0)
         case None => VersionLog.readVersion(spark, versionsDir, v) // typed empty or loud
       }
-    else VersionLog.readRowsWithDv(spark, reader, rows)
+    else VersionLog.readRowsWithDv(spark, schema, rows)
   }
 
   /** EXACTLY-ONCE streaming ingest slot — the write path that feeds the

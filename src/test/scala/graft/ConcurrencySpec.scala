@@ -33,7 +33,7 @@ class ConcurrencySpec extends SparkSpec {
   /** Fresh 8-file range-sorted table (keys 0..7999, ~1000/file) with
     * manifest + a bootstrapped version log. Returns (dataDir, vdir). */
   private def freshTable(name: String): (String, String) = {
-    val base = s"/root/repo/target/scratch/conc_$name"
+    val base = scratch(s"conc_$name")
     graft.util.Staging.deleteRecursive(base)
     spark.range(8000).select(col("id").as("k"),
         concat(lit("p"), (col("id") % 5).cast("string")).as("tag"),
@@ -172,7 +172,7 @@ class ConcurrencySpec extends SparkSpec {
   /** 1 big file (keys 0..3999) + 8 small files (keys 4000..7999) — the
     * post-streaming-ingest layout a compactor maintains. */
   private def freshSkewedTable(name: String): (String, String) = {
-    val base = s"/root/repo/target/scratch/conc_$name"
+    val base = scratch(s"conc_$name")
     graft.util.Staging.deleteRecursive(base)
     def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id").as("k"),
       concat(lit("p"), (col("id") % 5).cast("string")).as("tag"),

@@ -20,6 +20,12 @@ trait SparkSpec extends AnyFunSuite {
   }
   def sf(name: String) = s"/root/testdata/$name"
 
+  /** Absolute path of `name` under `target/scratch` of the working
+    * directory (the checkout the suite runs from), so a spec never writes
+    * into a hard-coded checkout. */
+  def scratch(name: String): String =
+    new java.io.File("target/scratch", name).getAbsolutePath
+
   override protected def withFixture(test: NoArgTest): org.scalatest.Outcome = {
     // snapshot → delta (round-8 review): the audit counter is cumulative
     // across the shared JVM, so failing on the absolute value made every

@@ -25,7 +25,7 @@ class TableChangesSpec extends SparkSpec {
       (col("id") % 97).cast("double").as("v"))
 
   private def freshOcc(name: String): String = {
-    val base = s"/root/repo/target/scratch/tc_$name"
+    val base = scratch(s"tc_$name")
     graft.util.Staging.deleteRecursive(base)
     rows(0, 2000).repartitionByRange(4, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")

@@ -33,7 +33,7 @@ class TableLifecycleSpec extends SparkSpec {
       (col("id") % 997 / 7.0).as("v"))
 
   private def freshTable(name: String, nFiles: Int = 8): String = {
-    val base = s"/root/repo/target/scratch/lifec_$name"
+    val base = scratch(s"lifec_$name")
     graft.util.Staging.deleteRecursive(base)
     rows(0, 8000).repartitionByRange(nFiles, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")
@@ -180,7 +180,7 @@ class TableLifecycleSpec extends SparkSpec {
 
   test("cross-type band bounds (key widened across history) abort with the typed message, not ClassCastException") {
     import spark.implicits._
-    val base = "/root/repo/target/scratch/lifec_xtype"
+    val base = scratch("lifec_xtype")
     graft.util.Staging.deleteRecursive(base)
     val vdir = s"$base/versions"
     // a legacy log whose snapshots carry INT key stats
@@ -232,7 +232,7 @@ class TableLifecycleSpec extends SparkSpec {
     // round-12 advice: the bootstrap-schema memo was keyed by path alone,
     // so after a delete + re-create (every spec/bench scratch flow) the
     // contract checked appends against the DEAD table's schema
-    val base = "/root/repo/target/scratch/lifec_memoid"
+    val base = scratch("lifec_memoid")
     def build(r: org.apache.spark.sql.DataFrame): Unit = {
       graft.util.Staging.deleteRecursive(base)
       r.repartitionByRange(2, col("k")).sortWithinPartitions("k")
@@ -373,7 +373,7 @@ class TableLifecycleSpec extends SparkSpec {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.racefs.impl", classOf[graft.util.RaceFs].getName)
     hc.setBoolean("fs.racefs.impl.disable.cache", true)
-    val base = s"/root/repo/target/scratch/lifec_toctou"
+    val base = scratch("lifec_toctou")
     graft.util.Staging.deleteRecursive(base)
     // two unstamped slots on disk, no intents visible yet: writer A (v1)
     // hasn't dropped its intent, writer B (v2) hasn't stamped
@@ -561,7 +561,7 @@ class TableLifecycleSpec extends SparkSpec {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.countfs.impl", classOf[graft.util.CountFs].getName)
     hc.setBoolean("fs.countfs.impl.disable.cache", true)
-    val base = s"/root/repo/target/scratch/lifec_appmemo"
+    val base = scratch("lifec_appmemo")
     graft.util.Staging.deleteRecursive(base)
     val dataDir = s"countfs:$base/data"
     val manifestDir = s"$base/manifest"
@@ -630,5 +630,31 @@ class TableLifecycleSpec extends SparkSpec {
     val head = VersionLog.readVersion(spark, vdir, 3)
     assert(head.count() == 8000 && head.filter(col("tag") === "HI").count() == 30
       && head.filter(col("tag") === "LO").count() == 30)
+  }
+
+  test("a head data file deleted outside the log: DESCRIBE DETAIL and OPTIMIZE fail loudly, naming it") {
+    // no silent drops: a live file the log references but the filesystem
+    // lost must never count as 0 bytes (DETAIL) or be skipped (OPTIMIZE)
+    val base = freshTable("lostfile", nFiles = 4)
+    val vdir = s"$base/versions"
+    VersionLog.commitSnapshot(spark, vdir,
+      FileSkipping.buildManifest(spark, s"$base/data", "k")) // v0
+    val reg = Map("t" -> graft.io.TableSql.TableRef(s"$base/data", s"$base/manifest", "k",
+      versionsDir = Some(vdir), occ = true))
+    assert(graft.io.TableSql(spark, reg, "DESCRIBE DETAIL t").head()
+      .getAs[Long]("size_bytes") > 0)
+    val lost = VersionLog.manifestAt(spark, vdir, 0).select("file").collect()
+      .map(_.getString(0)).min
+    assert(new java.io.File(new java.net.URI(lost).getPath).delete())
+    val lostPath = new org.apache.hadoop.fs.Path(lost).toUri.getPath
+    val detail = intercept[IllegalStateException] {
+      graft.io.TableSql(spark, reg, "DESCRIBE DETAIL t").collect()
+    }
+    assert(detail.getMessage.contains(lostPath), detail.getMessage)
+    val optimize = intercept[IllegalStateException] {
+      graft.io.TableSql(spark, reg, "OPTIMIZE t").collect()
+    }
+    assert(optimize.getMessage.contains(lostPath), optimize.getMessage)
+    assert(VersionLog.head(spark, vdir) == 0, "a failed OPTIMIZE must not commit")
   }
 }

@@ -32,7 +32,7 @@ class VersionLogEdgeSpec extends SparkSpec {
 
   /** 4-file range-sorted table, keys 0..3999 (~1000/file). */
   private def freshTable(name: String): String = {
-    val base = s"/root/repo/target/scratch/vledge_$name"
+    val base = scratch(s"vledge_$name")
     graft.util.Staging.deleteRecursive(base)
     rows(0, 4000).repartitionByRange(4, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")
@@ -43,7 +43,7 @@ class VersionLogEdgeSpec extends SparkSpec {
 
   /** The same table with a PRE-round-10 manifest (no n_keys column). */
   private def freshLegacyTable(name: String): String = {
-    val base = s"/root/repo/target/scratch/vledge_$name"
+    val base = scratch(s"vledge_$name")
     graft.util.Staging.deleteRecursive(base)
     rows(0, 4000).repartitionByRange(4, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")
@@ -182,7 +182,7 @@ class VersionLogEdgeSpec extends SparkSpec {
   }
 
   test("2D snapshot stats (q202 shape): box-pruned reads open strictly fewer files at BOTH versions") {
-    val base = s"/root/repo/target/scratch/vledge_occ2d"
+    val base = scratch("vledge_occ2d")
     graft.util.Staging.deleteRecursive(base)
     import graft.relational.ZOrder
     // 4096 points on a 64x64 grid, z-clustered, zk injective (integer
