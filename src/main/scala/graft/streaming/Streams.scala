@@ -151,7 +151,7 @@ object Streams {
     // re-reads a previous run's rows. The returned frame reads the sink
     // lazily, so deletion happens at the NEXT invocation — by which time
     // the (sequential) caller has consumed the result.
-    val path = s"/root/repo/target/scratch/sink_$name"
+    val path = graft.util.Staging.scratch(s"sink_$name")
     val ckpt = checkpointFor(name)
     graft.util.Staging.deleteRecursive(path)
     graft.util.Staging.deleteRecursive(ckpt)
@@ -247,7 +247,7 @@ object Streams {
   /** Checkpoint path for a drain `name` — one place owns the scratch
     * layout so offline state tooling ([[StateReshard]]) can find the
     * checkpoint a [[drainToTable]]/[[drainToParquet]] run left behind. */
-  def checkpointFor(name: String): String = s"/root/repo/target/scratch/ckpt_$name"
+  def checkpointFor(name: String): String = graft.util.Staging.scratch(s"ckpt_$name")
 
   /** Split the staged late-arrival replay for the re-shard harness
     * (q171): `history` = files 1–2 (what the original-store-count job
@@ -815,7 +815,7 @@ object Streams {
     * that after recovery it does. */
   def drainWithCrashRecovery(mkQuery: () => DataFrame, name: String,
                              outputMode: String, crashAtBatch: Long): DataFrame = {
-    val path = s"/root/repo/target/scratch/sink_$name"
+    val path = graft.util.Staging.scratch(s"sink_$name")
     graft.util.Staging.deleteRecursive(path)
     @volatile var outSchema: org.apache.spark.sql.types.StructType = null
     val spark = drainWithCrashRecoveryInto(mkQuery, name, outputMode, crashAtBatch) {

@@ -99,7 +99,7 @@ object CheckpointVolume {
         val rows = out.count()
         val wall = (System.nanoTime() - t0) / 1e9
         val (zipB, clB, otherB, zipN, clN) =
-          dirStats(new java.io.File(s"/root/repo/target/scratch/ckpt_$name"))
+          dirStats(new java.io.File(graft.streaming.Streams.checkpointFor(name)))
         println(f"""CKPTVOL: {"scenario":"composed_small_state","changelog":$changelog,"rows":$rows,"wall_sec":$wall%.2f,"snapshot_zip_bytes":$zipB,"snapshot_zips":$zipN,"changelog_bytes":$clB,"changelogs":$clN,"meta_bytes":$otherB,"total_state_upload_bytes":${zipB + clB}}""")
       }
 
@@ -116,7 +116,7 @@ object CheckpointVolume {
         val rows = out.count()
         val wall = (System.nanoTime() - t0) / 1e9
         val (zipB, clB, otherB, zipN, clN) =
-          dirStats(new java.io.File(s"/root/repo/target/scratch/ckpt_$name"))
+          dirStats(new java.io.File(graft.streaming.Streams.checkpointFor(name)))
         println(f"""CKPTVOL: {"scenario":"growing_state_dedup","changelog":$changelog,"rows":$rows,"wall_sec":$wall%.2f,"snapshot_zip_bytes":$zipB,"snapshot_zips":$zipN,"changelog_bytes":$clB,"changelogs":$clN,"meta_bytes":$otherB,"total_state_upload_bytes":${zipB + clB}}""")
       }
 
@@ -127,7 +127,9 @@ object CheckpointVolume {
       // crossover above into seconds: with per-op latency, the
       // configuration that ships fewer/smaller objects per commit must
       // win wall-clock, which local dirs could never show (round 6
-      // measured changelog as pure overhead there).
+      // measured changelog as pure overhead there). `slowfs:` has no
+      // AbstractFileSystem binding, so graft.streaming.CheckpointFiles
+      // passes it to Spark's FileSystem-based manager over SlowFs.
       locally {
         val hc = spark.sparkContext.hadoopConfiguration
         hc.set("fs.slowfs.impl", "graft.util.SlowFs")
@@ -135,7 +137,7 @@ object CheckpointVolume {
         hc.setLong("graft.slowfs.latency.ms",
           sys.env.getOrElse("SPARK_GRAFT_SLOWFS_MS", "5").toLong)
         val name = s"ckptvols_$changelog"
-        val localPath = s"/root/repo/target/scratch/ckpt_$name"
+        val localPath = graft.streaming.Streams.checkpointFor(name)
         graft.util.Staging.deleteRecursive(localPath)
         val schema = spark.read.parquet(growDir).schema
         val stream = spark.readStream.schema(schema)

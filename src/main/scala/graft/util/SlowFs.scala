@@ -18,10 +18,12 @@ import org.apache.hadoop.util.Progressable
   *
   * Used by [[graft.tools.CheckpointVolume]] scenario C. Registration:
   * `fs.slowfs.impl = graft.util.SlowFs` (+ `fs.slowfs.impl.disable.cache
-  * = true` so latency changes take effect per run). Structured
-  * Streaming's checkpoint manager falls back to the FileSystem-based
-  * implementation for schemes with no AbstractFileSystem binding, which
-  * is exactly what routes it through this class.
+  * = true` so latency changes take effect per run). The engine's
+  * checkpoint manager, [[graft.streaming.CheckpointFiles]], hands every
+  * scheme but `file:` to Spark's own choice, and Spark falls back to the
+  * FileSystem-based implementation for schemes with no AbstractFileSystem
+  * binding, which is exactly what routes `slowfs:` checkpoints through
+  * this class.
   */
 class SlowFs extends LocalShimFs {
 

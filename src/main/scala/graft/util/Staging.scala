@@ -60,9 +60,15 @@ object Staging {
       parts.foldLeft(1125899906842597L)((acc, x) => acc * 31 + x.hashCode))
   }
 
+  /** Absolute path of `name` under `target/scratch` of the working
+    * directory: the one root of every scratch artifact (derived inputs,
+    * streaming checkpoints and sinks, spec scratch dirs). */
+  def scratch(name: String): String =
+    new java.io.File("target/scratch", name).getAbsolutePath
+
   /** Canonical scratch location for an artifact derived from `sfDir`. */
   def dirFor(name: String, sfDir: String): String =
-    s"/root/repo/target/scratch/${name}_${math.abs(sfDir.hashCode)}"
+    scratch(s"${name}_${math.abs(sfDir.hashCode)}")
 
   /** Byte-level mirror of `src` into `dest` (files + structure; `dest`
     * is created). The restore half of the pristine-fixture pattern: a

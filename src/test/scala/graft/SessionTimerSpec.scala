@@ -23,7 +23,7 @@ class SessionTimerSpec extends SparkSpec {
   /** Stage `batches` as one file per micro-batch (name + mtime ordered),
     * mirroring prepareLateArrivalFiles' layout. */
   private def stageBatches(name: String, batches: Seq[Seq[(Long, java.sql.Timestamp)]]): String = {
-    val dir = s"/root/repo/target/scratch/$name"
+    val dir = scratch(name)
     graft.util.Staging.deleteRecursive(dir)
     val base = Files.createDirectories(Paths.get(dir))
     val mtime0 = System.currentTimeMillis()

@@ -22,9 +22,9 @@ trait SparkSpec extends AnyFunSuite {
 
   /** Absolute path of `name` under `target/scratch` of the working
     * directory (the checkout the suite runs from), so a spec never writes
-    * into a hard-coded checkout. */
-  def scratch(name: String): String =
-    new java.io.File("target/scratch", name).getAbsolutePath
+    * into a hard-coded checkout; the same root as the program's own
+    * scratch artifacts ([[graft.util.Staging.scratch]]). */
+  def scratch(name: String): String = graft.util.Staging.scratch(name)
 
   override protected def withFixture(test: NoArgTest): org.scalatest.Outcome = {
     // snapshot → delta (round-8 review): the audit counter is cumulative

@@ -24,7 +24,7 @@ class StatePartitionsSpec extends SparkSpec {
       assert(spark.conf.get("spark.sql.shuffle.partitions") == prev)
       // the checkpoint's state dir has exactly one subdir per store instance
       val stateDir = new java.io.File(
-        "/root/repo/target/scratch/ckpt_state_parts_probe/state/0")
+        Streams.checkpointFor("state_parts_probe"), "state/0")
       assert(stateDir.isDirectory, s"no state dir at $stateDir")
       val instances = stateDir.listFiles()
         .filter(f => f.isDirectory && f.getName.forall(_.isDigit))

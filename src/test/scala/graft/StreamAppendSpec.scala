@@ -20,7 +20,7 @@ class StreamAppendSpec extends SparkSpec {
       .groupBy(window(col("ts"), "1 day"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("win_start"), col("n"))
-    val ckpt = "/root/repo/target/scratch/ckpt_appendspec"
+    val ckpt = scratch("ckpt_appendspec")
     graft.util.Staging.deleteRecursive(ckpt)
     spark.catalog.dropTempView("appendspec_sink")
     // GraftSession disables RocksDB's per-commit row-count scan (round-15

@@ -108,7 +108,7 @@ class StreamMultimodalSpec extends SparkSpec {
     // must appear as state operators of a single running query
     val d = sf("sf0.001")
     val dir = Streams.prepareLateArrivalFiles(spark, d)
-    val ckpt = "/root/repo/target/scratch/ckpt_composed_spec"
+    val ckpt = scratch("ckpt_composed_spec")
     graft.util.Staging.deleteRecursive(ckpt)
     val q = Streams.composedAdmissionPipeline(spark, dir, 20L)
       .writeStream.format("memory").queryName(s"composed_spec_${System.nanoTime()}")
@@ -157,7 +157,7 @@ class StreamMultimodalSpec extends SparkSpec {
     // views arrive in micro-batch 1, clicks only in micro-batch 2: matches
     // must still be found, proving join state is retained across batches
     // (and pruned only by the watermark, which stays behind every view here)
-    val dir = "/root/repo/target/scratch/ssjoin_spec"
+    val dir = scratch("ssjoin_spec")
     graft.util.Staging.deleteRecursive(dir)
     Files.createDirectories(Paths.get(dir))
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 12:00:00")
@@ -188,7 +188,7 @@ class StreamMultimodalSpec extends SparkSpec {
   test("left-outer stream-stream join emits unmatched views after the watermark seals them") {
     import java.nio.file._
     import java.nio.file.attribute.FileTime
-    val dir = "/root/repo/target/scratch/ssjoin_outer_spec"
+    val dir = scratch("ssjoin_outer_spec")
     graft.util.Staging.deleteRecursive(dir)
     Files.createDirectories(Paths.get(dir))
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 12:00:00")
