@@ -46,6 +46,56 @@ object Bench {
     require(decoded.getWidth == 8 && back.getFormat.getSampleSizeInBits == 16)
   }
 
+  /** The previous committed artifact's comparison columns: per-query
+    * seconds, per-query streaming listener totals (batches, batch ms,
+    * commit ms) and the number of streaming repeats behind those totals. */
+  final case class Prior(
+      seconds: Map[String, Double],
+      stream: Map[String, (Long, Long, Long)],
+      streamRuns: Map[String, Int])
+
+  object Prior {
+    val empty: Prior = Prior(Map.empty, Map.empty, Map.empty)
+
+    /** Reads a prior artifact's text for a run at `master`. Returns
+      * `Left(priorMaster)` when the artifact was taken at another master:
+      * its seconds come from another machine shape, so it is refused. A
+      * malformed artifact throws; it never reads as "no prior". */
+    def parse(json: String, master: String): Either[String, Prior] = {
+      import org.json4s._
+      def bad(what: String): Nothing =
+        throw new IllegalArgumentException(s"malformed bench artifact: $what")
+      def obj(v: JValue, what: String): Map[String, JValue] = v match {
+        case JObject(fs) => fs.toMap
+        case _ => bad(s"$what is not an object")
+      }
+      def num(v: JValue, what: String): Double = v match {
+        case JDouble(d) => d
+        case JInt(i) => i.toDouble
+        case JLong(l) => l.toDouble
+        case _ => bad(s"$what is not a number")
+      }
+      val root = obj(org.json4s.jackson.JsonMethods.parse(json), "the artifact")
+      def field(k: String) = root.getOrElse(k, bad(s"no $k field"))
+      field("master") match {
+        case JString(m) if m != master => Left(m)
+        case JString(_) => Right(Prior(
+          obj(field("queries"), "queries").map { case (q, v) => q -> num(v, s"queries.$q") },
+          obj(field("stream_batches"), "stream_batches").map { case (q, v) =>
+            val b = obj(v, s"stream_batches.$q")
+            def n(k: String) =
+              num(b.getOrElse(k, bad(s"no stream_batches.$q.$k")), s"stream_batches.$q.$k").toLong
+            q -> ((n("batches"), n("batch_ms"), n("commit_ms")))
+          },
+          obj(field("stream_runs"), "stream_runs").map {
+            case (q, JArray(ts)) => q -> ts.length
+            case (q, _) => bad(s"stream_runs.$q is not an array")
+          }))
+        case _ => bad("master is not a string")
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -55,6 +105,33 @@ object Bench {
     // benches on real executor JVMs (serialization + dispatch on the wire).
     // Caveat there: peakMib() below reads only the DRIVER's heap pools.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    // The artifact this run will write, and the PREVIOUS committed run's
+    // per-query seconds from the same slot (round-13 verdict #2: queries
+    // that move >2× round-over-round — historically q44/q63/q68/q102/q132,
+    // a positional session-noise class — get an automatic ISOLATED
+    // min-of-N re-run at the end of the session, recorded beside the
+    // headline number, so attribution lives in the artifact instead of
+    // being re-litigated in prose every round).
+    val masterTag = if (master.startsWith("local-cluster")) "_cluster" else ""
+    val artifactPath = java.nio.file.Paths.get("bench_results").toAbsolutePath
+      .resolve(s"bench_full_${new java.io.File(sfDir).getName}$masterTag.json")
+    // The slot is keyed by sf and cluster-vs-local only, so a local[4] run
+    // finds a local[32] record there: its per-query seconds were taken on
+    // another machine shape, and every comparison against them (movers,
+    // isolated re-runs, stream verdicts) would be false. Such a prior is
+    // refused, named in the artifact, and no comparison is made. Read
+    // before the session starts, so a malformed artifact fails at once.
+    val (prior, priorRefused) =
+      if (!java.nio.file.Files.exists(artifactPath)) (Prior.empty, None)
+      else Prior.parse(java.nio.file.Files.readString(artifactPath), master) match {
+        case Right(p) => (p, None)
+        case Left(priorMaster) =>
+          System.err.println(s"[bench] prior_refused: $artifactPath was taken at master " +
+            s"$priorMaster, this run is $master; no movers, isolated re-runs or stream verdicts")
+          (Prior.empty, Some(priorMaster))
+      }
+    val priorSeconds = prior.seconds
+
     val builder0 = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", cpus)
@@ -80,55 +157,6 @@ object Bench {
     // Derived test inputs (TSV/JSON/small-files/late-arrival staging) are
     // materialized BEFORE the clock starts — queries measure reads.
     SparkEntry.stage(spark, sfDir)
-
-    // The artifact this run will write, and the PREVIOUS committed run's
-    // per-query seconds from the same slot (round-13 verdict #2: queries
-    // that move >2× round-over-round — historically q44/q63/q68/q102/q132,
-    // a positional session-noise class — get an automatic ISOLATED
-    // min-of-N re-run at the end of the session, recorded beside the
-    // headline number, so attribution lives in the artifact instead of
-    // being re-litigated in prose every round).
-    val masterTag = if (master.startsWith("local-cluster")) "_cluster" else ""
-    val artifactPath = java.nio.file.Paths.get("/root/repo/bench_results")
-      .resolve(s"bench_full_${new java.io.File(sfDir).getName}$masterTag.json")
-    val priorSeconds: Map[String, Double] =
-      if (!java.nio.file.Files.exists(artifactPath)) Map.empty
-      else try {
-        val df = spark.read.json(artifactPath.toString).select("queries.*")
-        val row = df.head()
-        df.columns.zipWithIndex.flatMap { case (c, i) =>
-          row.get(i) match {
-            case d: java.lang.Double => Some(c -> d.doubleValue)
-            case l: java.lang.Long => Some(c -> l.toDouble)
-            case _ => None
-          }
-        }.toMap
-      } catch { case _: Throwable => Map.empty }
-    // Prior streaming listener columns (round-14 verdict #4): per-query
-    // micro-batch/commit totals and repeat counts from the previous
-    // committed artifact, so a streaming mover gets a MECHANICAL
-    // noise-vs-regression verdict — jitter moves the wall with flat
-    // per-run batch/commit work, a plan regression moves the work too.
-    val priorStream: Map[String, (Long, Long, Long)] =
-      if (!java.nio.file.Files.exists(artifactPath)) Map.empty
-      else try {
-        val df = spark.read.json(artifactPath.toString).select("stream_batches.*")
-        val row = df.head()
-        df.columns.zipWithIndex.flatMap { case (c, i) =>
-          Option(row.getAs[org.apache.spark.sql.Row](i)).map { s =>
-            c -> (s.getAs[Long]("batches"), s.getAs[Long]("batch_ms"), s.getAs[Long]("commit_ms"))
-          }
-        }.toMap
-      } catch { case _: Throwable => Map.empty }
-    val priorStreamRuns: Map[String, Int] =
-      if (!java.nio.file.Files.exists(artifactPath)) Map.empty
-      else try {
-        val df = spark.read.json(artifactPath.toString).select("stream_runs.*")
-        val row = df.head()
-        df.columns.zipWithIndex.flatMap { case (c, i) =>
-          Option(row.getSeq[Double](i)).map(ts => c -> ts.length)
-        }.toMap
-      } catch { case _: Throwable => Map.empty }
 
     // Media-codec warm-up (round-8 protocol fix): the FIRST ImageIO /
     // AudioSystem touch in a JVM pays the plugin-registry scan + codec
@@ -335,7 +363,7 @@ object Bench {
       results.collect { case (n, v) if v > 0 && streamingBench.contains(n) &&
         priorSeconds.get(n).exists(p => p > 0 && (v > 2 * p || v * 2 < p)) =>
         val wallRatio = v / priorSeconds(n)
-        val verdict = (streamAgg.asScala.get(n), priorStream.get(n), priorStreamRuns.get(n)) match {
+        val verdict = (streamAgg.asScala.get(n), prior.stream.get(n), prior.streamRuns.get(n)) match {
           case (Some(cur), Some((_, pBatchMs, pCommitMs)), Some(pRuns))
             if pRuns > 0 && streamRuns.getOrElse(n, Nil).nonEmpty =>
             val curRuns = streamRuns(n).size
@@ -389,9 +417,11 @@ object Bench {
     }.mkString("[", ",", "]")
     val streamVerdictJson = streamMoverVerdicts.sortBy(_._1)
       .map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+    val refusedJson = priorRefused.fold("null")(pm =>
+      s"""{"prior_master":${jstr(pm)},"master":${jstr(master)}}""")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val memMib = if (memByQuery.isEmpty) 0L else memByQuery.values.max
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"mem_mib":$memJson,"stream_batches":$sbJson,"stream_runs":$srJson,"q147_stages":$stagesJson,"isolated_s":$isolatedJson,"prior_s":$priorJson,"isolated_skipped":$skippedJson,"session_disturbed":$disturbedJson,"mover_windows":$windowsJson,"session_valid":$sessionValid,"stream_mover_verdicts":$streamVerdictJson,"sf":"$sfDir","master":"$master","peak_heap_mib":$memMib,"protocol":"cold min-of-$repeats (cache cleared per run; streaming queries min-of-5 under a 60s cap), repeats capped at 30s/query, noop-sink forced, inputs pre-staged, per-query peak heap via resettable pool high-water marks (pool-peak SUM across the repeats loop: peaks at different instants and cross-query JVM noise can overstate a query's true concurrent footprint); stream_batches totals are across all repeats, stream_runs lists each repeat's wall seconds; q147_stages is one instrumented attribution run (stage counts force work the lazy plan fuses — its sum exceeds the canonical q147 wall); isolated_s is an end-of-session min-of-$repeats re-run of every batch query whose wall moved >2x vs the previous committed artifact (prior_s), ranked by |log ratio| under a cap of $isolatedCap (overflow named in isolated_skipped, an always-erroring re-run records -1) — session noise vanishes there, a real regression reproduces; session_valid is false when >=3 consecutive batch queries moved >2x SLOWER together (mover_windows carries faster windows too — those impeach the PRIOR session), >=3 movers with >=1s in-session walls ran >2x their own isolated re-run (session_disturbed; sub-second walls are scheduler jitter, not contamination evidence), or any such mover ran >=8x its isolated wall — a contaminated session is flagged in-artifact, not discovered in review; stream_mover_verdicts adjudicates each >2x streaming mover against the prior artifact's listener columns: per-run batch/commit ms moving >1.5x with the wall = regression/improvement, flat = noise"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"mem_mib":$memJson,"stream_batches":$sbJson,"stream_runs":$srJson,"q147_stages":$stagesJson,"isolated_s":$isolatedJson,"prior_s":$priorJson,"isolated_skipped":$skippedJson,"session_disturbed":$disturbedJson,"mover_windows":$windowsJson,"session_valid":$sessionValid,"stream_mover_verdicts":$streamVerdictJson,"prior_refused":$refusedJson,"sf":"$sfDir","master":"$master","peak_heap_mib":$memMib,"protocol":"cold min-of-$repeats (cache cleared per run; streaming queries min-of-5 under a 60s cap), repeats capped at 30s/query, noop-sink forced, inputs pre-staged, per-query peak heap via resettable pool high-water marks (pool-peak SUM across the repeats loop: peaks at different instants and cross-query JVM noise can overstate a query's true concurrent footprint); stream_batches totals are across all repeats, stream_runs lists each repeat's wall seconds; q147_stages is one instrumented attribution run (stage counts force work the lazy plan fuses — its sum exceeds the canonical q147 wall); isolated_s is an end-of-session min-of-$repeats re-run of every batch query whose wall moved >2x vs the previous committed artifact (prior_s), ranked by |log ratio| under a cap of $isolatedCap (overflow named in isolated_skipped, an always-erroring re-run records -1) — session noise vanishes there, a real regression reproduces; session_valid is false when >=3 consecutive batch queries moved >2x SLOWER together (mover_windows carries faster windows too — those impeach the PRIOR session), >=3 movers with >=1s in-session walls ran >2x their own isolated re-run (session_disturbed; sub-second walls are scheduler jitter, not contamination evidence), or any such mover ran >=8x its isolated wall — a contaminated session is flagged in-artifact, not discovered in review; stream_mover_verdicts adjudicates each >2x streaming mover against the prior artifact's listener columns: per-run batch/commit ms moving >1.5x with the wall = regression/improvement, flat = noise; prior_refused names the prior artifact's master when it differs from this run's, and then no prior is used (no movers, isolated re-runs or stream verdicts)"}"""
     println(json)
     // Persist the COMPLETE artifact too: the driver stores only a ~2k tail
     // of stdout, which truncated round 3's per-query seconds map out of

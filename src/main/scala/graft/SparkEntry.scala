@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see `SURVEY.md` §7 at the repo root.
   *
   * Queries and oracles are assembled from per-domain [[QueryPack]]s; each
   * pack documents which SURVEY §2 operators it covers.

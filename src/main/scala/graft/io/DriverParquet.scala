@@ -35,8 +35,8 @@ import scala.jdk.CollectionConverters._
   * (`executeCollect` runs the plan); only the sink moves to the driver.
   * Output layout matches the distributed writer (one `part-*.snappy
   * .parquet` + `_SUCCESS`), and the bytes go through the Hadoop
-  * FileSystem resolved from the session conf, so `slowfs:`/`countfs:`
-  * shims keep modeling/counting the RPCs — with strictly fewer of them
+  * FileSystem resolved from the session conf, so the `countfs:` shim
+  * keeps counting the RPCs — with strictly fewer of them
   * (no `_temporary` dance): create file, write, close, create `_SUCCESS`.
   *
   * READ ([[readSmall]]): `spark.read.parquet(dir)` over a snapshot costs

@@ -277,7 +277,7 @@ object FileSkipping {
     val tmp = new org.apache.hadoop.fs.Path(s"${manifestDir}__rewrite")
     // one file per manifest (≤ ~10⁵ rows) — inherited partitioning wrote
     // dozens of near-empty files, per-file open RTTs for every reader on
-    // an object store (the version log's slowfs lesson, applied here);
+    // an object store (the version log's object-store lesson, applied here);
     // driver-direct since round 15 — see [[graft.io.DriverParquet]]
     DriverParquet.writeSmall(next, tmp.toString)
     val retired = new org.apache.hadoop.fs.Path(s"${manifestDir}__retiring")
@@ -815,7 +815,8 @@ object FileSkipping {
     * have created a record through [[schemaContract]]), so the footer
     * probe below runs once per (log, JVM) instead of once per append —
     * on a 25 ms object store the probe is ~4 RPCs + a Spark job, which
-    * the slowfs bench arm would otherwise pay 25×. A stale entry after a
+    * the 25 ms object-store bench arm would otherwise pay 25× (BASELINE.md
+    * §Round-12: zero-probe OCC validation). A stale entry after a
     * record appears is harmless: the record is checked FIRST. VALIDATED
     * against LOG IDENTITY, never path alone (round-12 advice:
     * scratch/spec/bench flows routinely delete and re-create a log at
@@ -1208,7 +1209,8 @@ object FileSkipping {
             // slot — on an object store that multiplies both the commit's
             // file-commit RPCs and every consumer's per-file open RTTs
             // (the same lesson as the snapshot coalesce; measured by the
-            // ManifestScaleBench cdc arm). Delete feeds are NOT coalesced:
+            // round-13 cdc arm, BASELINE.md §Engine round-13 numbers).
+            // Delete feeds are NOT coalesced:
             // a range delete's feed is O(deleted rows), unbounded.
             .coalesce(1)
             .write.mode("overwrite").parquet(s"$dir/txn-$txnId")

@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Readers over the driver's test corpus (`/root/repo/TESTDATA.md`) and
+/** Readers over the driver's test corpus (`TESTDATA.md` at the repo root) and
   * generic sources mirroring the reference's ingest surface
   * (SURVEY §2.1 S1–S5): parquet, headered CSV, TSV with projection and
   * null markers, JSON.

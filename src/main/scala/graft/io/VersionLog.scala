@@ -238,8 +238,9 @@ object VersionLog {
     // ≤ ~10⁵ rows, and inheriting the parent frame's partitioning wrote
     // 10-30 near-empty files per version — on an object store every
     // reader then pays per-file open RTTs across the whole log window
-    // (ManifestScaleBench slowfs arm: the lag-25 validation read was
-    // dominated by tiny-file opens before this coalesce).
+    // (the round-11 object-store-shaped log arm: the lag-25 validation
+    // read was dominated by tiny-file opens before this coalesce;
+    // BASELINE.md §Round-11: OCC contention + object-store-shaped log).
     // Every row is stamped with the commit's rewrite-only CLASS (false
     // here — content-preserving commits only come through commitRebase),
     // so OCC validators recover per-version classes from the snapshot

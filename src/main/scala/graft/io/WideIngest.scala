@@ -49,7 +49,8 @@ object WideIngest {
         // 32 MB row groups (or whole small files) into one task and idles
         // the rest of the cluster. Splitting at the row-group size took the
         // 1205 × 60,483 canonicalization from 926 s to 156 s on identical
-        // input (local[32] sweep, graft.tools.Scratch).
+        // input (local[32] split-size sweep, BASELINE.md §Full reference
+        // width).
         withConf(spark, "spark.sql.files.maxPartitionBytes", (32L * 1024 * 1024).toString) {
           wide.select(col(keyCol),
               array(genes.map(g => col(g).cast("double")): _*).as("features"))

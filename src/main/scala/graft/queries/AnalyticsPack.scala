@@ -20,8 +20,6 @@ import graft.util.{Parity, Staging}
   */
 object AnalyticsPack extends QueryPack {
 
-  private def scratch(name: String) = s"/root/repo/target/scratch/$name"
-
   /** The q110/q120 score probe: a fixed linear functional of the embedding,
     * so every rank/calibration metric over it is replayable end-to-end. */
   private def scoreCol = ((element_at(col("embedding"), 1).cast("double")
@@ -209,7 +207,7 @@ object AnalyticsPack extends QueryPack {
     // File-count reduction is asserted in AnalyticsSpec (not SQL-visible).
     "q118_compaction" -> { (s, d) =>
       val src = stagedFragmented(s, d)
-      val out = scratch(s"compacted_${math.abs(d.hashCode)}")
+      val out = Staging.scratch(s"compacted_${math.abs(d.hashCode)}")
       val (sized, _) = graft.relational.Scale.repartitionToBytes(
         s.read.parquet(src), 64L * 1024 * 1024)
       sized.write.mode("overwrite").parquet(out)

@@ -7,7 +7,7 @@ import graft.QueryPack
 import graft.io.Tables
 import graft.ml.{DeterministicSplits, Models, Normalization, PipelineStages}
 import graft.matrix.ArrayOps
-import graft.util.{OracleDump, Parity}
+import graft.util.{OracleDump, Parity, Staging}
 import graft.util.Parity._
 
 /** ML pipeline surface (SURVEY §2.9): deterministic seeded splits,
@@ -87,7 +87,7 @@ object MLPack extends QueryPack {
         new org.apache.spark.ml.graft.UpperQuartileNormalizer()
           .setQuantile(0.75).setFeaturesCol("features")))
       val fitted = pipe.fit(li)
-      val dir = s"/root/repo/target/scratch/uq_model_${math.abs(d.hashCode)}"
+      val dir = Staging.scratch(s"uq_model_${math.abs(d.hashCode)}")
       fitted.write.overwrite().save(dir)
       val loaded = org.apache.spark.ml.PipelineModel.load(dir)
       loaded.transform(li).select(col("l_orderkey"), col("l_linenumber"),
@@ -334,7 +334,7 @@ object MLPack extends QueryPack {
           .setLogRatioTrim(0.3).setAbsExprTrim(0.05).setExact(true)
           .setFeaturesCol("features")))
       val fitted = pipe.fit(li)
-      val dir = s"/root/repo/target/scratch/tmm_model_${math.abs(d.hashCode)}"
+      val dir = Staging.scratch(s"tmm_model_${math.abs(d.hashCode)}")
       fitted.write.overwrite().save(dir)
       val loaded = org.apache.spark.ml.PipelineModel.load(dir)
       loaded.transform(li).select(col("l_orderkey"), col("l_linenumber"),

@@ -412,7 +412,7 @@ object ScaleOpsPack extends QueryPack {
     // be gone and every other year intact to the penny.
     "q179_manifest_range_delete" -> { (s, d) =>
       import graft.io.FileSkipping
-      val base = "/root/repo/target/scratch/q179_del"
+      val base = Staging.scratch("q179_del")
       pristineFixture(s, d, base) {
         Tables.orders(s, d)
           .select("o_orderkey", "o_orderdate", "o_totalprice")
@@ -441,7 +441,7 @@ object ScaleOpsPack extends QueryPack {
     // exercised, not replayed) and reads the merged table back; the
     // oracle recomputes the merge set-theoretically over the source.
     "q181_manifest_merge" -> { (s, d) =>
-      val base = "/root/repo/target/scratch/q181_merge"
+      val base = Staging.scratch("q181_merge")
       val orders = stagedOrdersCopy(s, d, base)
       graft.io.FileSkipping.mergeKeyed(s, s"$base/data", s"$base/manifest",
         "o_orderkey", mergeUpdates(orders).unionByName(mergeInserts(orders)))
@@ -460,7 +460,7 @@ object ScaleOpsPack extends QueryPack {
     // COUNT drop and untouched-big-file bytes are ScaleOpsSpec's side.
     "q182_manifest_compaction" -> { (s, d) =>
       import graft.io.FileSkipping
-      val base = "/root/repo/target/scratch/q182_compact"
+      val base = Staging.scratch("q182_compact")
       pristineFixture(s, d, base) {
         Tables.orders(s, d)
           .select("o_orderkey", "o_orderdate", "o_totalprice")
@@ -508,7 +508,7 @@ object ScaleOpsPack extends QueryPack {
     "q184_stream_ingest_table" -> { (s, d) =>
       import graft.io.FileSkipping
       import graft.streaming.Streams
-      val base = "/root/repo/target/scratch/q184_ingest"
+      val base = Staging.scratch("q184_ingest")
       graft.util.Staging.deleteRecursive(base)
       val src = Streams.prepareLateArrivalFiles(s, d)
       Streams.drainWithCrashRecoveryInto(
@@ -537,7 +537,7 @@ object ScaleOpsPack extends QueryPack {
     // both set-theoretically — time travel must be exact, not best-effort.
     "q185_version_travel" -> { (s, d) =>
       import graft.io.{FileSkipping, VersionLog}
-      val base = "/root/repo/target/scratch/q185_versions"
+      val base = Staging.scratch("q185_versions")
       val orders = stagedOrdersCopy(s, d, base)
       val vlog = Some(s"$base/versions")
       VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
@@ -561,7 +561,7 @@ object ScaleOpsPack extends QueryPack {
     // O(table). The oracle recomputes all three row classes from the
     // source with the same key arithmetic.
     "q186_merge_cdc_feed" -> { (s, d) =>
-      val base = "/root/repo/target/scratch/q186_cdc"
+      val base = Staging.scratch("q186_cdc")
       val orders = stagedOrdersCopy(s, d, base)
       graft.io.FileSkipping.mergeKeyed(s, s"$base/data", s"$base/manifest",
         "o_orderkey", mergeUpdates(orders).unionByName(mergeInserts(orders)),
@@ -620,7 +620,7 @@ object ScaleOpsPack extends QueryPack {
     // files on DELETE. The oracle recomputes the deleted set from the
     // source; the spec proves survivors ∪ feed == source exactly once.
     "q189_delete_cdc_feed" -> { (s, d) =>
-      val base = "/root/repo/target/scratch/q189_delcdc"
+      val base = Staging.scratch("q189_delcdc")
       stagedOrdersCopy(s, d, base)
       graft.io.FileSkipping.deleteRange(s, s"$base/data", s"$base/manifest",
         "o_orderkey", lit(1000L), lit(4000L), cdcDir = Some(s"$base/cdc"))
@@ -641,7 +641,7 @@ object ScaleOpsPack extends QueryPack {
     // from the base; here it arrives as the mutation's own feed.
     "q190_cdc_view_maintenance" -> { (s, d) =>
       import org.apache.spark.sql.types.DecimalType
-      val base = "/root/repo/target/scratch/q190_cdcview"
+      val base = Staging.scratch("q190_cdcview")
       val orders = stagedOrdersCopy(s, d, base)
       // the maintained view, built once BEFORE the merge — a ~|priorities|-
       // row aggregate, so it takes the driver-direct single-file writer
@@ -690,7 +690,7 @@ object ScaleOpsPack extends QueryPack {
     // the source — under OCC that equals ANY commit order.
     "q192_occ_concurrent_merge" -> { (s, d) =>
       import graft.io.{FileSkipping, VersionLog}
-      val base = "/root/repo/target/scratch/q192_occ"
+      val base = Staging.scratch("q192_occ")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -734,7 +734,7 @@ object ScaleOpsPack extends QueryPack {
     // compaction must be invisible to the penny.
     "q193_occ_compaction_merge" -> { (s, d) =>
       import graft.io.{FileSkipping, VersionLog}
-      val base = "/root/repo/target/scratch/q193_occ_compact"
+      val base = Staging.scratch("q193_occ_compact")
       val orders = Tables.orders(s, d)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
       pristineFixture(s, d, base) {
@@ -790,7 +790,7 @@ object ScaleOpsPack extends QueryPack {
     "q194_versioned_stream_ingest" -> { (s, d) =>
       import graft.io.{FileSkipping, VersionLog}
       import graft.streaming.Streams
-      val base = "/root/repo/target/scratch/q194_vingest"
+      val base = Staging.scratch("q194_vingest")
       graft.util.Staging.deleteRecursive(base)
       val src = Streams.prepareLateArrivalFiles(s, d)
       val vdir = s"$base/versions"
@@ -818,7 +818,7 @@ object ScaleOpsPack extends QueryPack {
     // equals any commit order.
     "q198_occ_range_delete" -> { (s, d) =>
       import graft.io.{FileSkipping, VersionLog}
-      val base = "/root/repo/target/scratch/q198_occdel"
+      val base = Staging.scratch("q198_occdel")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -860,7 +860,7 @@ object ScaleOpsPack extends QueryPack {
     // and the batch was re-fed), and the oracle is still hash-exact.
     "q199_stream_cdc_view" -> { (s, d) =>
       import org.apache.spark.sql.types.DecimalType
-      val base = "/root/repo/target/scratch/q199_streamcdc"
+      val base = Staging.scratch("q199_streamcdc")
       val orders = stagedOrdersCopy(s, d, base)
       // seed view: ~|priorities| rows — driver-direct writer (change-1/8 shape)
       graft.io.DriverParquet.writeSmall(
@@ -926,7 +926,7 @@ object ScaleOpsPack extends QueryPack {
     // goes through the SQL frontend (manifest-decided head view).
     "q195_sql_merge" -> { (s, d) =>
       import graft.io.TableSql
-      val base = "/root/repo/target/scratch/q195_sqlmerge"
+      val base = Staging.scratch("q195_sqlmerge")
       val orders = stagedOrdersCopy(s, d, base)
       val reg = Map("otable" -> TableSql.TableRef(
         s"$base/data", s"$base/manifest", "o_orderkey"))
@@ -948,7 +948,7 @@ object ScaleOpsPack extends QueryPack {
     // physical delete), then the survivor read through the head view.
     "q196_sql_delete_vacuum" -> { (s, d) =>
       import graft.io.TableSql
-      val base = "/root/repo/target/scratch/q196_sqldel"
+      val base = Staging.scratch("q196_sqldel")
       pristineFixture(s, d, base) {
         Tables.orders(s, d)
           .select("o_orderkey", "o_orderdate", "o_totalprice")
@@ -978,7 +978,7 @@ object ScaleOpsPack extends QueryPack {
     // bit-exactly on the v0 side.
     "q197_sql_time_travel" -> { (s, d) =>
       import graft.io.TableSql
-      val base = "/root/repo/target/scratch/q197_sqltravel"
+      val base = Staging.scratch("q197_sqltravel")
       val orders = stagedOrdersCopy(s, d, base)
       graft.io.VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
       val reg = Map("ttable" -> TableSql.TableRef(
@@ -1015,7 +1015,7 @@ object ScaleOpsPack extends QueryPack {
 
     "q200_sql_occ_merge" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q200_sqloccmerge"
+      val base = Staging.scratch("q200_sqloccmerge")
       val orders = stagedOrdersCopy(s, d, base)
       VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
       val reg = Map("omtable" -> TableSql.TableRef(
@@ -1041,7 +1041,7 @@ object ScaleOpsPack extends QueryPack {
     // survivor read through the log-head binding.
     "q201_sql_occ_delete" -> { (s, d) =>
       import graft.io.TableSql
-      val base = "/root/repo/target/scratch/q201_sqloccdel"
+      val base = Staging.scratch("q201_sqloccdel")
       pristineFixture(s, d, base) {
         Tables.orders(s, d)
           .select("o_orderkey", "o_orderdate", "o_totalprice")
@@ -1081,7 +1081,7 @@ object ScaleOpsPack extends QueryPack {
     // the probe actually opened a strict subset of the snapshot's files.
     "q202_occ_2d_travel" -> { (s, d) =>
       import graft.io.{FileSkipping, VersionLog}
-      val base = "/root/repo/target/scratch/q202_occ2d"
+      val base = Staging.scratch("q202_occ2d")
       val src = Tables.orders(s, d).select(
         col("o_orderkey"),
         pmod(Parity.keyHash(col("o_orderkey")), lit(256L)).as("x"),
@@ -1125,7 +1125,7 @@ object ScaleOpsPack extends QueryPack {
     // marker gate would break the multiset arithmetic to the penny.
     "q203_occ_feed_replay" -> { (s, d) =>
       import graft.io.{FileSkipping, VersionLog}
-      val base = "/root/repo/target/scratch/q203_occfeed"
+      val base = Staging.scratch("q203_occfeed")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -1165,7 +1165,7 @@ object ScaleOpsPack extends QueryPack {
     // of the contract and the record's propagation through compaction.
     "q204_occ_schema_evolution" -> { (s, d) =>
       import graft.io.{FileSkipping, VersionLog}
-      val base = "/root/repo/target/scratch/q204_schevo"
+      val base = Staging.scratch("q204_schevo")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -1206,7 +1206,7 @@ object ScaleOpsPack extends QueryPack {
     "q205_occ_feed_incremental" -> { (s, d) =>
       import org.apache.spark.sql.types.DecimalType
       import graft.io.{FileSkipping, VersionLog}
-      val base = "/root/repo/target/scratch/q205_feedinc"
+      val base = Staging.scratch("q205_feedinc")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       val cdc = s"$base/cdc"
@@ -1274,8 +1274,8 @@ object ScaleOpsPack extends QueryPack {
     // inserted rows, identical on both sides.
     "q206_sql_insert" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val basep = "/root/repo/target/scratch/q206_insp"
-      val baseo = "/root/repo/target/scratch/q206_inso"
+      val basep = Staging.scratch("q206_insp")
+      val baseo = Staging.scratch("q206_inso")
       val orders = stagedOrdersCopy(s, d, basep)
       stagedOrdersCopy(s, d, baseo)
       VersionLog.commit(s, s"$baseo/versions", s"$baseo/manifest") // v0
@@ -1318,7 +1318,7 @@ object ScaleOpsPack extends QueryPack {
       import org.apache.spark.sql.types._
       import graft.io.{FileSkipping, VersionLog}
       import graft.streaming.Streams
-      val base = "/root/repo/target/scratch/q207_occingest"
+      val base = Staging.scratch("q207_occingest")
       graft.util.Staging.deleteRecursive(base)
       val src = Streams.prepareLateArrivalFiles(s, d)
       val vdir = s"$base/versions"
@@ -1372,7 +1372,7 @@ object ScaleOpsPack extends QueryPack {
     // quartering) so the double arithmetic replays bit-for-bit.
     "q208_sql_alter_add_column" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q208_alter"
+      val base = Staging.scratch("q208_alter")
       val orders = stagedOrdersCopy(s, d, base)
       VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
       val reg = Map("atable" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
@@ -1424,7 +1424,7 @@ object ScaleOpsPack extends QueryPack {
     // aggregate must both equal the plain source oracle.
     "q209_sql_optimize" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q209_optimize"
+      val base = Staging.scratch("q209_optimize")
       stagedOrdersCopy(s, d, base)
       VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
       val reg = Map("octable" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
@@ -1454,7 +1454,7 @@ object ScaleOpsPack extends QueryPack {
     // leaked the deleted range, or clobbered history hash-mismatches.
     "q210_sql_restore" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q210_restore"
+      val base = Staging.scratch("q210_restore")
       val orders = stagedOrdersCopy(s, d, base)
       VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
       val reg = Map("rtable" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
@@ -1494,7 +1494,7 @@ object ScaleOpsPack extends QueryPack {
     // row or mis-bucketed the dims hash-mismatches.
     "q211_sql_zorder" -> { (s, d) =>
       import graft.io.{FileSkipping, TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q211_zorder"
+      val base = Staging.scratch("q211_zorder")
       pristineFixture(s, d, base) {
         Tables.orders(s, d).select(
           col("o_orderkey"),
@@ -1548,7 +1548,7 @@ object ScaleOpsPack extends QueryPack {
     // version as a silently-wrong snapshot.
     "q212_timestamp_travel" -> { (s, d) =>
       import graft.io.{FileSkipping, TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q212_tstravel"
+      val base = Staging.scratch("q212_tstravel")
       val vdir = s"$base/versions"
       val (ts0, ts1, ts2) = (1700000000000L, 1700000100000L, 1700000200000L)
       // the three stamped commits are DETERMINISTIC (explicit _TS_
@@ -1603,7 +1603,7 @@ object ScaleOpsPack extends QueryPack {
     // and the full-table rollup set-theoretically.
     "q213_zorder_3d" -> { (s, d) =>
       import graft.io.{FileSkipping, TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q213_zorder3"
+      val base = Staging.scratch("q213_zorder3")
       pristineFixture(s, d, base) {
         Tables.orders(s, d).select(
           col("o_orderkey"),
@@ -1664,7 +1664,7 @@ object ScaleOpsPack extends QueryPack {
     // hash-mismatches the full-table rollup).
     "q214_optimize_where" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q214_optwhere"
+      val base = Staging.scratch("q214_optwhere")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -1713,7 +1713,7 @@ object ScaleOpsPack extends QueryPack {
     // DESCRIBE that lost folded versions) hash-mismatches.
     "q215_sql_checkpoint" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q215_ckpt"
+      val base = Staging.scratch("q215_ckpt")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -1747,7 +1747,7 @@ object ScaleOpsPack extends QueryPack {
     // v1 / v2 / head replayed set-theoretically by DuckDB.
     "q216_dv_delete" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q216_dv"
+      val base = Staging.scratch("q216_dv")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -1800,7 +1800,7 @@ object ScaleOpsPack extends QueryPack {
     // must agree with the explicit one (asserted in-engine).
     "q217_table_changes" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q217_tc"
+      val base = Staging.scratch("q217_tc")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -1840,7 +1840,7 @@ object ScaleOpsPack extends QueryPack {
     // replay set-theoretically.
     "q218_sql_update" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q218_upd"
+      val base = Staging.scratch("q218_upd")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -1881,7 +1881,7 @@ object ScaleOpsPack extends QueryPack {
     // vs the scattered layout, content oracle-exact at both snapshots.
     "q219_cluster_hilbert" -> { (s, d) =>
       import graft.io.{FileSkipping, TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q219_hilbert"
+      val base = Staging.scratch("q219_hilbert")
       pristineFixture(s, d, base) {
         Tables.orders(s, d).select(
           col("o_orderkey"),
@@ -1938,7 +1938,7 @@ object ScaleOpsPack extends QueryPack {
     // mutation refused) both hash-mismatch.
     "q220_sql_constraints" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q220_cons"
+      val base = Staging.scratch("q220_cons")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -1988,7 +1988,7 @@ object ScaleOpsPack extends QueryPack {
     // reaches the clone. Both heads replay set-theoretically.
     "q221_shallow_clone" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q221_clone"
+      val base = Staging.scratch("q221_clone")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -2028,7 +2028,7 @@ object ScaleOpsPack extends QueryPack {
     // DV'd-file count) are asserted in-engine.
     "q222_describe_detail" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q222_detail"
+      val base = Staging.scratch("q222_detail")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -2076,7 +2076,7 @@ object ScaleOpsPack extends QueryPack {
     // hash-mismatches.
     "q223_drop_column" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q223_dropcol"
+      val base = Staging.scratch("q223_dropcol")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -2115,7 +2115,7 @@ object ScaleOpsPack extends QueryPack {
     // that leaked the corrupted delta) hash-mismatches.
     "q224_idempotent_txn" -> { (s, d) =>
       import graft.io.{FileSkipping, VersionLog}
-      val base = "/root/repo/target/scratch/q224_txn"
+      val base = Staging.scratch("q224_txn")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -2152,7 +2152,7 @@ object ScaleOpsPack extends QueryPack {
     // hash-mismatches.
     "q225_replace_where" -> { (s, d) =>
       import graft.io.{FileSkipping, TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q225_rw"
+      val base = Staging.scratch("q225_rw")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -2212,7 +2212,7 @@ object ScaleOpsPack extends QueryPack {
     // facets exactly.
     "q226_tblproperties" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q226_props"
+      val base = Staging.scratch("q226_props")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
@@ -2262,7 +2262,7 @@ object ScaleOpsPack extends QueryPack {
     // leaked stale row, or a wrong-side alias rewrite hash-mismatches.
     "q227_merge_arms" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
-      val base = "/root/repo/target/scratch/q227_arms"
+      val base = Staging.scratch("q227_arms")
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0

@@ -253,9 +253,9 @@ object SimilarityPack extends QueryPack {
     // candidates re-rank), and every stage (cell argmax, code rounding,
     // dequantized decimal scoring, re-rank) is decimal/IEEE-portable, so
     // the oracle replays the whole composition bit-for-bit with no
-    // tolerance gate. QuantScaleBench measures the composed probe against
-    // both parents (q166's full scan, q67's full-precision IVF) at equal
-    // recall.
+    // tolerance gate. The round-8 sweep measured the composed probe
+    // against both parents (q166's full scan, q67's full-precision IVF)
+    // at equal recall (BASELINE.md §Round-8: quantized-IVF COMPOSED index).
     "q168_quantized_ivf" -> { (s, d) =>
       val base = graft.relational.Scale.fanOut(Tables.embeddings(s, d)
         .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v")))
@@ -346,8 +346,9 @@ object SimilarityPack extends QueryPack {
     // The oracle replays the ENTIRE probe from the dumped centroids —
     // assignment argmax, probe routing, code rounding, dequantized
     // decimal scoring, exact re-rank — bit-for-bit, no tolerance gate
-    // (training quality itself is measured in QuantScaleBench's trained
-    // rows; training correctness is q80's argmin-replay contract).
+    // (training quality was measured by the round-9 sweep, BASELINE.md
+    // §Round-9: TRAINED IVF centroids; training correctness is q80's
+    // argmin-replay contract).
     "q173_trained_ivf" -> { (s, d) =>
       import graft.ml.{Models, PipelineStages}
       val fitDf = Tables.embeddings(s, d).select(col("vec_id"),

@@ -5,14 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryPack
 import graft.io.Tables
+import graft.util.Staging.scratch
 
 /** Sink surface (SURVEY §2.1 S6/S7 + S2 re-read): write → re-read
   * roundtrips must be lossless, proven by oracle-matching the original
   * table. Scratch lives under target/ (not a tracked path).
   */
 object SinkPack extends QueryPack {
-
-  private def scratch(name: String) = s"/root/repo/target/scratch/$name"
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S7+S2 — CSV write (header) → schema'd CSV read; int/string fidelity.

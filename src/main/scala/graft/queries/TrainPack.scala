@@ -148,8 +148,9 @@ object TrainPack extends QueryPack {
     // top-token count is O(|distinct| · |tokens|) per row, the right
     // trade for bounded-length documents: the explode → groupBy(doc,
     // token) alternative shuffles one row per TOKEN with mostly-unique
-    // keys, and the TrainScaleBench sweep measured it at 61 s for 1.6M
-    // docs vs ~6 s for this form. (Pathologically long documents would
+    // keys, and the round-4 training-data sweep measured it at 61 s for
+    // 1.6M docs vs ~6 s for this form (BASELINE.md §Training-data wave-2
+    // scaling). (Pathologically long documents would
     // flip the trade — then chunk first, or restore the keyed agg.)
     // keep derives from the ROUNDED signals so the cut is portable.
     "q97_repetition_filter" -> { (s, d) =>

@@ -42,7 +42,7 @@ object Scale {
   def writeBucketed(df: DataFrame, table: String, buckets: Int, key: String): Unit =
     df.write.mode("overwrite")
       .bucketBy(buckets, key).sortBy(key)
-      .option("path", s"/root/repo/target/scratch/bucketed_$table")
+      .option("path", graft.util.Staging.scratch(s"bucketed_$table"))
       .saveAsTable(table)
 
   def readTable(spark: SparkSession, table: String): DataFrame = spark.table(table)

@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * data by the bucket width (the mega-user's stitch window has one row
   * per bucket, not per event).
   *
-  * Evidence: SkewBench sweeps a planted hot user from 0% to 30% of an
-  * 8M-event table; the plain lead's wall grows 2.29 → 8.02 s with the
+  * Evidence: the round-6 skew sweep planted a hot user at 0% to 30% of
+  * an 8M-event table; the plain lead's wall grows 2.29 → 8.02 s with the
   * hot share while the chunked form stays flat at 3.65–4.14 s — 2.2×
-  * faster at 30% hot, crossover near 10% (round-6 table in BASELINE.md).
+  * faster at 30% hot, crossover near 10% (BASELINE.md §Skew sweep).
   */
 object Skew {
 

@@ -205,7 +205,7 @@ object Similarity {
   /** The RESIDENT form of the quantized index: one row per corpus vector,
     * `(id, __cell, __codes: array<tinyint>, __nv)` — int8 codes plus one
     * double norm, ~1/4.7 the bytes of the full `array<double>` vectors
-    * (QuantScaleBench). Built map-side from a cell-indexed corpus
+    * (BASELINE.md §Quantized-index residency sweep). Built map-side from a cell-indexed corpus
     * ([[indexCells]] output); at 100 TB this is what persists
     * (parquet/cache partitioned by `__cell`), the full-precision vectors
     * stay on cheap storage for the re-rank. */

@@ -25,7 +25,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *
   * Every other scheme gets exactly what `CheckpointFileManager.create`
   * builds without this class: FileContext-based, or FileSystem-based for a
-  * scheme with no AbstractFileSystem binding (`slowfs:`, `countfs:`). The
+  * scheme with no AbstractFileSystem binding (`countfs:`). The
   * FileSystem-based manager stays `file:`-only because it cannot
   * overwrite where `rename` refuses to replace an existing target (HDFS):
   * `renameTempFile(overwriteIfPossible = true)` then keeps the old file

@@ -16,12 +16,13 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * files stay reviewable.
   *
   * Usage: sbt "runMain graft.tools.PlanDump q177_x,q216_y <sfDir> <outDir> <suffix>"
+  * (`outDir` defaults to `plans/r15` under the working directory).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val d = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val outDir = if (args.length > 2) args(2) else "/root/repo/plans/r15"
+    val outDir = if (args.length > 2) args(2) else "plans/r15"
     val suffix = if (args.length > 3) args(3) else "after"
     val spark = graft.core.GraftSession.local(32, "plandump")
     spark.sparkContext.setLogLevel("WARN")

@@ -2,12 +2,12 @@ package graft.util
 
 import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
 
-/** Base for the local FileSystem shims (`slowfs:`/`faultfs:`/`countfs:`/
+/** Base for the specs' local FileSystem shims (`faultfs:`/`countfs:`/
   * `racefs:`): RawLocalFileSystem's LocatedFileStatus path — every
   * `listFiles` / recursive listing — lazy-loads POSIX permissions with
   * `new java.io.File(uri)`, which rejects any non-`file:` scheme. The
   * shims hand back pre-materialized statuses instead (permissions are
-  * irrelevant to latency/fault/count shims). */
+  * irrelevant to fault/count/race shims). */
 class LocalShimFs extends RawLocalFileSystem {
 
   /** `s` with its metadata materialized (no lazy permission probe). */

@@ -145,8 +145,8 @@ class AnalyticsSpec extends SparkSpec {
     SparkEntry.queries("q118_compaction")(spark, d).collect() // runs the rewrite
     def parquetFiles(p: String) =
       new java.io.File(p).listFiles((_, n) => n.endsWith(".parquet")).length
-    val before = parquetFiles(s"/root/repo/target/scratch/events_fragmented_${math.abs(d.hashCode)}")
-    val after = parquetFiles(s"/root/repo/target/scratch/compacted_${math.abs(d.hashCode)}")
+    val before = parquetFiles(scratch(s"events_fragmented_${math.abs(d.hashCode)}"))
+    val after = parquetFiles(scratch(s"compacted_${math.abs(d.hashCode)}"))
     assert(before == 200, s"staged fragmentation expected 200 files, got $before")
     assert(after < before / 10, s"compaction left $after files (from $before)")
   }

@@ -54,7 +54,7 @@ class AnnMaintenanceSpec extends SparkSpec {
 
   test("cell-partitioned persistence round-trips the exact stamp; the guard fires from disk") {
     val (_, cents, cb, indexed, segment) = buildAll(sf("sf0.001"))
-    val p = "/root/repo/target/scratch/annm_stamp"
+    val p = scratch("annm_stamp")
     Similarity.writeCellPartitioned(segment, p)
     val loaded = Similarity.readCellPartitioned(spark, p, segment.schema)
     // rows survive the round trip exactly
@@ -77,8 +77,8 @@ class AnnMaintenanceSpec extends SparkSpec {
 
   test("persisted probe prunes both scans to the probed cell partitions") {
     val (base, cents, cb, indexed, segment) = buildAll(sf("sf0.001"))
-    val segPath = "/root/repo/target/scratch/annm_prune_seg"
-    val idxPath = "/root/repo/target/scratch/annm_prune_idx"
+    val segPath = scratch("annm_prune_seg")
+    val idxPath = scratch("annm_prune_idx")
     Similarity.writeCellPartitioned(segment, segPath)
     Similarity.writeCellPartitioned(indexed, idxPath)
     val segD = Similarity.readCellPartitioned(spark, segPath, segment.schema)
@@ -111,7 +111,7 @@ class AnnMaintenanceSpec extends SparkSpec {
 
   test("compaction rewrites only tombstoned cells; probe == logical delete == rebuild") {
     val (base, cents, cb, indexed, segment) = buildAll(sf("sf0.001"))
-    val segPath = "/root/repo/target/scratch/annm_compact_seg"
+    val segPath = scratch("annm_compact_seg")
     Similarity.writeCellPartitioned(segment, segPath)
     // tombstones concentrated in SOME cells: delete every vector assigned
     // to the two highest cells' worth of ids — derive the set from the
@@ -170,7 +170,7 @@ class AnnMaintenanceSpec extends SparkSpec {
     // exactly 1.0; and a probe at the q168 default (nprobe = 2) measures
     // at least the curve's recorded floor for that rung.
     val (_, cents, _, indexed, _) = buildAll(sf("sf0.001"))
-    val dir = "/root/repo/target/scratch/ann_tuning_spec"
+    val dir = scratch("ann_tuning_spec")
     graft.util.Staging.deleteRecursive(dir)
     Similarity.writeCellPartitioned(indexed, dir)
     val nCells = cents.count().toInt

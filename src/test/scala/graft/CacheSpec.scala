@@ -18,7 +18,7 @@ class CacheSpec extends SparkSpec {
     // other suites share this session: start from a clean slate so the
     // final assertion attributes leaks to THIS pass only
     spark.catalog.clearCache()
-    System.setProperty("graft.oracle.dir", "/root/repo/target/scratch/cache_spec_dumps")
+    System.setProperty("graft.oracle.dir", scratch("cache_spec_dumps"))
     SparkEntry.stage(spark, d)
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.foreach { case (name, fn) =>

@@ -22,7 +22,7 @@ class CloneSpec extends SparkSpec {
       (col("id") % 97).cast("double").as("v"))
 
   private def freshOcc(name: String): String = {
-    val base = s"/root/repo/target/scratch/clone_$name"
+    val base = scratch(s"clone_$name")
     graft.util.Staging.deleteRecursive(base)
     rows(0, 4000).repartitionByRange(8, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")

@@ -27,7 +27,7 @@ class CommitterSpec extends SparkSpec {
     val df = spark.range(0, 16000)
       .select(col("id").as("k"), (col("id") % 7).as("v"))
       .repartition(parts)
-    val base = "/root/repo/target/scratch/committer_spec"
+    val base = scratch("committer_spec")
     graft.util.Staging.deleteRecursive(base)
     def renamesWith(algo: String, sub: String): Long = {
       try {

@@ -26,7 +26,7 @@ class ConstraintSpec extends SparkSpec {
       (col("id") % 97).cast("double").as("v"))
 
   private def freshOcc(name: String): String = {
-    val base = s"/root/repo/target/scratch/cons_$name"
+    val base = scratch(s"cons_$name")
     graft.util.Staging.deleteRecursive(base)
     rows(0, 2000).repartitionByRange(4, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 
 /** A metadata-RPC counting local FileSystem (`countfs:` scheme) — the
   * measurement seam for "this code path is O(1) RPCs, not O(history)"
-  * contracts: delegates to the local FS like [[SlowFs]], counting every
+  * contracts: delegates to the local FS ([[LocalShimFs]]), counting every
   * `getFileStatus` whose path contains [[CountFs.needle]] (`exists()`
   * routes through `getFileStatus`, so marker/token probes land here).
   * Registration: `fs.countfs.impl = graft.util.CountFs` +

@@ -37,7 +37,7 @@ class DeletionVectorSpec extends SparkSpec {
       concat(lit("t"), (col("id") % 7).cast("string")).as("tag"))
 
   private def freshOcc(name: String, n: Long = 4000, nFiles: Int = 8): String = {
-    val base = s"/root/repo/target/scratch/dv_$name"
+    val base = scratch(s"dv_$name")
     graft.util.Staging.deleteRecursive(base)
     rows(0, n).repartitionByRange(nFiles, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")

@@ -20,7 +20,7 @@ class DropColumnSpec extends SparkSpec {
   import graft.io.{FileSkipping, TableSql, VersionLog}
 
   private def freshOcc(name: String): String = {
-    val base = s"/root/repo/target/scratch/dropc_$name"
+    val base = scratch(s"dropc_$name")
     graft.util.Staging.deleteRecursive(base)
     spark.range(0, 2000).select(col("id").as("k"),
         (col("id") % 97).cast("double").as("v"),

@@ -27,7 +27,7 @@ class MergeArmsSpec extends SparkSpec {
       concat(lit("t"), (col("id") % 7).cast("string")).as("tag"))
 
   private def freshOcc(name: String): String = {
-    val base = s"/root/repo/target/scratch/ma_$name"
+    val base = scratch(s"ma_$name")
     graft.util.Staging.deleteRecursive(base)
     rows(0, 4000).repartitionByRange(8, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")

@@ -29,7 +29,7 @@ class NormalizerEstimatorSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
 
   private def tmpDir(name: String): String = {
-    val d = s"/root/repo/target/scratch/mlspec_$name"
+    val d = scratch(s"mlspec_$name")
     graft.util.Staging.deleteRecursive(d)
     d
   }

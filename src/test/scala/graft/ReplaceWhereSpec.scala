@@ -29,7 +29,7 @@ class ReplaceWhereSpec extends SparkSpec {
       concat(lit("t"), (col("id") % 7).cast("string")).as("tag"))
 
   private def freshOcc(name: String): String = {
-    val base = s"/root/repo/target/scratch/rw_$name"
+    val base = scratch(s"rw_$name")
     graft.util.Staging.deleteRecursive(base)
     rows(0, 4000).repartitionByRange(8, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")

@@ -207,7 +207,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("write-path manifest maintenance equals a full rebuild; pruning stays exact") {
     import graft.io.FileSkipping
-    val base = "/root/repo/target/scratch/fskip_incr"
+    val base = scratch("fskip_incr")
     graft.util.Staging.deleteRecursive(base)
     val orders = graft.io.Tables.orders(spark, sf("sf0.001"))
       .select("o_orderkey", "o_orderdate", "o_totalprice")
@@ -248,7 +248,7 @@ class ScaleOpsSpec extends SparkSpec {
     // pre-existing NESTED data file that a top-level diff would have
     // mis-attributed to the append.
     import graft.io.FileSkipping
-    val localBase = "/root/repo/target/scratch/fskip_hadoop"
+    val localBase = scratch("fskip_hadoop")
     graft.util.Staging.deleteRecursive(localBase)
     val base = s"file:$localBase"
     val orders = graft.io.Tables.orders(spark, sf("sf0.001"))
@@ -283,7 +283,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("deleteRange retires covered files unread, rewrites only boundary files, keeps the rest byte-identical") {
     import graft.io.FileSkipping
-    val localBase = "/root/repo/target/scratch/fskip_delete"
+    val localBase = scratch("fskip_delete")
     graft.util.Staging.deleteRecursive(localBase)
     val orders = graft.io.Tables.orders(spark, sf("sf0.01"))
       .select("o_orderkey", "o_orderdate", "o_totalprice")
@@ -335,7 +335,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("mergeKeyed rewrites only range-hit files, inserts beyond-range keys, keeps the rest byte-identical") {
     import graft.io.FileSkipping
-    val localBase = "/root/repo/target/scratch/fskip_merge"
+    val localBase = scratch("fskip_merge")
     graft.util.Staging.deleteRecursive(localBase)
     val orders = graft.io.Tables.orders(spark, sf("sf0.01"))
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -388,7 +388,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("mergeKeyed with no range hits takes the pure-insert path") {
     import graft.io.FileSkipping
-    val localBase = "/root/repo/target/scratch/fskip_merge_ins"
+    val localBase = scratch("fskip_merge_ins")
     graft.util.Staging.deleteRecursive(localBase)
     val orders = graft.io.Tables.orders(spark, sf("sf0.001"))
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -411,7 +411,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("compactSmall folds only sub-threshold files, leaves big files byte-identical, output is range-clustered") {
     import graft.io.FileSkipping
-    val localBase = "/root/repo/target/scratch/fskip_compact"
+    val localBase = scratch("fskip_compact")
     graft.util.Staging.deleteRecursive(localBase)
     val orders = graft.io.Tables.orders(spark, sf("sf0.01"))
       .select("o_orderkey", "o_orderdate", "o_totalprice")
@@ -477,7 +477,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("version log: pinned snapshots replay exactly; vacuum deletes only dead files") {
     import graft.io.{FileSkipping, VersionLog}
-    val localBase = "/root/repo/target/scratch/fskip_versions"
+    val localBase = scratch("fskip_versions")
     graft.util.Staging.deleteRecursive(localBase)
     val orders = graft.io.Tables.orders(spark, sf("sf0.001"))
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -542,7 +542,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("deleteRange keeps null-key rows in rewritten boundary files") {
     import graft.io.FileSkipping
-    val localBase = "/root/repo/target/scratch/fskip_nullkey"
+    val localBase = scratch("fskip_nullkey")
     graft.util.Staging.deleteRecursive(localBase)
     // ~1/997 of keys nulled, scattered through files whose non-null
     // ranges overlap the deleted band
@@ -570,7 +570,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("deleteRange demotes covered-but-null-bearing files to the rewrite path; null rows survive") {
     import graft.io.FileSkipping
-    val localBase = "/root/repo/target/scratch/fskip_nullcovered"
+    val localBase = scratch("fskip_nullcovered")
     graft.util.Staging.deleteRecursive(localBase)
     // file A: non-null keys 1..1000 FULLY inside the deleted range, plus
     // null-key rows the range math cannot see; file B: keys 1200..1400,
@@ -611,7 +611,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("mergeKeyed rejects a duplicate-key delta before touching the table") {
     import graft.io.FileSkipping
-    val localBase = "/root/repo/target/scratch/fskip_dupdelta"
+    val localBase = scratch("fskip_dupdelta")
     graft.util.Staging.deleteRecursive(localBase)
     spark.range(100).select(col("id").as("k"), lit(1.0).as("v"))
       .coalesce(2).write.mode("overwrite").parquet(s"$localBase/data")
@@ -630,7 +630,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("bloom manifest rejects non-integral keys and survives null keys") {
     import graft.io.FileSkipping
-    val localBase = "/root/repo/target/scratch/fskip_bloomkeys"
+    val localBase = scratch("fskip_bloomkeys")
     graft.util.Staging.deleteRecursive(localBase)
     spark.range(500).select(
         when(col("id") % 50 === 0, lit(null).cast("long")).otherwise(col("id")).as("k"),
@@ -653,7 +653,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("version commit claims its slot atomically: a planted claim fails loudly, log unchanged") {
     import graft.io.{FileSkipping, VersionLog}
-    val localBase = "/root/repo/target/scratch/fskip_claim"
+    val localBase = scratch("fskip_claim")
     graft.util.Staging.deleteRecursive(localBase)
     graft.io.Tables.orders(spark, sf("sf0.001"))
       .select("o_orderkey", "o_totalprice").coalesce(2)
@@ -679,7 +679,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("multi-column manifest survives MERGE, delete, and compaction: folded == rebuild, 2D pruning stays exact") {
     import graft.io.FileSkipping
-    val localBase = "/root/repo/target/scratch/fskip_multifold"
+    val localBase = scratch("fskip_multifold")
     graft.util.Staging.deleteRecursive(localBase)
     // k range-sorted into 10 files; x = k/1000 rides along (tight per-file
     // extents, so a 2D manifest has real pruning power on BOTH columns)
@@ -739,7 +739,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("time travel composes with file skipping: a pinned pruned read opens few files and stays exact") {
     import graft.io.{FileSkipping, VersionLog}
-    val localBase = "/root/repo/target/scratch/fskip_prunedversion"
+    val localBase = scratch("fskip_prunedversion")
     graft.util.Staging.deleteRecursive(localBase)
     val src = spark.range(16000).select(col("id").as("k"), (col("id") % 997).cast("double").as("v"))
     src.repartitionByRange(16, col("k")).sortWithinPartitions("k")
@@ -767,7 +767,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("head pointer is a hint: stale, torn, or missing pointers never change the answer") {
     import graft.io.{FileSkipping, VersionLog}
-    val localBase = "/root/repo/target/scratch/fskip_headptr"
+    val localBase = scratch("fskip_headptr")
     graft.util.Staging.deleteRecursive(localBase)
     spark.range(100).select(col("id").as("k"), lit(1.0).as("v"))
       .coalesce(2).write.mode("overwrite").parquet(s"$localBase/data")
@@ -794,7 +794,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("merge CDC feed pairs pre/post images and isolates inserts") {
     import graft.io.FileSkipping
-    val localBase = "/root/repo/target/scratch/fskip_cdc"
+    val localBase = scratch("fskip_cdc")
     graft.util.Staging.deleteRecursive(localBase)
     val orders = graft.io.Tables.orders(spark, sf("sf0.001"))
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -830,7 +830,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("delete CDC feed reconstitutes the source: survivors ∪ feed == table, exactly once") {
     import graft.io.FileSkipping
-    val localBase = "/root/repo/target/scratch/fskip_delcdc"
+    val localBase = scratch("fskip_delcdc")
     graft.util.Staging.deleteRecursive(localBase)
     val orders = graft.io.Tables.orders(spark, sf("sf0.001"))
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -857,7 +857,7 @@ class ScaleOpsSpec extends SparkSpec {
     import graft.io.FileSkipping
     import graft.streaming.Streams
     val d = sf("sf0.001")
-    val localBase = "/root/repo/target/scratch/fskip_ingest"
+    val localBase = scratch("fskip_ingest")
     graft.util.Staging.deleteRecursive(localBase)
     val src = Streams.prepareLateArrivalFiles(spark, d)
     // crash mid-batch-1: slot b1 holds partial-then-replaced output, and
@@ -899,7 +899,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("versioned ingest: pinned snapshots survive later batches; the batch token makes replay a no-op") {
     import graft.io.{FileSkipping, VersionLog}
-    val localBase = "/root/repo/target/scratch/fskip_vingest"
+    val localBase = scratch("fskip_vingest")
     graft.util.Staging.deleteRecursive(localBase)
     val vdir = s"$localBase/versions"
     def batchDf(lo: Long, hi: Long) =
@@ -1002,7 +1002,7 @@ class ScaleOpsSpec extends SparkSpec {
       s"y-only probe opened ${yOnly.inputFiles.length} of $total")
     // contrast: the same table sorted by x ALONE — y extents span the
     // domain in every file, the y probe admits (almost) everything
-    val localBase = "/root/repo/target/scratch/fskip_xsorted"
+    val localBase = scratch("fskip_xsorted")
     graft.util.Staging.deleteRecursive(localBase)
     spark.read.parquet(s"$base/data")
       .repartitionByRange(32, col("x")).sortWithinPartitions("x")

@@ -25,7 +25,7 @@ class SchemaEvolutionSpec extends SparkSpec {
       (col("id") % 997 / 7.0).as("v"))
 
   private def freshOcc(name: String): (String, String) = {
-    val base = s"/root/repo/target/scratch/schevo_$name"
+    val base = scratch(s"schevo_$name")
     graft.util.Staging.deleteRecursive(base)
     rows(0, 4000).repartitionByRange(4, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")
@@ -109,7 +109,7 @@ class SchemaEvolutionSpec extends SparkSpec {
 
   test("OCC stream ingest rejects a divergent micro-batch loudly; the first batch of an empty table defines the schema") {
     import org.apache.spark.sql.types._
-    val base = "/root/repo/target/scratch/schevo_ingest"
+    val base = scratch("schevo_ingest")
     graft.util.Staging.deleteRecursive(base)
     val vdir = s"$base/versions"
     // empty bootstrap (the q207 shape): no files, no record
@@ -171,7 +171,7 @@ class SchemaEvolutionSpec extends SparkSpec {
     // round-12 verdict #1: these three paths previously accepted a
     // divergent frame silently — mixed-schema files whose read depends on
     // footer-sampling order, the exact shape the OCC contract closed
-    val base = "/root/repo/target/scratch/schevo_plain"
+    val base = scratch("schevo_plain")
     graft.util.Staging.deleteRecursive(base)
     rows(0, 2000).repartitionByRange(2, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")
@@ -236,7 +236,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   }
 
   test("versioned ingest enforces the contract through the log and RECORDS the first batch's schema") {
-    val base = "/root/repo/target/scratch/schevo_vingest"
+    val base = scratch("schevo_vingest")
     graft.util.Staging.deleteRecursive(base)
     val vdir = s"$base/versions"
     assert(FileSkipping.ingestBatchVersioned(rows(0, 100), 0L, s"$base/data", "k", vdir) == 0)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,10 +10,29 @@ import graft.relational.Skew
   * (including across empty buckets and at user boundaries), the funnel's
   * two formulations must agree, and AQE's skew-split must actually
   * engage on a planted hot join key at bench-scale thresholds — the
-  * plan shape SkewBench's join arm relies on.
+  * plan shape the round-6 skew sweep's join arm relied on (BASELINE.md
+  * §Skew sweep).
   */
 class SkewSpec extends SparkSpec {
   import spark.implicits._
+
+  /** q127's funnel as a cascade of hash aggregations: three user-keyed
+    * aggregates with map-side partial combine (skew-immune — a hot user's
+    * rows pre-combine inside every map task) at the cost of re-shuffling
+    * the events per stage. The independent reference for q127's chained
+    * per-user windows. */
+  private def funnelByAgg(ev: DataFrame): DataFrame = {
+    val a1 = ev.groupBy("user_id")
+      .agg(min(when(col("event_type") === "view", col("ts"))).as("tv"))
+    val a2 = ev.join(a1, "user_id").groupBy("user_id")
+      .agg(min(col("tv")).as("tv"),
+        min(when(col("event_type") === "click" && col("ts") > col("tv"), col("ts"))).as("tc"))
+    val a3 = ev.join(a2, "user_id").groupBy("user_id")
+      .agg(min(col("tv")).as("tv"), min(col("tc")).as("tc"),
+        min(when(col("event_type") === "purchase" && col("ts") > col("tc"), col("ts"))).as("tp"))
+    a3.agg(count(lit(1)).as("n_users"), count(col("tv")).as("n_view"),
+      count(col("tc")).as("n_click"), count(col("tp")).as("n_purchase"))
+  }
 
   test("chunkedLead equals plain lead across bucket gaps and key bounds") {
     // user 1: rows in days 1, 1, 3 (day-2 gap: the stitch must skip the
@@ -71,12 +91,10 @@ class SkewSpec extends SparkSpec {
   }
 
   test("chunkedLead equals plain lead on the real events table") {
-    val ev = graft.io.Tables.events(spark, sf("sf0.001"))
-      .select("user_id", "ts", "event_id", "event_type")
-    val plain = SkewBench.transitions(SkewBench.plainLead(ev))
-    val chunked = SkewBench.transitions(
-      Skew.chunkedLead(ev, "user_id", "ts", "event_id", "event_type",
-        date_trunc("day", col("ts")), "next_type"))
+    // q136 is the plain lead, q156 the same transition matrix through
+    // Skew.chunkedLead with a day bucket
+    val plain = SparkEntry.queries("q136_transitions")(spark, sf("sf0.001"))
+    val chunked = SparkEntry.queries("q156_transitions_chunked")(spark, sf("sf0.001"))
     assert(plain.exceptAll(chunked).isEmpty && chunked.exceptAll(plain).isEmpty,
       "transition counts diverge between plain and chunked lead")
   }
@@ -84,8 +102,8 @@ class SkewSpec extends SparkSpec {
   test("funnel window and aggregation formulations agree on real events") {
     val ev = graft.io.Tables.events(spark, sf("sf0.001"))
       .select("user_id", "ts", "event_type")
-    val w = SkewBench.funnelByWindow(ev).collect().head
-    val a = SkewBench.funnelByAgg(ev).collect().head
+    val w = SparkEntry.queries("q127_funnel")(spark, sf("sf0.001")).collect().head
+    val a = funnelByAgg(ev).collect().head
     assert(w == a, s"window $w vs agg $a")
   }
 

@@ -10,7 +10,7 @@ class TableSqlSpec extends SparkSpec {
   import graft.io.{FileSkipping, TableSql, VersionLog}
 
   private lazy val reg: Map[String, TableSql.TableRef] = {
-    val base = "/root/repo/target/scratch/tablesql_fixture"
+    val base = scratch("tablesql_fixture")
     graft.util.Staging.deleteRecursive(base)
     spark.range(1000).select(col("id").as("k"), (col("id") % 7).cast("double").as("v"))
       .repartitionByRange(4, col("k")).sortWithinPartitions("k")
@@ -65,7 +65,7 @@ class TableSqlSpec extends SparkSpec {
   }
 
   test("a registered multi-column manifest stays fresh through SQL mutations") {
-    val base = "/root/repo/target/scratch/tablesql_multi"
+    val base = scratch("tablesql_multi")
     graft.util.Staging.deleteRecursive(base)
     spark.range(2000).select(col("id").as("k"), (col("id") / 200).cast("long").as("x"),
         (col("id") % 7).cast("double").as("v"))
@@ -95,7 +95,7 @@ class TableSqlSpec extends SparkSpec {
   }
 
   test("DELETE bounds parse through the SQL grammar: a lower bound containing AND splits correctly") {
-    val base = "/root/repo/target/scratch/tablesql_between"
+    val base = scratch("tablesql_between")
     graft.util.Staging.deleteRecursive(base)
     spark.range(1000).select(col("id").as("k"), (col("id") % 7).cast("double").as("v"))
       .repartitionByRange(4, col("k")).sortWithinPartitions("k")
@@ -149,7 +149,7 @@ class TableSqlSpec extends SparkSpec {
     // round-11 review: the raw substring test bound (and head-read) any
     // registered table whose name merely appeared in the text — an OCC
     // table with an empty log then threw out of an otherwise-valid SELECT
-    val base = "/root/repo/target/scratch/tablesql_litbind"
+    val base = scratch("tablesql_litbind")
     graft.util.Staging.deleteRecursive(base)
     val bindReg = reg ++ Map("emptyocc" -> TableSql.TableRef(
       s"$base/data", s"$base/manifest", "k",
@@ -165,7 +165,7 @@ class TableSqlSpec extends SparkSpec {
   }
 
   test("INSERT INTO: appends through the string on plain and OCC tables; schema mismatch rejected before touching the table") {
-    val base = "/root/repo/target/scratch/tablesql_insert"
+    val base = scratch("tablesql_insert")
     graft.util.Staging.deleteRecursive(base)
     def stage(sub: String): Unit = {
       spark.range(100).select(col("id").as("k"), (col("id") % 7).cast("double").as("v"))
@@ -203,7 +203,7 @@ class TableSqlSpec extends SparkSpec {
   }
 
   test("schema evolution through SQL: evolveSchema tables accept divergent MERGE/INSERT sources; plain tables reject the flag") {
-    val base = "/root/repo/target/scratch/tablesql_evolve"
+    val base = scratch("tablesql_evolve")
     graft.util.Staging.deleteRecursive(base)
     spark.range(400).select(col("id").as("k"), (col("id") % 7).cast("double").as("v"))
       .repartitionByRange(2, col("k")).sortWithinPartitions("k")
@@ -264,7 +264,7 @@ class TableSqlSpec extends SparkSpec {
     assert(r.getLong(1) == 1000)
     // a name appearing ONLY inside a double-quoted literal binds nothing
     // (the empty-log OCC table would throw out of headRead if it bound)
-    val base = "/root/repo/target/scratch/tablesql_dqbind"
+    val base = scratch("tablesql_dqbind")
     graft.util.Staging.deleteRecursive(base)
     val bindReg = reg ++ Map("dqocc" -> TableSql.TableRef(
       s"$base/data", s"$base/manifest", "k",
@@ -291,7 +291,7 @@ class TableSqlSpec extends SparkSpec {
   }
 
   test("OPTIMIZE compacts through the string; DESCRIBE HISTORY surfaces commit classes and needs a version log") {
-    val base = "/root/repo/target/scratch/tablesql_optimize"
+    val base = scratch("tablesql_optimize")
     graft.util.Staging.deleteRecursive(base)
     spark.range(2000).select(col("id").as("k"), (col("id") % 7).cast("double").as("v"))
       .repartitionByRange(8, col("k")).sortWithinPartitions("k")
@@ -333,7 +333,7 @@ class TableSqlSpec extends SparkSpec {
   }
 
   test("ALTER TABLE ADD COLUMN: a schema-only commit — head null-fills, a pinned pre-ALTER version keeps its schema") {
-    val base = "/root/repo/target/scratch/tablesql_alter"
+    val base = scratch("tablesql_alter")
     graft.util.Staging.deleteRecursive(base)
     spark.range(1000).select(col("id").as("k"), (col("id") % 7).cast("double").as("v"))
       .repartitionByRange(4, col("k")).sortWithinPartitions("k")
@@ -394,7 +394,7 @@ class TableSqlSpec extends SparkSpec {
   }
 
   test("TIMESTAMP AS OF: literal masking holds, bad bounds reject, RESTORE TO TIMESTAMP resolves") {
-    val base = "/root/repo/target/scratch/tablesql_tstravel"
+    val base = scratch("tablesql_tstravel")
     graft.util.Staging.deleteRecursive(base)
     spark.range(100).select(col("id").as("k"), lit("a").as("tag"))
       .coalesce(1).write.parquet(s"$base/data")

@@ -17,7 +17,7 @@ class TblPropertiesSpec extends SparkSpec {
   import graft.io.{FileSkipping, TableSql, VersionLog}
 
   private def freshOcc(name: String): (String, Map[String, TableSql.TableRef]) = {
-    val base = s"/root/repo/target/scratch/props_$name"
+    val base = scratch(s"props_$name")
     graft.util.Staging.deleteRecursive(base)
     spark.range(1000).select(col("id").as("k"), (col("id") % 7).cast("double").as("v"))
       .repartitionByRange(4, col("k")).sortWithinPartitions("k")

@@ -24,7 +24,7 @@ class TxnIdempotenceSpec extends SparkSpec {
       (col("id") % 97).cast("double").as("v"))
 
   private def freshOcc(name: String): String = {
-    val base = s"/root/repo/target/scratch/txn_$name"
+    val base = scratch(s"txn_$name")
     graft.util.Staging.deleteRecursive(base)
     rows(0, 2000).repartitionByRange(4, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")

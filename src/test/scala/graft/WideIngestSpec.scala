@@ -8,13 +8,14 @@ import graft.ml.Normalization
   * the reference's native file shape (one column per gene) into the array
   * layout, with gene names preserved positionally as a sidecar. Values,
   * ordering, name-driven masks, and a downstream estimator are all checked;
-  * [[WideBench]] runs the same path at the full 60,483 width.
+  * the same path ran at the full 60,483 width in round 3 (BASELINE.md
+  * §Full reference width).
   */
 class WideIngestSpec extends SparkSpec {
 
   private val n = 40
   private val width = 300
-  private val base = "/root/repo/target/scratch/wide_ingest_spec"
+  private val base = scratch("wide_ingest_spec")
 
   private lazy val staged: Unit = {
     WideIngest.writeWideSynthetic(spark, s"$base/wide", n, width)
