@@ -97,7 +97,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", graft.util.Staging.corpus("sf0.1"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)

@@ -28,9 +28,9 @@ object SparkEntry {
     _root_.graft.queries.QualityPack
   )
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query on the sf0.001 corpus; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
+    queries("q01_pricing_summary")(spark, graft.util.Staging.corpus("sf0.001"))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

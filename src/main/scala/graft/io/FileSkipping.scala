@@ -4,13 +4,32 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Manifest-driven FILE-level data skipping — the table-format pattern
-  * (Delta/Iceberg per-file column stats) without a table format: a tiny
-  * manifest table maps each data file to its key min/max, and a reader
-  * consults it to open ONLY the files whose range intersects the
-  * predicate. Complements parquet's row-group skip (ScaleOpsSpec's
-  * z-order measurement) one level up: row groups prune WITHIN an opened
-  * file; the manifest prunes the file OPEN itself — at 100 TB the
-  * difference between listing/footer-reading 10⁵ files and a handful.
+  * (Delta/Iceberg per-file column stats): a tiny manifest maps each data
+  * file to its key min/max, and a reader consults it to open ONLY the
+  * files whose range intersects the predicate. Complements parquet's
+  * row-group skip (ScaleOpsSpec's z-order measurement) one level up: row
+  * groups prune WITHIN an opened file; the manifest prunes the file OPEN
+  * itself — at 100 TB the difference between listing/footer-reading 10⁵
+  * files and a handful.
+  *
+  * Three parts:
+  *
+  *   - READ-ONLY flat-manifest readers ([[prunedRead]],
+  *     [[prunedReadMulti]], [[semiJoinRead]], [[bloomPointRead]]) over a
+  *     manifest a caller built once with `buildManifest*` for a layout
+  *     nothing mutates;
+  *   - ONE write path: every table mutation is an OCC transaction over a
+  *     [[VersionLog]] (pin a version, write to a private
+  *     `dataDir/txn-<id>` slot, rebase-commit) — a single writer with no
+  *     racer is just the case where the rebase finds no intermediate
+  *     commit. Retired files stay on disk for older snapshots until
+  *     [[VersionLog.vacuum]]; every snapshot's extra `min_<c>`/`max_<c>`
+  *     stat columns are recomputed for the replacement files each verb
+  *     writes. [[ingestBatchVersioned]] is the one serial-writer verb
+  *     left (it alone reclaims its own orphaned claim);
+  *   - change feeds: per-transaction `cdcDir/txn-<id>` slots, visible to
+  *     consumers only once stamped `_COMMITTED_v<N>`
+  *     ([[readCommittedFeeds]] and friends).
   *
   * Reference scope note: the reference reads whole parquet datasets
   * (`/root/reference/functions/dask_pipeline.py:124-157`) — this is a
@@ -20,185 +39,19 @@ object FileSkipping {
 
   /** One manifest row per data file: (file, min_key, max_key, n_rows,
     * n_keys). Built in one scan via `input_file_name()` — the
-    * bootstrap/repair path; steady-state maintenance is
-    * [[appendWithManifest]], which folds only newly written files in (the
-    * Delta-log shape). `n_keys` is the NON-NULL key count: min/max stats
-    * ignore nulls, so `n_keys < n_rows` is the only signal that a file
-    * holds null-key rows the range math cannot see — [[deleteRange]]
-    * uses it to demote such files from the retire-unread path (round-9
-    * review: a fully-covered file's null rows were deleted unread AND
-    * absent from the CDC feed). */
+    * bootstrap path (a table's v0 snapshot, or a read-only layout's
+    * manifest); after that every commit folds in only its own replacement
+    * files' stats (the Delta-log shape). `n_keys` is the NON-NULL key
+    * count: min/max stats ignore nulls, so `n_keys < n_rows` is the only
+    * signal that a file holds null-key rows the range math cannot see —
+    * [[deleteRangeOcc]] uses it to demote such files from the
+    * retire-unread path (round-9 review: a fully-covered file's null rows
+    * were deleted unread AND absent from the CDC feed). */
   def buildManifest(spark: SparkSession, dataDir: String, keyCol: String): DataFrame =
     spark.read.parquet(dataDir)
       .groupBy(input_file_name().as("file"))
       .agg(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
         count(lit(1)).as("n_rows"), count(col(keyCol)).as("n_keys"))
-
-  /** INCREMENTAL write-path maintenance (round-7 review: the scaladoc
-    * promised it, now it exists): append `df` to `dataDir` and fold ONLY
-    * the newly written files' min/max into the manifest — the base data
-    * is never rescanned, so maintaining the manifest costs one pass over
-    * the delta regardless of table size.
-    *
-    * Listing goes through the Hadoop `FileSystem` API, RECURSIVELY
-    * (round-8 review: the `java.io.File` top-level listing was local-FS
-    * only and missed partitioned subdirectory layouts) — `dataDir` may be
-    * any Hadoop-resolvable path (`file:`, `hdfs:`, `s3a:`, …), which is
-    * where a 100 TB table actually lives. The file set is diffed around
-    * the write: safe ONLY under the single-writer model a manifest
-    * without a transaction log implies — a concurrent writer's files
-    * would be mis-attributed to this append (the real fix at that point
-    * is a transaction log, i.e. a table format). */
-  def appendWithManifest(df: DataFrame, dataDir: String, manifestDir: String,
-                         keyCol: String, versionLog: Option[String] = None): Int = {
-    val spark = df.sparkSession
-    val path = new org.apache.hadoop.fs.Path(dataDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val before = listParquet(fs, path)
-    // the DATA-schema contract, plain-table shape (round-12 verdict #1:
-    // this path previously accepted a divergent frame silently — mixed-
-    // schema files whose read depends on footer-sampling order, the exact
-    // shape the OCC mutators' contract closed): the table's schema is one
-    // existing file's footer (a plain table has no log to record an
-    // evolution in, so divergence ALWAYS rejects — evolve through an OCC
-    // table instead); an EMPTY table is defined by this append.
-    // MEMOIZED per (dataDir, JVM) like the OCC bootstrap memo (round-13
-    // verdict #6: the probe is a footer read + a Spark job on EVERY
-    // append — ~4 RPCs each on a 25 ms object store): a plain table's
-    // schema is immutable by this very contract, so one probe serves
-    // every later append. Identity-validated against the probed FILE
-    // (part-file names carry a per-write UUID): the memo applies only
-    // while its probed file is still in the CURRENT listing — already in
-    // hand, zero extra RPCs — so a deleted/re-created table or a
-    // compaction that rewrote the probed file re-probes instead of
-    // validating against a dead table's schema.
-    before.toSeq.sorted.headOption.foreach { f =>
-      val memo = plainSchemaMemo.get(dataDir)
-      val tableSchema =
-        if (memo != null && before.contains(memo._1)) memo._2
-        else {
-          val sch = spark.read.parquet(f).schema
-          plainSchemaMemo.put(dataDir, (f, sch))
-          sch
-        }
-      schemaContract(tableSchema, df.schema, evolveSchema = false, "appended frame")
-    }
-    df.write.mode("append").parquet(dataDir)
-    val fresh = (listParquet(fs, path) -- before).toSeq.sorted
-    if (fresh.nonEmpty)
-      statsFor(spark, fresh, keyCol).coalesce(1)
-        .write.mode("append").parquet(manifestDir)
-    versionLog.foreach(v => VersionLog.commit(spark, v, manifestDir))
-    fresh.length
-  }
-
-  /** FILE-LEVEL range delete (round-8 verdict: "nothing removes … the
-    * file-skipping manifest") — the "drop a day of data from a 100 TB
-    * table" operation, costed by the manifest, not the table:
-    *
-    *   - files whose [min_key, max_key] lies ENTIRELY inside [lo, hi]
-    *     are deleted WITHOUT BEING READ — the manifest's range math
-    *     retires them, exactly how a table format drops whole files;
-    *   - files that PARTIALLY overlap are rewritten minus the range (new
-    *     files appended beside the old, old files then deleted) — only
-    *     these are ever scanned, so the cost is O(boundary files), not
-    *     O(table);
-    *   - the manifest is rewritten: retired/rewritten files' rows drop
-    *     out, the replacement files' stats fold in (one pass over the
-    *     replacements only). Files outside the range are untouched,
-    *     byte-for-byte (spec-asserted).
-    *
-    * Same single-writer model as the rest of this object; a concurrent
-    * reader between the data-file deletes and the manifest rewrite can
-    * see a retired file vanish — unless `versionLog` is set, which
-    * defers the physical delete to [[VersionLog.vacuum]] and gives
-    * pinned readers snapshot isolation. `cdcDir` appends the deleted
-    * rows as `delete` pre-images (the Delta-CDF delete half) at the
-    * explicit price of reading the otherwise-unread covered files once.
-    * Returns (retired-unread, rewritten). */
-  def deleteRange(spark: SparkSession, dataDir: String, manifestDir: String,
-                  keyCol: String, lo: Column, hi: Column,
-                  versionLog: Option[String] = None,
-                  cdcDir: Option[String] = None,
-                  multiManifest: Option[String] = None): (Int, Int) = {
-    val man = spark.read.parquet(manifestDir)
-    // coalesce(false): an all-null stats row (0-row file from a previous
-    // rewrite) is neither covered nor overlapping. A file may be retired
-    // UNREAD only when its range is covered AND it provably holds no
-    // null-key rows (n_keys == n_rows): min/max ignore nulls, so a
-    // covered file's null rows would otherwise be deleted unread and
-    // missing from the CDC feed — they must SURVIVE, via the rewrite
-    // path. A manifest without the n_keys column (pre-round-10) cannot
-    // prove null-freeness, so every covered file demotes to the rewrite
-    // path — slower, never wrong.
-    val nullFree =
-      if (man.columns.contains("n_keys")) col("n_keys") === col("n_rows")
-      else lit(false)
-    val tagged = man
-      .withColumn("__covered",
-        coalesce(col("min_key") >= lo && col("max_key") <= hi && nullFree, lit(false)))
-      .withColumn("__overlap",
-        coalesce(col("max_key") >= lo && col("min_key") <= hi, lit(false)))
-      .collect() // driver-bounded by design: |files| rows (see prunedRead)
-    val full = tagged.filter(r => r.getBoolean(r.fieldIndex("__covered")))
-      .map(_.getString(0))
-    val partial = tagged.filter(r =>
-        r.getBoolean(r.fieldIndex("__overlap")) && !r.getBoolean(r.fieldIndex("__covered")))
-      .map(_.getString(0))
-    val path = new org.apache.hadoop.fs.Path(dataDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    // change feed: the deleted rows as `delete` pre-images — the CDC
-    // trade is explicit: covered files are normally retired UNREAD, but
-    // a delete feed must read them once (O(deleted rows) — the same
-    // price Delta pays to write CDF files on DELETE). Written while
-    // every victim file is still on disk.
-    cdcDir.foreach { dir =>
-      val victims = full ++ partial
-      if (victims.nonEmpty) {
-        val vdf = spark.read.parquet(victims.toIndexedSeq: _*)
-          .filter(col(keyCol) >= lo && col(keyCol) <= hi)
-        vdf.select(lit("delete").as("op") +: vdf.columns.map(col): _*)
-          .write.mode("append").parquet(dir)
-      }
-    }
-    val fresh =
-      if (partial.isEmpty) Seq.empty[String]
-      else {
-        val before = listParquet(fs, path)
-        // null keys SURVIVE: the bare negation evaluates to NULL for a
-        // null key and would silently drop the row from the rewrite —
-        // lost from the table and absent from the delete feed
-        spark.read.parquet(partial.toIndexedSeq: _*)
-          .filter(col(keyCol).isNull || !(col(keyCol) >= lo && col(keyCol) <= hi))
-          .write.mode("append").parquet(dataDir)
-        (listParquet(fs, path) -- before).toSeq.sorted
-      }
-    // manifest rewrite: surviving rows ∪ replacement stats — staged to a
-    // sibling dir and swapped in, so the lazy `man` read never races its
-    // own overwrite
-    val dropped = (full ++ partial).toSet
-    val kept = man.join(
-      broadcast(spark.createDataset(dropped.toSeq)(
-        org.apache.spark.sql.Encoders.STRING).toDF("file")),
-      Seq("file"), "left_anti")
-    // allowMissingColumns: a pre-n_keys 4-column manifest must union with
-    // the 5-column fresh stats without throwing mid-mutation (round-10
-    // review) — its legacy rows read back null n_keys, which the covered
-    // test above already demotes to the rewrite path
-    swapManifest(spark, manifestDir,
-      if (fresh.isEmpty) kept
-      else kept.unionByName(statsFor(spark, fresh, keyCol), allowMissingColumns = true))
-    multiManifest.foreach(m => foldMultiManifest(spark, m, (full ++ partial).toIndexedSeq, fresh))
-    versionLog.foreach(v => VersionLog.commit(spark, v, manifestDir))
-    // physical delete LAST (round-9 review): a crash before this point
-    // leaves benign orphan files the swapped manifest no longer
-    // references — never a manifest referencing deleted files. In
-    // versioned mode retired files stay on disk for older snapshots;
-    // VersionLog.vacuum is the physical delete.
-    if (versionLog.isEmpty)
-      (full ++ partial).foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
-    (full.length, partial.length)
-  }
 
   /** Files whose [min_key, max_key] can contain at least one key of the
     * single-column `keys` frame — a broadcast range semi-join against
@@ -234,10 +87,10 @@ object FileSkipping {
     * of every pruned read. When the caller's manifest knows ANY file,
     * the schema comes from that single file's footer (O(1)); only an
     * empty manifest falls back to listing `dataDir` — recursively, so
-    * the fallback also works on slot-resident layouts
-    * (post-[[ingestBatch]], pre-[[compactSmall]]) where no parquet file
-    * sits at the top level. The fallback's O(\|files\|) listing is the
-    * degenerate empty-table case, not the common empty-ADMIT case. */
+    * the fallback also works on slot-resident layouts (`txn-<id>` and
+    * `b<id>` slot dirs) where no parquet file sits at the top level. The
+    * fallback's O(\|files\|) listing is the degenerate empty-table case,
+    * not the common empty-ADMIT case. */
   private def emptyLike(spark: SparkSession, dataDir: String,
                         manifest: Option[DataFrame] = None): DataFrame =
     manifest.flatMap(_.select("file").limit(1).collect().headOption)
@@ -247,8 +100,8 @@ object FileSkipping {
         spark.read.option("recursiveFileLookup", "true").parquet(dataDir).limit(0)
     }
 
-  /** Recursive parquet-file listing through the Hadoop FileSystem —
-    * shared by every mutation's before/after diff. */
+  /** Recursive parquet-file listing through the Hadoop FileSystem — how
+    * every verb finds the files it just wrote into its private slot. */
   private def listParquet(fs: org.apache.hadoop.fs.FileSystem,
                           path: org.apache.hadoop.fs.Path): Set[String] =
     if (!fs.exists(path)) Set.empty
@@ -290,23 +143,39 @@ object FileSkipping {
   }
 
   /** Fresh per-file stats for `files` — one pass over the replacements.
-    * `extraCols` appends `min_<c>`/`max_<c>` for each listed column, the
-    * multi-dimension stats a z-ordered OCC table's snapshots carry. The
-    * read is typed from the first file's footer on the driver
+    * `extraCols` appends `min_<c>`/`max_<c>` for each listed column the
+    * files carry (a logically dropped column is absent from files
+    * written after the drop, and gets no stats there), the
+    * multi-dimension stats a z-ordered table's snapshots carry. The read
+    * is typed from the first file's footer on the driver
     * ([[DriverParquet.footerSchema]]) — no schema-inference job. */
   private def statsFor(spark: SparkSession, files: Seq[String], keyCol: String,
                        extraCols: Seq[String] = Nil): DataFrame = {
+    val df = DriverParquet.typedReader(spark, None, files.min).parquet(files: _*)
     val aggs = Seq(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
       count(lit(1)).as("n_rows"), count(col(keyCol)).as("n_keys")) ++
-      extraCols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    DriverParquet.typedReader(spark, None, files.min).parquet(files: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
+      extraCols.filter(df.columns.contains)
+        .flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
+    df.groupBy(input_file_name().as("file")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The extra stat columns a snapshot carries beside the key stats:
+    * every `c` with both `min_<c>` and `max_<c>` (a [[buildManifestStats]]
+    * bootstrap's `extraCols`). Every verb that writes replacement files
+    * recomputes exactly these for them, so the stats a table was
+    * bootstrapped with stay exact through every commit, at every version
+    * ([[prunedReadVersionMulti]]). */
+  private def snapStatCols(snap: DataFrame): Seq[String] = {
+    val cols = snap.columns.toSet
+    snap.columns.toSeq.collect {
+      case c if c.startsWith("min_") && c != "min_key" &&
+          cols(s"max_${c.stripPrefix("min_")}") => c.stripPrefix("min_")
+    }
   }
 
   /** [[buildManifest]] with the same `extraCols` stats [[statsFor]]
-    * appends — the bootstrap for an OCC table whose SNAPSHOTS carry
-    * multi-column extents (see [[mergeKeyedOcc]]'s statCols). */
+    * appends — the bootstrap for a table whose SNAPSHOTS carry
+    * multi-column extents ([[snapStatCols]]). */
   def buildManifestStats(spark: SparkSession, dataDir: String, keyCol: String,
                          extraCols: Seq[String]): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(dataDir)
@@ -494,12 +363,11 @@ object FileSkipping {
   }
 
   /** The change feed of every COMMITTED transaction under `cdcDir` — the
-    * safe consumer read for OCC feeds ([[committedFeedSlots]] decides
-    * what is visible). Single-writer feeds (plain [[mergeKeyed]]
-    * appends at the cdcDir root) have no slots and are read directly.
-    * Reads ALL history — the full-rebuild shape; an incremental
-    * consumer uses [[readCommittedFeedsSince]] and never re-pays old
-    * slots. */
+    * safe consumer read ([[committedFeedSlots]] decides what is visible:
+    * every feed is a set of per-transaction slots, and a slot is read
+    * only once stamped). Reads ALL history — the full-rebuild shape; an
+    * incremental consumer uses [[readCommittedFeedsSince]] and never
+    * re-pays old slots. */
   def readCommittedFeeds(spark: SparkSession, cdcDir: String): DataFrame = {
     val (slots, pending, watermark) = feedState(spark, cdcDir)
     // a vacuumed feed dir can never serve a FULL-history rebuild again —
@@ -648,7 +516,7 @@ object FileSkipping {
       try {
         val v = commitWithCdc(spark, cdcDir, txnId) {
           VersionLog.commitRebase(spark, versionsDir, rv,
-            overlapMap.map(_._1).toIndexedSeq, statsFor(spark, fresh, keyCol),
+            overlapMap.map(_._1).toIndexedSeq, statsFor(spark, fresh, keyCol, snapStatCols(snap)),
             cdcIntent = cdcDir, txn = txn)
         }
         (v, nUpdated, overlapMap.length)
@@ -831,13 +699,6 @@ object FileSkipping {
   private val bootstrapSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
     String, (String, org.apache.spark.sql.types.StructType)]()
 
-  /** [[appendWithManifest]]'s twin of [[bootstrapSchemaMemo]]: the plain
-    * table's contract schema, keyed by dataDir, identity-tagged by the
-    * FILE whose footer was probed (valid only while that file is still
-    * listed — see the append's scaladoc). */
-  private val plainSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
-
   private def logIdentity(spark: SparkSession, versionsDir: String): String =
     try {
       val p = new org.apache.hadoop.fs.Path(s"$versionsDir/v0")
@@ -976,141 +837,42 @@ object FileSkipping {
         "— dedup the delta before merging, as Delta's MERGE INTO would also reject it")
   }
 
-  /** Keyed MERGE (upsert) costed by the manifest, not the table — the
-    * Delta-`MERGE INTO` shape without the table format. Given a small
-    * keyed `delta` (base's exact columns, one row per key):
+  /** Keyed MERGE (upsert) as one OCC transaction — Delta's `MERGE INTO`
+    * upsert shape, costed by the snapshot's manifest, not the table
+    * ([[VersionLog]]'s `begin`/`commitRebase` protocol). Given a small
+    * keyed `delta0` (the table's columns, one row per key):
     *
-    *   - the manifest's range math finds the files whose [min_key,
-    *     max_key] can contain a delta key — ONLY those are ever read. A
-    *     key present in the table is by construction inside some file's
-    *     range, so untouched files provably hold no matched row;
-    *   - matched keys REPLACE their row; delta keys matched by no actual
-    *     row INSERT. Touched-file survivors + replacements + inserts are
-    *     re-written range-sorted on the key (clustering preserved), the
-    *     touched files retired, the manifest folded — cost
-    *     O(touched files + |delta|), never O(table).
-    *
-    * All joins broadcast `delta` (a MERGE delta is small by nature);
-    * `delta` and the touched-file read are CACHED for the duration of
-    * the merge — each feeds several jobs (hit probe, match split,
-    * rewrite, change feed), and without the cache every job would
-    * re-evaluate the caller's delta lineage and re-scan the hit files,
-    * multiplying I/O on exactly the operation whose claim is
-    * O(touched + |delta|). The hit-file probe is a broadcast range
-    * semi-join against the \|files\|-row manifest. For deltas too big
-    * to broadcast, the upgrade path is a
-    * sorted-manifest interval join feeding a shuffle merge — at that
-    * point the operation is a bulk rewrite, not a MERGE. Same
-    * single-writer model as the rest of this object. Returns
-    * (files rewritten, files appended).
-    *
-    * `versionLog`: commit the post-merge manifest as a new snapshot and
-    * leave retired files for [[VersionLog.vacuum]]. `cdcDir`: append a
-    * CHANGE-DATA feed of this merge — `op` ∈ update_preimage /
-    * update_postimage / insert plus the table's columns, the Delta CDF
-    * row shape — costing one extra pass over (touched ∪ delta), never
-    * the table; downstream incremental consumers (a view maintainer,
-    * a replica) read the feed instead of diffing snapshots. `multiManifest`:
-    * fold a [[buildManifestMulti]] manifest through the same mutation
-    * (one stats pass over the replacement files) so a z-ordered table's
-    * 2D skipping stays exact across writes — same option on
-    * [[deleteRange]] and [[compactSmall]]. */
-  def mergeKeyed(spark: SparkSession, dataDir: String, manifestDir: String,
-                 keyCol: String, delta0: DataFrame,
-                 versionLog: Option[String] = None,
-                 cdcDir: Option[String] = None,
-                 multiManifest: Option[String] = None): (Int, Int) = {
-    val man = spark.read.parquet(manifestDir)
-    val delta = delta0.cache()
-    try mergeKeyedCached(spark, dataDir, manifestDir, keyCol, man, delta,
-      versionLog, cdcDir, multiManifest)
-    finally { delta.unpersist(); () }
-  }
-
-  private def mergeKeyedCached(spark: SparkSession, dataDir: String,
-                               manifestDir: String, keyCol: String,
-                               man: DataFrame, delta: DataFrame,
-                               versionLog: Option[String],
-                               cdcDir: Option[String],
-                               multiManifest: Option[String]): (Int, Int) = {
-    requireUniqueKeys(delta, keyCol)
-    val hit = rangeHitFiles(man, delta.select(col(keyCol)))
-    val path = new org.apache.hadoop.fs.Path(dataDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val touched =
-      (if (hit.isEmpty) emptyLike(spark, dataDir, Some(man))
-       else spark.read.parquet(hit.toIndexedSeq: _*)).cache()
-    try {
-    val deltaKeys = delta.select(keyCol)
-    // keys matched by an ACTUAL row (not just a range) replace; the rest insert
-    val matchedKeys = touched.select(keyCol)
-      .join(broadcast(deltaKeys), Seq(keyCol), "left_semi").distinct()
-    val out = touched.join(broadcast(deltaKeys), Seq(keyCol), "left_anti")
-      .unionByName(delta.join(broadcast(matchedKeys), Seq(keyCol), "left_semi"))
-      .unionByName(delta.join(broadcast(matchedKeys), Seq(keyCol), "left_anti"))
-    // change feed BEFORE any file is retired: pre-images come from the
-    // touched files, which the in-place mode deletes below
-    cdcDir.foreach { dir =>
-      touched.join(broadcast(deltaKeys), Seq(keyCol), "left_semi")
-        .select(lit("update_preimage").as("op") +: touched.columns.map(col): _*)
-        .unionByName(delta.join(broadcast(matchedKeys), Seq(keyCol), "left_semi")
-          .select(lit("update_postimage").as("op") +: delta.columns.map(col): _*))
-        .unionByName(delta.join(broadcast(matchedKeys), Seq(keyCol), "left_anti")
-          .select(lit("insert").as("op") +: delta.columns.map(col): _*))
-        // one file per merge's feed append — O(|delta|) rows (see the OCC
-        // twin's coalesce note); q199's per-trigger economics improve too
-        .coalesce(1)
-        .write.mode("append").parquet(dir)
-    }
-    val before = listParquet(fs, path)
-    out.repartitionByRange(math.max(1, hit.length), col(keyCol))
-      .sortWithinPartitions(keyCol)
-      .write.mode("append").parquet(dataDir)
-    val fresh = (listParquet(fs, path) -- before).toSeq.sorted
-    val kept = man.join(
-      broadcast(spark.createDataset(hit.toIndexedSeq)(
-        org.apache.spark.sql.Encoders.STRING).toDF("file")),
-      Seq("file"), "left_anti")
-    // allowMissingColumns: tolerate a pre-n_keys manifest (see deleteRange)
-    swapManifest(spark, manifestDir,
-      if (fresh.isEmpty) kept
-      else kept.unionByName(statsFor(spark, fresh, keyCol), allowMissingColumns = true))
-    multiManifest.foreach(m => foldMultiManifest(spark, m, hit.toIndexedSeq, fresh))
-    versionLog.foreach(v => VersionLog.commit(spark, v, manifestDir))
-    // physical delete LAST — a crash leaves benign orphans, never a
-    // manifest referencing deleted files (see deleteRange)
-    if (versionLog.isEmpty)
-      hit.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
-    (hit.length, fresh.length)
-    } finally { touched.unpersist(); () }
-  }
-
-  /** OCC transactional MERGE — the multi-writer variant of [[mergeKeyed]]
-    * ([[VersionLog]]'s `begin`/`commitRebase` protocol):
-    *
-    *   - the hit probe, survivor split, and rewrite all derive from a
-    *     PINNED version snapshot (`pinned`, or a fresh [[VersionLog.begin]])
-    *     — never the live manifest a concurrent committer may advance;
+    *   - the hit probe (a broadcast range semi-join against the pinned
+    *     snapshot's \|files\| rows), survivor split, and rewrite all
+    *     derive from a PINNED version snapshot (`pinned`, or a fresh
+    *     [[VersionLog.begin]]). A key present in the table is by
+    *     construction inside some file's range, so only the hit files are
+    *     ever read: matched keys REPLACE their row, unmatched delta keys
+    *     INSERT, and survivors + replacements + inserts are re-written
+    *     range-sorted on the key — cost O(touched files + |delta|);
     *   - replacement files land in a PRIVATE slot dir
     *     (`dataDir/txn-<txnId>`), so concurrent writers can never be
-    *     mis-attributed by a listing diff (the race [[appendWithManifest]]
-    *     documents) and a retry of the same txnId overwrites its own slot;
+    *     mis-attributed by a listing diff, and a retry of the same txnId
+    *     overwrites its own slot;
     *   - the commit REBASES (head snapshot − touched + replacements) after
     *     [[VersionLog.commitRebase]]'s file- and key-band-conflict checks:
     *     band-disjoint concurrent merges BOTH land, overlapping ones abort
     *     with `ConcurrentModificationException` and re-run against the new
-    *     head.
+    *     head. The replacement files' stats carry the snapshot's extra
+    *     `min_<c>`/`max_<c>` columns ([[snapStatCols]]), so 2D pruning
+    *     composes with time travel ([[prunedReadVersionMulti]]).
     *
-    * MVCC by construction: touched files are never physically deleted
-    * (concurrent readers + older snapshots keep them; [[VersionLog.vacuum]]
-    * reclaims), and the flat manifest is refreshed with
-    * [[VersionLog.syncLive]] once writers quiesce. Returns the committed
-    * version.
+    * `delta0` and the touched-file read are CACHED for the merge's
+    * duration — each feeds several jobs (hit probe, match split, rewrite,
+    * change feed). MVCC by construction: touched files are never
+    * physically deleted (concurrent readers + older snapshots keep them;
+    * [[VersionLog.vacuum]] reclaims). Returns the committed version.
     *
-    * `cdcDir`: the same change feed as [[mergeKeyed]] (update_preimage /
-    * update_postimage / insert rows), written to a PRIVATE
-    * `cdcDir/txn-<txnId>` slot — concurrent committers must never append
-    * into one directory (their `_temporary` staging dirs collide). The
+    * `cdcDir`: a CHANGE-DATA feed of this merge — `op` ∈
+    * update_preimage / update_postimage / insert plus the table's
+    * columns, the Delta CDF row shape — written to a PRIVATE
+    * `cdcDir/txn-<txnId>` slot (concurrent committers must never append
+    * into one directory: their `_temporary` staging dirs collide). The
     * slot's lifetime is tied to the transaction's fate: an ABORT deletes
     * it (so a consumer can never ingest an aborted transaction's
     * changes — ConcurrencySpec races the abort-with-feed case and proves
@@ -1125,14 +887,6 @@ object FileSkipping {
     * commit would have ABORTED the transaction — what survives rebase is
     * provably untouched by the commits rebased over.
     *
-    * Multi-column manifests UNDER OCC ride the snapshot schema itself
-    * (round-10 stretch): bootstrap the log from a
-    * [[buildManifest]]`(…, extraCols)` manifest whose rows carry
-    * `min_<c>`/`max_<c>` beside the key stats, pass the same columns as
-    * `statCols` so every commit's replacement-file stats carry them too,
-    * and 2D pruning COMPOSES with time travel via
-    * [[prunedReadVersionMulti]] — no derived cache to go stale.
-    *
     * `evolveSchema` is the DATA-schema-evolution switch
     * ([[schemaContract]], round-11 verdict #1): by default a delta whose
     * column set diverges from the table's is rejected loudly here; with
@@ -1143,7 +897,6 @@ object FileSkipping {
                     keyCol: String, delta0: DataFrame, txnId: String,
                     pinned: Option[(Int, DataFrame)] = None,
                     cdcDir: Option[String] = None,
-                    statCols: Seq[String] = Nil,
                     evolveSchema: Boolean = false,
                     txn: Option[(String, Long)] = None): Int = {
     val (rv, snap) = pinned.getOrElse(VersionLog.begin(spark, versionsDir))
@@ -1224,7 +977,7 @@ object FileSkipping {
         val fresh = listParquet(fs, slotPath).toSeq.sorted
         try commitWithCdc(spark, cdcDir, txnId) {
           VersionLog.commitRebase(spark, versionsDir, rv,
-            hit.toIndexedSeq, statsFor(spark, fresh, keyCol, statCols),
+            hit.toIndexedSeq, statsFor(spark, fresh, keyCol, snapStatCols(snap)),
             schemaJson = evolved.map(_.json), cdcIntent = cdcDir, txn = txn)
         } catch {
           // lost the same-(app,ver) race under the claim: the OTHER
@@ -1438,7 +1191,7 @@ object FileSkipping {
           try {
             val v = commitWithCdc(spark, cdcDir, txnId) {
               VersionLog.commitRebase(spark, versionsDir, rv,
-                victims.toIndexedSeq, statsFor(spark, fresh, keyCol),
+                victims.toIndexedSeq, statsFor(spark, fresh, keyCol, snapStatCols(snap)),
                 cdcIntent = cdcDir, txn = txn)
             }
             (v, nUpd, nDel, nIns)
@@ -1448,11 +1201,14 @@ object FileSkipping {
     } finally { delta.unpersist(); () }
   }
 
-  /** OCC transactional range delete — the multi-writer variant of
-    * [[deleteRange]], completing the OCC mutator family
-    * ([[mergeKeyedOcc]], [[compactSmallOcc]]): the tag math (covered
-    * null-free files retired unread, boundary files rewritten minus the
-    * range) derives from the PINNED snapshot, boundary rewrites land in
+  /** FILE-LEVEL range delete as one OCC transaction — the "drop a day
+    * of data from a 100 TB table" operation, costed by the manifest, not
+    * the table: files whose [min_key, max_key] lies entirely inside
+    * [lo, hi] and that provably hold no null key (`n_keys == n_rows`; a
+    * manifest without `n_keys` proves nothing and demotes every covered
+    * file) are retired WITHOUT BEING READ; partially-overlapping files are
+    * rewritten minus the range, null-key rows surviving. The tag math
+    * derives from the PINNED snapshot, boundary rewrites land in
     * a private `dataDir/txn-<txnId>` slot, and the commit rebases as a
     * CONTENT-CHANGING transaction — its key band is the deleted range's
     * file footprint, so a delete racing a merge that inserted into the
@@ -1515,7 +1271,7 @@ object FileSkipping {
       if (fresh.isEmpty)
         // schema-aligned empty stats frame: a pure retire adds no files
         statsFor(spark, Seq(snap.select("file").head().getString(0)), keyCol).limit(0)
-      else statsFor(spark, fresh, keyCol)
+      else statsFor(spark, fresh, keyCol, snapStatCols(snap))
     try {
       val v = commitWithCdc(spark, cdcDir, txnId) {
         VersionLog.commitRebase(spark, versionsDir, rv,
@@ -1691,66 +1447,15 @@ object FileSkipping {
     } finally { hits.unpersist(); () }
   }
 
-  /** Small-file compaction with manifest fold — the daily maintenance job
-    * of any streaming-ingested table (each micro-batch appends a file;
-    * after a week the listing, footer reads, and task scheduling are
-    * dominated by file COUNT, not bytes). Files under `smallBytes` are
-    * bin-planned from the manifest + listing (driver-bounded: |files|
-    * rows), re-clustered through ONE range exchange on the key — so the
-    * replacement files are keyspace-disjoint and range-sorted, i.e.
-    * compaction IMPROVES pruning rather than degrading it — and written
-    * as ~`ceil(small bytes / targetBytes)` files. Files at or above the
-    * threshold are never read or moved. Same single-writer model.
-    * Returns (files compacted, files written). */
-  def compactSmall(spark: SparkSession, dataDir: String, manifestDir: String,
-                   keyCol: String, smallBytes: Long, targetBytes: Long,
-                   versionLog: Option[String] = None,
-                   multiManifest: Option[String] = None): (Int, Int) = {
-    val path = new org.apache.hadoop.fs.Path(dataDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val lens: Map[String, Long] = listParquet(fs, path).map { f =>
-      f -> fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen
-    }.toMap
-    val small = spark.read.parquet(manifestDir)
-      .select("file").collect().map(_.getString(0))
-      .filter(f => lens.getOrElse(f, Long.MaxValue) < smallBytes).sorted
-    if (small.length < 2) return (0, 0)
-    val totalBytes = small.map(lens).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val before = listParquet(fs, path)
-    spark.read.parquet(small.toIndexedSeq: _*)
-      .repartitionByRange(nOut, col(keyCol))
-      .sortWithinPartitions(keyCol)
-      .write.mode("append").parquet(dataDir)
-    val fresh = (listParquet(fs, path) -- before).toSeq.sorted
-    val man = spark.read.parquet(manifestDir)
-    val kept = man.join(
-      broadcast(spark.createDataset(small.toIndexedSeq)(
-        org.apache.spark.sql.Encoders.STRING).toDF("file")),
-      Seq("file"), "left_anti")
-    // allowMissingColumns: tolerate a pre-n_keys manifest (see deleteRange)
-    swapManifest(spark, manifestDir,
-      if (fresh.isEmpty) kept
-      else kept.unionByName(statsFor(spark, fresh, keyCol), allowMissingColumns = true))
-    multiManifest.foreach(m => foldMultiManifest(spark, m, small.toIndexedSeq, fresh))
-    versionLog.foreach(v => VersionLog.commit(spark, v, manifestDir))
-    // physical delete LAST — a crash leaves benign orphans, never a
-    // manifest referencing deleted files (see deleteRange)
-    if (versionLog.isEmpty)
-      small.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
-    (small.length, fresh.length)
-  }
-
-  /** OCC transactional APPEND — the multi-writer variant of
-    * [[appendWithManifest]], closing the listing-diff race that method
-    * documents ("a concurrent writer's files would be mis-attributed"):
-    * new rows land in a private `dataDir/txn-<txnId>` slot (no listing
-    * diff to race), and the commit rebases with removed = ∅. The append
-    * still participates in the key-band check — two writers
-    * blind-appending overlapping key ranges is exactly the write-write
-    * anomaly the band check exists for (the conservative choice this log
-    * makes everywhere; Delta's WriteSerializable would let both land and
-    * accept the duplicate-key risk). Band-disjoint appends compose.
+  /** APPEND as one OCC transaction: new rows land in a private
+    * `dataDir/txn-<txnId>` slot (no before/after listing diff a
+    * concurrent writer's files could be mis-attributed by), and the
+    * commit rebases with removed = ∅. The append still participates in
+    * the key-band check — two writers blind-appending overlapping key
+    * ranges is exactly the write-write anomaly the band check exists for
+    * (the conservative choice this log makes everywhere; Delta's
+    * WriteSerializable would let both land and accept the duplicate-key
+    * risk). Band-disjoint appends compose.
     *
     * `cdcDir`: the append's change feed — one `op = "insert"` row per
     * appended row in a private `cdcDir/txn-<txnId>` slot, same commit-tied
@@ -1795,7 +1500,8 @@ object FileSkipping {
     }
     try commitWithCdc(spark, cdcDir, txnId) {
       VersionLog.commitRebase(spark, versionsDir, rv,
-        Seq.empty, statsFor(spark, fresh, keyCol), schemaJson = evolved.map(_.json),
+        Seq.empty, statsFor(spark, fresh, keyCol, snapStatCols(snap)),
+        schemaJson = evolved.map(_.json),
         cdcIntent = cdcDir, txn = txn)
     } catch { case a: TxnAlreadyApplied => a.atVersion }
   }
@@ -1910,7 +1616,7 @@ object FileSkipping {
     val added =
       if (fresh.isEmpty)
         statsFor(spark, Seq(snap.select("file").head().getString(0)), keyCol).limit(0)
-      else statsFor(spark, fresh, keyCol)
+      else statsFor(spark, fresh, keyCol, snapStatCols(snap))
     try {
       val v = commitWithCdc(spark, cdcDir, txnId) {
         VersionLog.commitRebase(spark, versionsDir, rv,
@@ -2272,7 +1978,8 @@ object FileSkipping {
     val fs = slotPath.getFileSystem(spark.sessionState.newHadoopConf())
     val fresh = listParquet(fs, slotPath).toSeq.sorted
     val v = VersionLog.commitRebase(spark, versionsDir, rv, files,
-      statsFor(spark, fresh, keyCol, dims), rewriteOnly = true)
+      statsFor(spark, fresh, keyCol, (snapStatCols(snap) ++ dims).distinct),
+      rewriteOnly = true)
     (v, files.length, fresh.length)
   }
 
@@ -2370,10 +2077,10 @@ object FileSkipping {
     // every later batch checks against the log record (one exists() RPC,
     // no footer probe) and a delete-all-emptied table keeps its schema
     // instead of letting the next batch silently re-define it.
+    val snap = VersionLog.manifestAt(spark, versionsDir, h)
     val defines =
       try {
-        schemaContract(
-          dataSchemaAt(spark, versionsDir, h, VersionLog.manifestAt(spark, versionsDir, h)),
+        schemaContract(dataSchemaAt(spark, versionsDir, h, snap),
           batch.schema, evolveSchema = false, s"ingest batch $batchId")
         false
       } catch { case _: UntypedEmptyTable => true }
@@ -2381,16 +2088,19 @@ object FileSkipping {
     batch.write.mode("overwrite").parquet(slot)
     val fresh = listParquet(fs, slotPath).toSeq.sorted
     VersionLog.commitRebase(spark, versionsDir, h,
-      Seq.empty, statsFor(spark, fresh, keyCol),
+      Seq.empty, statsFor(spark, fresh, keyCol, snapStatCols(snap)),
       markers = Seq(s"_BATCH_$batchId"),
       schemaJson = if (defines) Some(batch.schema.json) else None)
   }
 
-  /** OCC transactional small-file compaction — the multi-writer variant
-    * of [[compactSmall]], and the canonical concurrent partner of
-    * [[mergeKeyedOcc]]: in production the daily compactor races live
-    * MERGE writers, and under plain band validation it would abort on
-    * every overlap even though it changes no content. This commits with
+  /** Small-file compaction as one OCC transaction — the daily
+    * maintenance job of any streaming-ingested table (each micro-batch
+    * adds files; after a week listing, footer reads and task scheduling
+    * are dominated by file COUNT, not bytes), and the canonical
+    * concurrent partner of [[mergeKeyedOcc]]: in production the daily
+    * compactor races live MERGE writers, and under plain band validation
+    * it would abort on every overlap even though it changes no content.
+    * This commits with
     * `rewriteOnly = true` ([[VersionLog.commitRebase]]): compaction's
     * key band — which by construction spans the table — participates in
     * NO band check in either direction; only a file conflict (a merge
@@ -2400,8 +2110,10 @@ object FileSkipping {
     *     (sizes from the filesystem — immutable files, so the size of a
     *     pinned file never changes under MVCC);
     *   - replacements land in a private `dataDir/txn-<txnId>` slot,
-    *     range-clustered through one exchange exactly like the
-    *     single-writer path (compaction IMPROVES pruning);
+    *     re-clustered through ONE range exchange on the key into
+    *     ~`ceil(small bytes / targetBytes)` keyspace-disjoint,
+    *     range-sorted files (compaction IMPROVES pruning); files at or
+    *     above the threshold are never read or moved;
     *   - nothing is physically deleted ([[VersionLog.vacuum]] reclaims).
     *
     * Returns (committed version, files compacted, files written); when
@@ -2464,7 +2176,7 @@ object FileSkipping {
     val added =
       if (fresh.isEmpty)
         statsFor(spark, Seq(snap.select("file").head().getString(0)), keyCol).limit(0)
-      else statsFor(spark, fresh, keyCol)
+      else statsFor(spark, fresh, keyCol, snapStatCols(snap))
     val v = VersionLog.commitRebase(spark, versionsDir, rv,
       rewriteMap.map(_._1).toIndexedSeq, added, rewriteOnly = true)
     (v, rewriteMap.length, fresh.length)
@@ -2544,38 +2256,12 @@ object FileSkipping {
     * combination, one level above the row-group stats the z-order
     * queries (q124/q134) already measure. */
   def buildManifestMulti(spark: SparkSession, dataDir: String,
-                         keyCols: Seq[String]): DataFrame =
-    multiStatsOf(spark.read.parquet(dataDir), keyCols)
-
-  private def multiStatsOf(df: DataFrame, keyCols: Seq[String]): DataFrame = {
+                         keyCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "need at least one key column")
     val stats = keyCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    df.groupBy(input_file_name().as("file"))
+    spark.read.parquet(dataDir).groupBy(input_file_name().as("file"))
       .agg(stats.head, stats.tail :+ count(lit(1)).as("n_rows"): _*)
-  }
-
-  /** Fold a [[buildManifestMulti]] manifest through a mutation (round-9
-    * verdict #6: a z-ordered table's 2D manifest went silently stale on
-    * the first MERGE): drop the retired files' rows, recompute every
-    * stat column for the replacement files (one pass over the fresh
-    * files only — the same economics as the primary manifest fold), and
-    * swap. The stat columns are derived from the manifest's own schema
-    * (`min_<c>`/`max_<c>`), so the caller names the manifest once at
-    * build time and mutations maintain whatever it tracks. */
-  private def foldMultiManifest(spark: SparkSession, multiDir: String,
-                                retired: Seq[String], fresh: Seq[String]): Unit = {
-    val man = spark.read.parquet(multiDir)
-    val cols = man.columns.filter(_.startsWith("min_")).map(_.stripPrefix("min_")).toSeq
-    require(cols.nonEmpty,
-      s"$multiDir has no min_<col> stats columns — not a multi-column manifest")
-    val kept = man.join(
-      broadcast(spark.createDataset(retired.toIndexedSeq)(
-        org.apache.spark.sql.Encoders.STRING).toDF("file")),
-      Seq("file"), "left_anti")
-    swapManifest(spark, multiDir,
-      if (fresh.isEmpty) kept
-      else kept.unionByName(multiStatsOf(spark.read.parquet(fresh: _*), cols)))
   }
 
   /** Conjunctive multi-range admit over `min_<c>`/`max_<c>` stats. NULL
@@ -2604,9 +2290,10 @@ object FileSkipping {
 
   /** [[prunedReadMulti]] over a PINNED version's snapshot — the
     * composition the round-10 verdict asked for: when an OCC table's
-    * snapshots carry multi-column stats ([[buildManifestStats]] bootstrap
-    * + [[mergeKeyedOcc]]'s `statCols`), 2D file skipping works at ANY
-    * version, not just the head, with no derived cache to go stale. */
+    * snapshots carry multi-column stats (a [[buildManifestStats]]
+    * bootstrap, carried by every commit — [[snapStatCols]]), 2D file
+    * skipping works at ANY version, not just the head, with no derived
+    * cache to go stale. */
   def prunedReadVersionMulti(spark: SparkSession, versionsDir: String, v: Int,
                              ranges: Seq[(String, Column, Column)]): DataFrame = {
     val man = VersionLog.manifestAt(spark, versionsDir, v)
@@ -2625,45 +2312,7 @@ object FileSkipping {
     else VersionLog.readRowsWithDv(spark, schema, rows)
   }
 
-  /** EXACTLY-ONCE streaming ingest slot — the write path that feeds the
-    * manifest table from a stream (q184). `foreachBatch` delivers
-    * at-least-once, so both the DATA and the MANIFEST land in per-batch
-    * slots written with overwrite: a crash-replayed batch REPLACES its
-    * own partial output (data files AND stats rows) instead of
-    * duplicating it — the whole exactly-once contract, with no
-    * transaction log needed while each batch owns its slot. Stats are
-    * one pass over the slot's committed files (the [[appendWithManifest]]
-    * economics), and the flat layout's before/after-listing race
-    * disappears: the slot is private to its batch id, so a concurrent
-    * writer can never be mis-attributed. Hand the table to batch
-    * maintenance with [[finalizeIngest]]. */
-  def ingestBatch(batch: DataFrame, batchId: Long, dataDir: String,
-                  manifestDir: String, keyCol: String): Unit = {
-    val spark = batch.sparkSession
-    val slot = s"$dataDir/b$batchId"
-    // the DATA-schema contract, stream-shaped (round-12 verdict #1: this
-    // path previously landed a divergent micro-batch's mixed-schema slot
-    // silently): validated against the PREVIOUS batch's slot footer —
-    // foreachBatch delivers batches serially with contiguous ids, so
-    // b(id-1) exists for every batch after the first and one footer read
-    // per micro-batch is the whole cost. Batch 0 (or a replay whose
-    // predecessor's slot is gone) DEFINES the schema; there is no log
-    // here to record an evolution in, so divergence always rejects.
-    val prev = new org.apache.hadoop.fs.Path(s"$dataDir/b${batchId - 1}")
-    val prevFs = prev.getFileSystem(spark.sessionState.newHadoopConf())
-    if (batchId > 0 && prevFs.exists(prev))
-      listParquet(prevFs, prev).toSeq.sorted.headOption.foreach { f =>
-        schemaContract(spark.read.parquet(f).schema, batch.schema,
-          evolveSchema = false, s"ingest batch $batchId")
-      }
-    batch.write.mode("overwrite").parquet(slot)
-    val p = new org.apache.hadoop.fs.Path(slot)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    statsFor(spark, listParquet(fs, p).toSeq.sorted, keyCol).coalesce(1)
-      .write.mode("overwrite").parquet(s"$manifestDir/b$batchId")
-  }
-
-  /** VERSIONED streaming ingest — [[ingestBatch]] composed with the
+  /** VERSIONED streaming ingest — per-batch slots composed with the
     * version log (round-9 verdict #7), so a reader can PIN a snapshot
     * and time-travel ACROSS an active ingest: each data batch lands in
     * its private slot and commits one log version whose manifest is
@@ -2747,25 +2396,12 @@ object FileSkipping {
     val next =
       if (h < 0) stats
       // allowMissingColumns: tolerate a log bootstrapped before a stats
-      // column existed (see deleteRange's legacy-manifest note)
+      // column existed (see deleteRangeOcc's n_keys demotion)
       else VersionLog.manifestAt(spark, versionsDir, h)
         .unionByName(stats, allowMissingColumns = true)
     VersionLog.commitSnapshot(spark, versionsDir, next, Seq(s"_BATCH_$batchId"),
       schemaJson = if (defines) Some(batch.schema.json) else None)
   }
-
-  /** Hand a stream-ingested table over to the batch-maintenance world:
-    * fold the per-batch manifest slots into the flat single-writer
-    * layout every other operation here reads (|files| rows — trivial).
-    * After this, compaction / MERGE / delete / pruned reads treat the
-    * ingested slot files like any other files (their manifest rows carry
-    * absolute paths, so the data may stay in its `b<id>` directories —
-    * typically until [[compactSmall]] folds the micro-batch files
-    * anyway). Run only once the stream is stopped or quiesced: this is
-    * the streaming→batch ownership handoff, not a concurrent operation. */
-  def finalizeIngest(spark: SparkSession, manifestDir: String): Unit =
-    swapManifest(spark, manifestDir,
-      spark.read.option("recursiveFileLookup", "true").parquet(manifestDir))
 
   /** Read only the files whose [min_key, max_key] intersects [lo, hi].
     * The manifest collect is driver-bounded BY DESIGN (|files| rows —

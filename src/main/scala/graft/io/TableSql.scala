@@ -72,37 +72,51 @@ import org.apache.spark.sql.functions._
   * work. Mutations return a one-row metrics frame (the Delta
   * convention); SELECTs return the query result.
   *
-  * Tables registered `occ = true` route mutations through the
-  * MULTI-WRITER transactional path ([[FileSkipping.mergeKeyedOcc]] /
-  * [[FileSkipping.deleteRangeOcc]]) — each statement is one OCC
-  * transaction (fresh pin, private slot, rebase commit, loud
-  * `ConcurrentModificationException` on conflict), its CDC slot tied to
-  * the commit's fate, and SELECTs bind the LOG head (under OCC the log
-  * is the source of truth; the flat manifest dir is a cache).
+  * Every registered table is an OCC table: it names its version log,
+  * every mutation statement is one OCC transaction (fresh pin, private
+  * slot, rebase commit, loud `ConcurrentModificationException` on
+  * conflict — [[FileSkipping.mergeKeyedOcc]] and its siblings) with its
+  * CDC slot tied to the commit's fate, and SELECTs bind the LOG head.
+  * A single writer is just the transaction whose rebase finds no
+  * intermediate commit. Bootstrap a table's log once (v0, e.g.
+  * [[VersionLog.commit]] over a [[FileSkipping.buildManifest]]) before
+  * registering it.
   */
 object TableSql {
 
-  /** Physical layout of a registered table: where the data files, the
-    * range manifest, and (for versioned tables) the version log live,
-    * plus the clustering key every mutation is costed by. `cdcDir` and
-    * `multiManifest` ride along to every mutation statement, so a table
-    * registered once keeps its change feed and its 2D stats maintained
-    * no matter which SQL string mutates it. `occ = true` (requires
-    * `versionsDir`) makes every mutation statement a multi-writer OCC
-    * transaction. `evolveSchema = true` (OCC only — the schema record
-    * lives in the version log's snapshot dirs) opts the table's MERGE
-    * and INSERT statements into DATA-schema evolution
+  /** Physical layout of a registered table: where the data files and
+    * the version log live, plus the clustering key every mutation is
+    * costed by. `cdcDir` rides along to every mutation statement, so a
+    * table registered once keeps its change feed no matter which SQL
+    * string mutates it; the 2D stats a table was bootstrapped with ride
+    * its snapshots the same way. `evolveSchema = true` opts the table's
+    * MERGE and INSERT statements into DATA-schema evolution
     * ([[FileSkipping]]'s `schemaContract`): a statement whose source
     * adds/misses columns evolves the table instead of rejecting —
     * registration-time opt-in, because SQL strings have no place to
-    * carry the flag per statement. */
-  case class TableRef(dataDir: String, manifestDir: String, keyCol: String,
-                      versionsDir: Option[String] = None,
+    * carry the flag per statement. `deletionVectors = true` makes DELETE
+    * merge-on-read. */
+  case class TableRef(dataDir: String, versionsDir: String, keyCol: String,
                       cdcDir: Option[String] = None,
-                      multiManifest: Option[String] = None,
-                      occ: Boolean = false,
                       evolveSchema: Boolean = false,
                       deletionVectors: Boolean = false)
+
+  object TableRef {
+    /** The registration shape `graftbench/src/graftbench/TableWorkload.scala`
+      * still compiles against (a flat manifest dir, an optional log and an
+      * `occ` flag). It exists only for that source: it accepts exactly
+      * `occ = true` with a version log and fails loudly otherwise, and it
+      * goes when that file moves to the six-field form. */
+    def apply(dataDir: String, manifestDir: String, keyCol: String,
+              versionsDir: Option[String], cdcDir: Option[String],
+              occ: Boolean): TableRef = {
+      require(occ, s"table at $dataDir: every table is an OCC table — occ = false " +
+        "names no table shape")
+      TableRef(dataDir, versionsDir.getOrElse(throw new IllegalArgumentException(
+        s"table at $dataDir has no versionsDir — every table needs a version log")),
+        keyCol, cdcDir)
+    }
+  }
 
   private val MergeRe =
     ("""(?is)^\s*MERGE\s+INTO\s+(\w+)\s+USING\s+(\w+)\s+ON\s+""" +
@@ -185,22 +199,10 @@ object TableSql {
         s"MERGE ON must qualify with the table/source names: got $tAlias.$tKey = $srcAlias.$srcKey")
       require(tKey.equalsIgnoreCase(ref.keyCol) && srcKey.equalsIgnoreCase(ref.keyCol),
         s"MERGE ON must equate the table's clustering key '${ref.keyCol}', got $tKey = $srcKey")
-      if (ref.occ) {
-        val v = FileSkipping.mergeKeyedOcc(spark, ref.dataDir, occLog(t, ref),
-          ref.keyCol, spark.table(src), freshTxnId(), cdcDir = ref.cdcDir,
-          evolveSchema = ref.evolveSchema)
-        spark.createDataFrame(Seq(Tuple1(v.toLong))).toDF("committed_version")
-      } else {
-        require(!ref.evolveSchema,
-          s"table '$t' is registered evolveSchema = true but not occ — schema " +
-            "evolution needs the version log's snapshot dirs to carry the record")
-        val (rewritten, appended) = FileSkipping.mergeKeyed(
-          spark, ref.dataDir, ref.manifestDir, ref.keyCol, spark.table(src),
-          versionLog = ref.versionsDir, cdcDir = ref.cdcDir,
-          multiManifest = ref.multiManifest)
-        spark.createDataFrame(Seq((rewritten.toLong, appended.toLong)))
-          .toDF("files_rewritten", "files_appended")
-      }
+      val v = FileSkipping.mergeKeyedOcc(spark, ref.dataDir, ref.versionsDir,
+        ref.keyCol, spark.table(src), freshTxnId(), cdcDir = ref.cdcDir,
+        evolveSchema = ref.evolveSchema)
+      spark.createDataFrame(Seq(Tuple1(v.toLong))).toDF("committed_version")
 
     case MergeGeneralRe(t, src, tAlias, tKey, srcAlias, srcKey, armsText) =>
       // the full Delta MERGE arm surface (conditional UPDATE/DELETE on
@@ -210,16 +212,13 @@ object TableSql {
       // statement's own names (t.x / src.x), rewritten to the joined
       // frame's spelling ([[FileSkipping.MergeArm]]).
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"MERGE with general WHEN arms needs an OCC version log — table '$t' is not " +
-          "registered occ = true (the non-OCC path supports the plain upsert shape only)")
       require(tAlias.equalsIgnoreCase(t) && srcAlias.equalsIgnoreCase(src),
         s"MERGE ON must qualify with the table/source names: got $tAlias.$tKey = $srcAlias.$srcKey")
       require(tKey.equalsIgnoreCase(ref.keyCol) && srcKey.equalsIgnoreCase(ref.keyCol),
         s"MERGE ON must equate the table's clustering key '${ref.keyCol}', got $tKey = $srcKey")
       val arms = parseMergeArms(spark, armsText, t, src)
       val (v, nUpd, nDel, nIns) = FileSkipping.mergeArmsOcc(spark, ref.dataDir,
-        occLog(t, ref), ref.keyCol, spark.table(src), arms, freshTxnId(),
+        ref.versionsDir, ref.keyCol, spark.table(src), arms, freshTxnId(),
         cdcDir = ref.cdcDir)
       spark.createDataFrame(Seq((v.toLong, nUpd, nDel, nIns)))
         .toDF("committed_version", "rows_updated", "rows_deleted", "rows_inserted")
@@ -229,43 +228,30 @@ object TableSql {
       require(key.equalsIgnoreCase(ref.keyCol),
         s"DELETE range must be on the table's clustering key '${ref.keyCol}', got '$key'")
       val (lo, hi) = parseBetween(spark, key, betweenClause)
-      if (ref.occ && ref.deletionVectors) {
+      if (ref.deletionVectors) {
         // merge-on-read: record deleted positions in a sidecar instead of
         // rewriting files (the Delta deletion-vector shape — registration
         // opts the table in, like Delta's enableDeletionVectors property)
         val (v, rows, files) = FileSkipping.deleteRangeDvOcc(spark,
-          ref.dataDir, occLog(t, ref), ref.keyCol, lo, hi, freshTxnId(),
+          ref.dataDir, ref.versionsDir, ref.keyCol, lo, hi, freshTxnId(),
           cdcDir = ref.cdcDir)
         spark.createDataFrame(Seq((v.toLong, rows, files.toLong)))
           .toDF("committed_version", "rows_deleted", "files_vectored")
-      } else if (ref.occ) {
+      } else {
         val (v, retired, rewritten) = FileSkipping.deleteRangeOcc(spark,
-          ref.dataDir, occLog(t, ref), ref.keyCol, lo, hi, freshTxnId(),
+          ref.dataDir, ref.versionsDir, ref.keyCol, lo, hi, freshTxnId(),
           cdcDir = ref.cdcDir)
         spark.createDataFrame(Seq((v.toLong, retired.toLong, rewritten.toLong)))
           .toDF("committed_version", "files_retired", "files_rewritten")
-      } else {
-        require(!ref.deletionVectors,
-          s"table '$t' is registered deletionVectors = true but not occ — " +
-            "DV commits need the version log's snapshot rows to carry the sidecar pointer")
-        val (retired, rewritten) = FileSkipping.deleteRange(
-          spark, ref.dataDir, ref.manifestDir, ref.keyCol, lo, hi,
-          versionLog = ref.versionsDir, cdcDir = ref.cdcDir,
-          multiManifest = ref.multiManifest)
-        spark.createDataFrame(Seq((retired.toLong, rewritten.toLong)))
-          .toDF("files_retired", "files_rewritten")
       }
 
     case UpdateRe(t, setClause, key, betweenClause) =>
       // the row-level mutation between MERGE and DELETE: in-range rows
       // get the SET assignments, out-of-range rows in overlapping files
-      // ride along byte-identical, untouched files never read. OCC-only:
-      // the non-OCC world expresses this as MERGE. The clustering key is
-      // not assignable (re-keying moves rows across the range layout).
+      // ride along byte-identical, untouched files never read. The
+      // clustering key is not assignable (re-keying moves rows across the
+      // range layout).
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"UPDATE needs an OCC version log to commit through — table '$t' is not " +
-          "registered occ = true (express the mutation as MERGE INTO instead)")
       require(key.equalsIgnoreCase(ref.keyCol),
         s"UPDATE range must be on the table's clustering key '${ref.keyCol}', got '$key'")
       val (lo, hi) = parseBetween(spark, key, betweenClause)
@@ -281,7 +267,7 @@ object TableSql {
         eq._1 -> expr(eq._2)
       }
       val (v, rows, files) = FileSkipping.updateRangeOcc(spark, ref.dataDir,
-        occLog(t, ref), ref.keyCol, lo, hi, assignments, freshTxnId(),
+        ref.versionsDir, ref.keyCol, lo, hi, assignments, freshTxnId(),
         cdcDir = ref.cdcDir)
       spark.createDataFrame(Seq((v.toLong, rows, files.toLong)))
         .toDF("committed_version", "rows_updated", "files_rewritten")
@@ -292,9 +278,8 @@ object TableSql {
       // DRY RUN convention returns paths; counts keep the result frame
       // stable for tooling, and the engine API returns the path lists)
       val ref = lookup(registry, t)
-      val vdir = ref.versionsDir.getOrElse(
-        throw new IllegalArgumentException(s"table '$t' has no version log — nothing to VACUUM"))
-      val (files, dvs, versions) = VersionLog.vacuumDryRun(spark, ref.dataDir, vdir, n.toInt)
+      val (files, dvs, versions) =
+        VersionLog.vacuumDryRun(spark, ref.dataDir, ref.versionsDir, n.toInt)
       spark.createDataFrame(Seq((files.length.toLong, dvs.length.toLong,
         versions.length.toLong)))
         .toDF("files_would_delete", "dv_dirs_would_delete", "versions_would_drop")
@@ -305,16 +290,13 @@ object TableSql {
       // DV'd table until OPTIMIZE materializes), bytes, live DV count,
       // constraints, schema record, clone-ness. Zero data-file opens.
       val ref = lookup(registry, t)
-      val vdir = ref.versionsDir.getOrElse(throw new IllegalArgumentException(
-        s"table '$t' has no version log — DESCRIBE DETAIL needs committed versions"))
-      VersionLog.describeDetail(spark, ref.dataDir, vdir)
+      VersionLog.describeDetail(spark, ref.dataDir, ref.versionsDir)
 
     case ShowConstraintsRe(t) =>
       val ref = lookup(registry, t)
-      val vdir = ref.versionsDir.getOrElse(throw new IllegalArgumentException(
-        s"table '$t' has no version log — SHOW CONSTRAINTS needs committed versions"))
+      val vdir = ref.versionsDir
       val h = VersionLog.head(spark, vdir)
-      require(h >= 0, s"occ table '$t' has no committed version")
+      require(h >= 0, s"table '$t' has no committed version")
       val (rev, checks) = VersionLog.constraintsAt(spark, vdir, h)
       val rows = checks.toSeq.sortBy(_._1).map { case (n2, sql2) => (n2, sql2, rev.toLong) }
       if (rows.isEmpty)
@@ -324,9 +306,7 @@ object TableSql {
 
     case VacuumRe(t, n) =>
       val ref = lookup(registry, t)
-      val vdir = ref.versionsDir.getOrElse(
-        throw new IllegalArgumentException(s"table '$t' has no version log — nothing to VACUUM"))
-      val (files, versions) = VersionLog.vacuum(spark, ref.dataDir, vdir, n.toInt)
+      val (files, versions) = VersionLog.vacuum(spark, ref.dataDir, ref.versionsDir, n.toInt)
       spark.createDataFrame(Seq((files.toLong, versions.toLong)))
         .toDF("files_deleted", "versions_dropped")
 
@@ -338,8 +318,7 @@ object TableSql {
       // default-of-convenience here would silently decide how much
       // history every table keeps)
       val ref = lookup(registry, t)
-      val vdir = ref.versionsDir.getOrElse(
-        throw new IllegalArgumentException(s"table '$t' has no version log — nothing to VACUUM"))
+      val vdir = ref.versionsDir
       val props = VersionLog.propertiesAt(spark, vdir, VersionLog.head(spark, vdir))
       val n = props.getOrElse(RetainProperty,
         throw new IllegalArgumentException(
@@ -356,30 +335,25 @@ object TableSql {
 
     case SetPropsRe(t, pairList) =>
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"SET TBLPROPERTIES needs an OCC version log to record the properties in — " +
-          s"table '$t' is not registered occ = true")
       val PairRe = """^\s*'([^']*)'\s*=\s*'([^']*)'\s*$""".r
       val props = splitTopLevel(pairList).map {
         case PairRe(k, v2) => k -> v2
         case other => throw new IllegalArgumentException(
           s"SET TBLPROPERTIES pair must be 'key' = 'value', got: $other")
       }.toMap
-      val v = FileSkipping.alterSetProperties(spark, occLog(t, ref), props)
+      val v = FileSkipping.alterSetProperties(spark, ref.versionsDir, props)
       spark.createDataFrame(Seq((v.toLong, props.size.toLong)))
         .toDF("committed_version", "properties_set")
 
     case UnsetPropsRe(t, keyList) =>
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"UNSET TBLPROPERTIES needs an OCC version log — table '$t' is not registered occ = true")
       val KeyRe = """^\s*'([^']*)'\s*$""".r
       val keys = splitTopLevel(keyList).map {
         case KeyRe(k) => k
         case other => throw new IllegalArgumentException(
           s"UNSET TBLPROPERTIES key must be 'key', got: $other")
       }
-      val v = FileSkipping.alterUnsetProperties(spark, occLog(t, ref), keys)
+      val v = FileSkipping.alterUnsetProperties(spark, ref.versionsDir, keys)
       spark.createDataFrame(Seq((v.toLong, keys.length.toLong)))
         .toDF("committed_version", "properties_unset")
 
@@ -387,9 +361,7 @@ object TableSql {
       // one (key, value) row per property at head, key-sorted — the
       // stable frame tooling diffs; empty when none were ever set
       val ref = lookup(registry, t)
-      val vdir = ref.versionsDir.getOrElse(
-        throw new IllegalArgumentException(
-          s"table '$t' has no version log — TBLPROPERTIES live in the log's snapshots"))
+      val vdir = ref.versionsDir
       val props = VersionLog.propertiesAt(spark, vdir, VersionLog.head(spark, vdir))
       spark.createDataFrame(props.toSeq.sortBy(_._1)).toDF("key", "value")
 
@@ -417,19 +389,10 @@ object TableSql {
           src.select(want.fieldNames.map(org.apache.spark.sql.functions.col)
             .toIndexedSeq: _*)
         }
-      if (ref.occ) {
-        val v = FileSkipping.appendOcc(aligned, ref.dataDir, occLog(t, ref),
-          ref.keyCol, freshTxnId(), evolveSchema = ref.evolveSchema,
-          cdcDir = ref.cdcDir)
-        spark.createDataFrame(Seq(Tuple1(v.toLong))).toDF("committed_version")
-      } else {
-        require(!ref.evolveSchema,
-          s"table '$t' is registered evolveSchema = true but not occ — schema " +
-            "evolution needs the version log's snapshot dirs to carry the record")
-        val appended = FileSkipping.appendWithManifest(aligned, ref.dataDir,
-          ref.manifestDir, ref.keyCol, versionLog = ref.versionsDir)
-        spark.createDataFrame(Seq(Tuple1(appended.toLong))).toDF("files_appended")
-      }
+      val v = FileSkipping.appendOcc(aligned, ref.dataDir, ref.versionsDir,
+        ref.keyCol, freshTxnId(), evolveSchema = ref.evolveSchema,
+        cdcDir = ref.cdcDir)
+      spark.createDataFrame(Seq(Tuple1(v.toLong))).toDF("committed_version")
 
     case ReplaceWhereRe(t, key, betweenClause, selectText) =>
       // Delta's replaceWhere: atomically swap the key slice for the
@@ -438,16 +401,13 @@ object TableSql {
       // to every reader and racer; this never does). The SELECT binds
       // through this object's own SELECT path, like INSERT INTO.
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"INSERT OVERWRITE … WHERE needs an OCC version log to commit through — " +
-          s"table '$t' is not registered occ = true")
       require(key.equalsIgnoreCase(ref.keyCol),
         s"INSERT OVERWRITE range must be on the table's clustering key " +
           s"'${ref.keyCol}', got '$key'")
       val (lo, hi) = parseBetween(spark, key, betweenClause)
       val src = apply(spark, registry, selectText)
       val (v, retired, rewritten, written) = FileSkipping.replaceWhereOcc(spark,
-        ref.dataDir, occLog(t, ref), ref.keyCol, src, lo, hi, freshTxnId(),
+        ref.dataDir, ref.versionsDir, ref.keyCol, src, lo, hi, freshTxnId(),
         cdcDir = ref.cdcDir)
       spark.createDataFrame(Seq((v.toLong, retired.toLong, rewritten.toLong,
         written.toLong)))
@@ -459,10 +419,7 @@ object TableSql {
       // [[FileSkipping.alterDropColumn]] for the guards and the re-add
       // hazard
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"ALTER TABLE DROP COLUMN needs an OCC version log to record the schema in — " +
-          s"table '$t' is not registered occ = true")
-      val v = FileSkipping.alterDropColumn(spark, occLog(t, ref), ref.keyCol, colName)
+      val v = FileSkipping.alterDropColumn(spark, ref.versionsDir, ref.keyCol, colName)
       spark.createDataFrame(Seq((v.toLong, colName)))
         .toDF("committed_version", "column_dropped")
 
@@ -471,18 +428,13 @@ object TableSql {
       // full scan, only here), then a schema-only commit records the
       // revision-bumped set; every later row-adding mutation enforces it
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"ADD CONSTRAINT needs an OCC version log to record the constraint in — " +
-          s"table '$t' is not registered occ = true")
-      val v = FileSkipping.alterAddConstraint(spark, occLog(t, ref), name, checkSql.trim)
+      val v = FileSkipping.alterAddConstraint(spark, ref.versionsDir, name, checkSql.trim)
       spark.createDataFrame(Seq((v.toLong, name)))
         .toDF("committed_version", "constraint_added")
 
     case DropConstraintRe(t, name) =>
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"DROP CONSTRAINT needs an OCC version log — table '$t' is not registered occ = true")
-      val v = FileSkipping.alterDropConstraint(spark, occLog(t, ref), name)
+      val v = FileSkipping.alterDropConstraint(spark, ref.versionsDir, name)
       spark.createDataFrame(Seq((v.toLong, name)))
         .toDF("committed_version", "constraint_dropped")
 
@@ -493,9 +445,6 @@ object TableSql {
       // controlled upgrade path (after the ALTER, inserts must carry the
       // new column explicitly; nothing evolves implicitly)
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"ALTER TABLE needs an OCC version log to record the schema in — " +
-          s"table '$t' is not registered occ = true")
       // fromDDL parses a full field LIST, so 'ADD COLUMN c INT, d STRING'
       // (the regex's greedy type tail) would silently become just `c INT`
       // — reject multi-field / trailing-garbage DDL loudly instead
@@ -508,7 +457,7 @@ object TableSql {
           s"parsed as ${parsed.length} fields (${parsed.map(_.name).mkString(", ")}) — " +
           "issue one ALTER per column")
       val dt = parsed.head.dataType
-      val v = FileSkipping.alterAddColumn(spark, occLog(t, ref), colName, dt)
+      val v = FileSkipping.alterAddColumn(spark, ref.versionsDir, colName, dt)
       spark.createDataFrame(Seq((v.toLong, colName)))
         .toDF("committed_version", "column_added")
 
@@ -519,12 +468,9 @@ object TableSql {
       // per-file extents become tight on every one (see
       // [[FileSkipping.zorderOcc]] for the skew/key-band tradeoffs)
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"OPTIMIZE … ZORDER BY needs an OCC version log to commit through — " +
-          s"table '$t' is not registered occ = true")
       val dims = dimList.split(",").map(_.trim).toIndexedSeq
       val (v, rewritten, written) = FileSkipping.zorderOcc(spark, ref.dataDir,
-        occLog(t, ref), ref.keyCol, dims, freshTxnId(), bits = 8,
+        ref.versionsDir, ref.keyCol, dims, freshTxnId(), bits = 8,
         outFiles = Option(filesStr).map(_.toInt).getOrElse(0), pinned = None,
         curve = "morton")
       spark.createDataFrame(Seq((v.toLong, rewritten.toLong, written.toLong)))
@@ -536,12 +482,9 @@ object TableSql {
       // layout key is the Hilbert index — unit-step curve, so per-file
       // hyper-rectangles come out tighter on average (no Morton seams)
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"OPTIMIZE … CLUSTER BY needs an OCC version log to commit through — " +
-          s"table '$t' is not registered occ = true")
       val dims = dimList.split(",").map(_.trim).toIndexedSeq
       val (v, rewritten, written) = FileSkipping.zorderOcc(spark, ref.dataDir,
-        occLog(t, ref), ref.keyCol, dims, freshTxnId(), bits = 8,
+        ref.versionsDir, ref.keyCol, dims, freshTxnId(), bits = 8,
         outFiles = Option(filesStr).map(_.toInt).getOrElse(0), pinned = None,
         curve = "hilbert")
       spark.createDataFrame(Seq((v.toLong, rewritten.toLong, written.toLong)))
@@ -553,9 +496,6 @@ object TableSql {
       // rewrite — hot-partition maintenance without sweeping the table.
       // OCC rewrite-only, same composition contract as full OPTIMIZE.
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"OPTIMIZE … WHERE needs an OCC version log to commit through — " +
-          s"table '$t' is not registered occ = true")
       require(key.equalsIgnoreCase(ref.keyCol),
         s"OPTIMIZE … WHERE range must be on the table's clustering key " +
           s"'${ref.keyCol}', got '$key'")
@@ -563,49 +503,36 @@ object TableSql {
       val small = Option(smallStr).map(_.toLong).getOrElse(128L * 1024 * 1024)
       val target = Option(targetStr).map(_.toLong).getOrElse(128L * 1024 * 1024)
       val (v, compacted, written) = FileSkipping.compactSmallOcc(spark,
-        ref.dataDir, occLog(t, ref), ref.keyCol, small, target, freshTxnId(),
+        ref.dataDir, ref.versionsDir, ref.keyCol, small, target, freshTxnId(),
         scope = Some((lo, hi)))
       spark.createDataFrame(Seq((v.toLong, compacted.toLong, written.toLong)))
         .toDF("committed_version", "files_compacted", "files_written")
 
     case OptimizeRe(t, smallStr, targetStr) =>
       // Delta's OPTIMIZE verb: bin small files through one range exchange
-      // (compaction IMPROVES clustering — see compactSmall). OCC tables
-      // compact as a rewrite-only transaction that composes with live
-      // writers; plain tables use the in-place path with their registered
-      // version log / 2D manifest riding along. Byte thresholds are
-      // optional (`OPTIMIZE t SMALL <bytes> TARGET <bytes>`) — defaults
-      // fold everything under 128 MiB into ~128 MiB files.
+      // (compaction IMPROVES clustering — see compactSmallOcc) as a
+      // rewrite-only transaction that composes with live writers. Byte
+      // thresholds are optional (`OPTIMIZE t SMALL <bytes> TARGET
+      // <bytes>`) — defaults fold everything under 128 MiB into ~128 MiB
+      // files.
       val ref = lookup(registry, t)
       val small = Option(smallStr).map(_.toLong).getOrElse(128L * 1024 * 1024)
       val target = Option(targetStr).map(_.toLong).getOrElse(128L * 1024 * 1024)
-      if (ref.occ) {
-        val (v, compacted, written) = FileSkipping.compactSmallOcc(spark,
-          ref.dataDir, occLog(t, ref), ref.keyCol, small, target, freshTxnId())
-        spark.createDataFrame(Seq((v.toLong, compacted.toLong, written.toLong)))
-          .toDF("committed_version", "files_compacted", "files_written")
-      } else {
-        val (compacted, written) = FileSkipping.compactSmall(spark,
-          ref.dataDir, ref.manifestDir, ref.keyCol, small, target,
-          versionLog = ref.versionsDir, multiManifest = ref.multiManifest)
-        spark.createDataFrame(Seq((compacted.toLong, written.toLong)))
-          .toDF("files_compacted", "files_written")
-      }
+      val (v, compacted, written) = FileSkipping.compactSmallOcc(spark,
+        ref.dataDir, ref.versionsDir, ref.keyCol, small, target, freshTxnId())
+      spark.createDataFrame(Seq((v.toLong, compacted.toLong, written.toLong)))
+        .toDF("committed_version", "files_compacted", "files_written")
 
     case HistoryRe(t) =>
       val ref = lookup(registry, t)
-      val vdir = ref.versionsDir.getOrElse(throw new IllegalArgumentException(
-        s"table '$t' has no version log — DESCRIBE HISTORY needs committed versions"))
-      VersionLog.describeHistory(spark, vdir)
+      VersionLog.describeHistory(spark, ref.versionsDir)
 
     case CheckpointRe(t) =>
       // Delta's _last_checkpoint verb: fold the history summary through
       // head into one parquet so DESCRIBE HISTORY reads checkpoint +
       // tail, and checkpointed-then-vacuumed versions keep their rows
       val ref = lookup(registry, t)
-      val vdir = ref.versionsDir.getOrElse(throw new IllegalArgumentException(
-        s"table '$t' has no version log — CHECKPOINT needs committed versions"))
-      val c = VersionLog.checkpoint(spark, vdir)
+      val c = VersionLog.checkpoint(spark, ref.versionsDir)
       spark.createDataFrame(Seq(Tuple1(c.toLong))).toDF("checkpointed_through")
 
     case RestoreRe(t, verStr) =>
@@ -614,10 +541,7 @@ object TableSql {
       // preserved, OCC-composed, schema record NOT rolled back (see
       // [[FileSkipping.restoreVersion]])
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"RESTORE TABLE needs an OCC version log to commit through — " +
-          s"table '$t' is not registered occ = true")
-      val v = FileSkipping.restoreVersion(spark, occLog(t, ref), verStr.toInt)
+      val v = FileSkipping.restoreVersion(spark, ref.versionsDir, verStr.toInt)
       spark.createDataFrame(Seq((v.toLong, verStr.toLong)))
         .toDF("committed_version", "restored_to")
 
@@ -625,12 +549,9 @@ object TableSql {
       // instant-addressed rollback: resolve through the commit stamps
       // (same semantics as the SELECT qualifier), then the version verb
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"RESTORE TABLE needs an OCC version log to commit through — " +
-          s"table '$t' is not registered occ = true")
-      val target = VersionLog.versionAtTimestamp(spark, occLog(t, ref),
+      val target = VersionLog.versionAtTimestamp(spark, ref.versionsDir,
         parseInstantMillis(bound))
-      val v = FileSkipping.restoreVersion(spark, occLog(t, ref), target)
+      val v = FileSkipping.restoreVersion(spark, ref.versionsDir, target)
       spark.createDataFrame(Seq((v.toLong, target.toLong)))
         .toDF("committed_version", "restored_to")
 
@@ -640,10 +561,7 @@ object TableSql {
       // new table with its own TableRef to use it (the registry is the
       // caller's; a statement cannot mutate it)
       val ref = lookup(registry, t)
-      require(ref.occ,
-        s"CLONE needs an OCC version log to clone from — table '$t' is not " +
-          "registered occ = true")
-      val v = FileSkipping.cloneShallow(spark, occLog(t, ref), dir,
+      val v = FileSkipping.cloneShallow(spark, ref.versionsDir, dir,
         Option(verStr).map(_.toInt).getOrElse(-1))
       spark.createDataFrame(Seq((v.toLong, dir)))
         .toDF("cloned_version", "target_versions_dir")
@@ -662,8 +580,7 @@ object TableSql {
       registry.foreach { case (name, ref) =>
         if (s"""(?i)\\b${java.util.regex.Pattern.quote(name)}\\b""".r
             .findFirstIn(maskLiterals(text)).isDefined) {
-          def vdir = ref.versionsDir.getOrElse(throw new IllegalArgumentException(
-            s"table '$name' has no version log — time travel unsupported"))
+          val vdir = ref.versionsDir
           // match positions come from the masked text (same offsets);
           // the replacement text is spliced into the ORIGINAL. Two
           // passes — VERSION AS OF, then TIMESTAMP AS OF — each against
@@ -824,11 +741,6 @@ object TableSql {
     registry.getOrElse(t, throw new IllegalArgumentException(
       s"unknown table '$t' — registered: ${registry.keys.toSeq.sorted.mkString(", ")}"))
 
-  private def occLog(t: String, ref: TableRef): String =
-    ref.versionsDir.getOrElse(throw new IllegalArgumentException(
-      s"table '$t' is registered occ = true but has no versionsDir — " +
-        "OCC transactions need a version log to pin and rebase against"))
-
   /** Split `BETWEEN lo AND hi` at the AND the SQL GRAMMAR assigns to the
     * BETWEEN — Spark's own parser lowers the clause to
     * `key >= lo AND key <= hi`, so bounds containing " AND " inside
@@ -935,19 +847,12 @@ object TableSql {
     }
   }
 
-  /** The table's CURRENT files: for OCC tables the LOG head decides them
-    * (the flat manifest dir is a cache a racing writer may not have
-    * synced); otherwise the manifest — never a directory listing, which
-    * under MVCC would resurrect retired files awaiting vacuum and read
-    * in-flight txn slots. */
-  private def headRead(spark: SparkSession, name: String, ref: TableRef): DataFrame =
-    if (ref.occ) {
-      val h = VersionLog.head(spark, occLog(name, ref))
-      require(h >= 0, s"occ table '$name' has no committed version")
-      VersionLog.readVersion(spark, occLog(name, ref), h)
-    } else {
-      val files = spark.read.parquet(ref.manifestDir)
-        .select("file").collect().map(_.getString(0)).sorted
-      spark.read.parquet(files.toIndexedSeq: _*)
-    }
+  /** The table's CURRENT files, decided by the LOG head — never a
+    * directory listing, which under MVCC would resurrect retired files
+    * awaiting vacuum and read in-flight txn slots. */
+  private def headRead(spark: SparkSession, name: String, ref: TableRef): DataFrame = {
+    val h = VersionLog.head(spark, ref.versionsDir)
+    require(h >= 0, s"table '$name' has no committed version")
+    VersionLog.readVersion(spark, ref.versionsDir, h)
+  }
 }

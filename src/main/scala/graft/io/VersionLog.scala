@@ -47,35 +47,32 @@ class TxnAlreadyApplied(val appId: String, val txnVersion: Long, val atVersion: 
   *   - each committed mutation snapshots the ENTIRE manifest (a
   *     |files|-row frame — ~10⁵ rows for 100 TB at 1 GB/file, trivial to
   *     copy) into `versionsDir/v<N>`;
-  *   - in versioned mode the mutations STOP physically deleting retired
-  *     data files — a file drops out of the head manifest but stays on
-  *     disk while any retained version references it, so a reader pinned
-  *     to version N sees a consistent table no matter what the writer
-  *     does after (MVCC, the object-store way: immutable files + a tiny
-  *     log deciding liveness);
+  *   - no mutation physically deletes a retired data file — a file
+  *     drops out of the head manifest but stays on disk while any
+  *     retained version references it, so a reader pinned to version N
+  *     sees a consistent table no matter what writers do after (MVCC,
+  *     the object-store way: immutable files + a tiny log deciding
+  *     liveness);
   *   - [[vacuum]] is the physical delete, moved to where it is safe:
   *     drop the versions older than the retention window, then delete
   *     exactly the files referenced ONLY by dropped versions. Storage
   *     cost of time travel = retired-but-retained bytes, the same trade
   *     Delta/Iceberg `VACUUM`/`expire_snapshots` make.
   *
-  * Two writer models share the log:
-  *
-  *   - SINGLE-WRITER ([[commit]]): each versioned mutation snapshots the
-  *     live manifest after its in-place swap; the slot claim only turns
-  *     a racing second writer into a loud failure.
-  *   - MULTI-WRITER OCC ([[begin]]/[[commitRebase]]): a transaction pins
-  *     a snapshot, computes its rewrite against THAT snapshot (new files
-  *     land in a private slot dir), and commits by REBASING its file
-  *     delta onto whatever head exists at commit time — after validating
-  *     that no intermediate commit removed one of its files (write-write
-  *     file conflict) or wrote into its key band (the conservative
-  *     predicate check that catches two blind inserts of the same key,
-  *     Delta's WriteSerializable shape). Disjoint writers both land;
-  *     overlapping writers abort loudly and re-run against the new head.
-  *     Under OCC the LOG is the source of truth and the flat manifest
-  *     dir is a cache — refresh it with [[syncLive]] once writers
-  *     quiesce, or read via [[readVersion]] while they race.
+  * Every table mutation is an OCC transaction ([[begin]]/
+  * [[commitRebase]]): it pins a snapshot, computes its rewrite against
+  * THAT snapshot (new files land in a private slot dir), and commits by
+  * REBASING its file delta onto whatever head exists at commit time —
+  * after validating that no intermediate commit removed one of its files
+  * (write-write file conflict) or wrote into its key band (the
+  * conservative predicate check that catches two blind inserts of the
+  * same key, Delta's WriteSerializable shape). Disjoint writers both
+  * land; overlapping writers abort loudly and re-run against the new
+  * head. The LOG is the source of truth; a flat manifest dir is at most a
+  * mirror ([[syncLive]]). [[commit]]/[[commitSnapshot]] write a snapshot
+  * whole — a table's v0 bootstrap, and the serial-writer versioned
+  * ingest, where the slot claim only turns a racing second writer into a
+  * loud failure.
   *
   * The remaining boundary is the claim primitive itself:
   * `FileSystem.create(overwrite=false)` is atomic on HDFS-like stores;
@@ -1466,18 +1463,17 @@ object VersionLog {
           "the table to a version that does not reference it", e)
     }
 
-  /** Mirror the head snapshot into the flat manifest dir — the handoff
-    * from OCC back to the single-writer batch world (every in-place
-    * mutation and pruned read consults `manifestDir`). Call once writers
-    * QUIESCE: the mirror itself is not concurrency-safe (concurrent
-    * readers should pin versions via [[readVersion]] while writers
-    * race). */
+  /** Mirror the head snapshot into a flat manifest dir — for the
+    * read-only flat-manifest readers ([[FileSkipping.prunedRead]] and
+    * friends). Call once writers QUIESCE: the mirror itself is not
+    * concurrency-safe (concurrent readers should pin versions via
+    * [[readVersion]] while writers race). */
   def syncLive(spark: SparkSession, versionsDir: String, manifestDir: String): Unit = {
     val h = head(spark, versionsDir)
     require(h >= 0, s"nothing committed in $versionsDir")
     // strip the per-commit classification column: it describes the HEAD
-    // COMMIT, not the files, and the flat single-writer manifest has no
-    // commits to classify
+    // COMMIT, not the files, and a flat manifest has no commits to
+    // classify
     val manifest0 = manifestAt(spark, versionsDir, h)
     // a head with LIVE deletion vectors cannot be mirrored: flat-manifest
     // readers have no DV apply path, so the mirror would silently

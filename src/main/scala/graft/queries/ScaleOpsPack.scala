@@ -164,6 +164,25 @@ object ScaleOpsPack extends QueryPack {
         lit("9-MERGED").as("o_orderpriority"),
         (col("o_totalprice") + 5).as("o_totalprice"))
 
+  /** The table at its log head — how every table query reads its result
+    * back. Never `read.parquet(dataDir)`: under MVCC retired files and
+    * transaction slots stay on disk until VACUUM. */
+  private def headOf(s: SparkSession, vdir: String): DataFrame =
+    graft.io.VersionLog.readVersion(s, vdir, graft.io.VersionLog.head(s, vdir))
+
+  /** v0 of an EMPTY table's log: a zero-row stats manifest keyed on a
+    * timestamp `ts` (no schema record — the first ingest batch's files
+    * define it). The bootstrap of the streaming-ingest queries. */
+  private def emptyTsLog(s: SparkSession, vdir: String): Unit = {
+    import org.apache.spark.sql.types._
+    graft.io.VersionLog.commitSnapshot(s, vdir, s.createDataFrame(
+      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("file", StringType), StructField("min_key", TimestampType),
+        StructField("max_key", TimestampType), StructField("n_rows", LongType),
+        StructField("n_keys", LongType)))))
+    ()
+  }
+
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ── q121: incremental materialized-view maintenance ────────────────
@@ -402,14 +421,14 @@ object ScaleOpsPack extends QueryPack {
     // ── q179: FILE-LEVEL range delete through the manifest ────────────
     // The manifest corner of the round-8 delete ask ("nothing removes …
     // the file-skipping manifest"): drop a whole year from a date-sorted
-    // table. FileSkipping.deleteRange retires fully-covered files
-    // WITHOUT READING THEM (pure manifest range math — how a table
+    // table. FileSkipping.deleteRangeOcc retires fully-covered files
+    // WITHOUT READING THEM (pure snapshot range math — how a table
     // format drops files), rewrites only the boundary files minus the
-    // range, and folds the manifest rows accordingly — cost
-    // O(boundary files), not O(table). The query mutates its OWN fresh
-    // copy each run (a delete must be exercised, not replayed from a
-    // marker) and reads the survivor table back: the deleted year must
-    // be gone and every other year intact to the penny.
+    // range, and commits the folded stats as v1 — cost O(boundary
+    // files), not O(table). The query mutates its OWN fresh copy each
+    // run (a delete must be exercised, not replayed from a marker) and
+    // reads the head back: the deleted year must be gone and every
+    // other year intact to the penny.
     "q179_manifest_range_delete" -> { (s, d) =>
       import graft.io.FileSkipping
       val base = Staging.scratch("q179_del")
@@ -422,30 +441,34 @@ object ScaleOpsPack extends QueryPack {
         FileSkipping.buildManifest(s, s"$base/data", "o_orderdate")
           .write.mode("overwrite").parquet(s"$base/manifest")
       }
-      FileSkipping.deleteRange(s, s"$base/data", s"$base/manifest", "o_orderdate",
-        lit("1995-01-01").cast("timestamp"), lit("1995-12-31").cast("timestamp"))
-      s.read.parquet(s"$base/data")
+      val vdir = s"$base/versions"
+      graft.io.VersionLog.commit(s, vdir, s"$base/manifest") // v0
+      FileSkipping.deleteRangeOcc(s, s"$base/data", vdir, "o_orderdate",
+        lit("1995-01-01").cast("timestamp"), lit("1995-12-31").cast("timestamp"), "Q179")
+      headOf(s, vdir)
         .groupBy(year(col("o_orderdate")).cast("long").as("y"))
         .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice")).as("sum_price"))
     },
 
     // ── q181: keyed MERGE (upsert) costed by the manifest ─────────────
-    // The Delta-`MERGE INTO` shape without the table format, completing
-    // the manifest table's write lifecycle (q164 append, q179 delete,
-    // q182 compact): a small keyed delta of updates + brand-new keys is
-    // merged into a 16-file key-sorted table — the manifest's range math
-    // picks the files that can contain a delta key, ONLY those are read
-    // and rewritten (survivor rows + replacements, re-range-sorted), the
-    // inserts land beyond every file's range, the manifest folds. The
-    // query mutates its OWN fresh copy each run (a merge must be
-    // exercised, not replayed) and reads the merged table back; the
-    // oracle recomputes the merge set-theoretically over the source.
+    // The Delta-`MERGE INTO` shape, completing the table's write
+    // lifecycle (q179 delete, q182 compact): a small keyed delta of
+    // updates + brand-new keys is merged into a 16-file key-sorted table
+    // — the snapshot's range math picks the files that can contain a
+    // delta key, ONLY those are read and rewritten (survivor rows +
+    // replacements, re-range-sorted), the inserts land beyond every
+    // file's range, one commit folds the stats. The query mutates its
+    // OWN fresh copy each run (a merge must be exercised, not replayed)
+    // and reads the merged head back; the oracle recomputes the merge
+    // set-theoretically over the source.
     "q181_manifest_merge" -> { (s, d) =>
       val base = Staging.scratch("q181_merge")
       val orders = stagedOrdersCopy(s, d, base)
-      graft.io.FileSkipping.mergeKeyed(s, s"$base/data", s"$base/manifest",
-        "o_orderkey", mergeUpdates(orders).unionByName(mergeInserts(orders)))
-      s.read.parquet(s"$base/data")
+      val vdir = s"$base/versions"
+      graft.io.VersionLog.commit(s, vdir, s"$base/manifest") // v0
+      graft.io.FileSkipping.mergeKeyedOcc(s, s"$base/data", vdir,
+        "o_orderkey", mergeUpdates(orders).unionByName(mergeInserts(orders)), "Q181")
+      headOf(s, vdir)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice")).as("sum_price"))
     },
@@ -470,9 +493,11 @@ object ScaleOpsPack extends QueryPack {
         FileSkipping.buildManifest(s, s"$base/data", "o_orderdate")
           .write.mode("overwrite").parquet(s"$base/manifest")
       }
-      FileSkipping.compactSmall(s, s"$base/data", s"$base/manifest", "o_orderdate",
-        smallBytes = 512 * 1024, targetBytes = 1024 * 1024)
-      s.read.parquet(s"$base/data")
+      val vdir = s"$base/versions"
+      graft.io.VersionLog.commit(s, vdir, s"$base/manifest") // v0
+      FileSkipping.compactSmallOcc(s, s"$base/data", vdir, "o_orderdate",
+        smallBytes = 512 * 1024, targetBytes = 1024 * 1024, "Q182")
+      headOf(s, vdir)
         .groupBy(year(col("o_orderdate")).cast("long").as("y"))
         .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice")).as("sum_price"))
     },
@@ -496,32 +521,33 @@ object ScaleOpsPack extends QueryPack {
 
     // ── q184: streaming ingest INTO the manifest table, through a crash ─
     // The 100 TB ingestion path end-to-end: the staged 3-file event
-    // replay drains through foreachBatch into per-batch data+manifest
-    // slots (FileSkipping.ingestBatch) with a simulated crash mid-batch-1
-    // — the at-least-once replay must land exactly-once because each
-    // batch owns its slots — then the manifest folds flat
-    // (finalizeIngest), the micro-batch files compact through one range
-    // exchange, and the result is a PRUNED read of the first week.
-    // The oracle is the plain source aggregate over the same window: any
-    // duplicated or lost row from the crash, the manifest handoff, or
-    // compaction shows up to the penny.
+    // replay drains through foreachBatch into an empty table, one OCC
+    // commit per batch slot (FileSkipping.ingestBatchOcc), with a
+    // simulated crash mid-batch-1 — the at-least-once replay must land
+    // exactly-once through the batch's `_BATCH_<id>` token — then the
+    // micro-batch files compact through one range exchange, and the
+    // result is a PRUNED read of the first week at the head. The oracle
+    // is the plain source aggregate over the same window: any duplicated
+    // or lost row from the crash or compaction shows up to the penny.
     "q184_stream_ingest_table" -> { (s, d) =>
       import graft.io.FileSkipping
       import graft.streaming.Streams
       val base = Staging.scratch("q184_ingest")
       graft.util.Staging.deleteRecursive(base)
       val src = Streams.prepareLateArrivalFiles(s, d)
+      val vdir = s"$base/versions"
+      emptyTsLog(s, vdir)
       Streams.drainWithCrashRecoveryInto(
         () => Streams.lateArrivalStream(s, src), "q184_ingest", "append", 1) {
-        (b, id) => FileSkipping.ingestBatch(b, id, s"$base/data", s"$base/manifest", "ts")
+        (b, id) => FileSkipping.ingestBatchOcc(b, id, s"$base/data", "ts", vdir); ()
       }
-      FileSkipping.finalizeIngest(s, s"$base/manifest")
-      FileSkipping.compactSmall(s, s"$base/data", s"$base/manifest", "ts",
-        smallBytes = 64L * 1024 * 1024, targetBytes = 8L * 1024 * 1024)
+      FileSkipping.compactSmallOcc(s, s"$base/data", vdir, "ts",
+        smallBytes = 64L * 1024 * 1024, targetBytes = 8L * 1024 * 1024, "Q184")
       val ev = Tables.events(s, d)
       val t0 = ev.agg(date_trunc("DAY", min(col("ts")))).head().getTimestamp(0)
       val t1 = new java.sql.Timestamp(t0.getTime + 7L * 86400 * 1000)
-      FileSkipping.prunedRead(s, s"$base/data", s"$base/manifest", lit(t0), lit(t1))
+      graft.io.VersionLog.prunedReadVersion(s, vdir, graft.io.VersionLog.head(s, vdir),
+          lit(t0), lit(t1))
         .filter(col("ts") >= lit(t0) && col("ts") < lit(t1))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), Parity.dsum(col("value")).as("sum_value"))
@@ -529,8 +555,8 @@ object ScaleOpsPack extends QueryPack {
 
     // ── q185: version log — snapshot isolation / time travel ──────────
     // The reader guarantee every mutation's scaladoc deferred to "a real
-    // table format": mutations in versioned mode snapshot the manifest
-    // (|files| rows) and stop deleting retired files, so a reader pinned
+    // table format": every commit snapshots the manifest (|files| rows)
+    // and no mutation deletes retired files, so a reader pinned
     // to v0 replays the ORIGINAL table bit-for-bit after a MERGE and a
     // range delete have both retired its files from the head. The query
     // returns v0 and head aggregates side by side; the oracle recomputes
@@ -539,18 +565,17 @@ object ScaleOpsPack extends QueryPack {
       import graft.io.{FileSkipping, VersionLog}
       val base = Staging.scratch("q185_versions")
       val orders = stagedOrdersCopy(s, d, base)
-      val vlog = Some(s"$base/versions")
-      VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
-      FileSkipping.mergeKeyed(s, s"$base/data", s"$base/manifest", "o_orderkey",
-        mergeUpdates(orders), versionLog = vlog) // v1
-      FileSkipping.deleteRange(s, s"$base/data", s"$base/manifest", "o_orderkey",
-        lit(1L), lit(3000L), versionLog = vlog) // v2
+      val vdir = s"$base/versions"
+      VersionLog.commit(s, vdir, s"$base/manifest") // v0
+      FileSkipping.mergeKeyedOcc(s, s"$base/data", vdir, "o_orderkey",
+        mergeUpdates(orders), "Q185M") // v1
+      FileSkipping.deleteRangeOcc(s, s"$base/data", vdir, "o_orderkey",
+        lit(1L), lit(3000L), "Q185D") // v2
       def agg(df: org.apache.spark.sql.DataFrame, snap: String) =
         df.groupBy(lit(snap).as("snap"), col("o_orderpriority"))
           .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice")).as("sum_price"))
-      agg(VersionLog.readVersion(s, s"$base/versions", 0), "v0")
-        .unionByName(agg(VersionLog.readVersion(s, s"$base/versions",
-          VersionLog.head(s, s"$base/versions")), "head"))
+      agg(VersionLog.readVersion(s, vdir, 0), "v0")
+        .unionByName(agg(headOf(s, vdir), "head"))
     },
 
     // ── q186: MERGE change-data feed (CDC) ────────────────────────────
@@ -558,15 +583,18 @@ object ScaleOpsPack extends QueryPack {
     // (update_preimage / update_postimage / insert) in one extra pass
     // over (touched ∪ delta) — the feed an incremental view maintainer
     // or replica consumes instead of diffing table snapshots at
-    // O(table). The oracle recomputes all three row classes from the
-    // source with the same key arithmetic.
+    // O(table), read through the committed-slot gate
+    // (readCommittedFeeds). The oracle recomputes all three row classes
+    // from the source with the same key arithmetic.
     "q186_merge_cdc_feed" -> { (s, d) =>
       val base = Staging.scratch("q186_cdc")
       val orders = stagedOrdersCopy(s, d, base)
-      graft.io.FileSkipping.mergeKeyed(s, s"$base/data", s"$base/manifest",
-        "o_orderkey", mergeUpdates(orders).unionByName(mergeInserts(orders)),
+      val vdir = s"$base/versions"
+      graft.io.VersionLog.commit(s, vdir, s"$base/manifest") // v0
+      graft.io.FileSkipping.mergeKeyedOcc(s, s"$base/data", vdir,
+        "o_orderkey", mergeUpdates(orders).unionByName(mergeInserts(orders)), "Q186",
         cdcDir = Some(s"$base/cdc"))
-      s.read.parquet(s"$base/cdc")
+      graft.io.FileSkipping.readCommittedFeeds(s, s"$base/cdc")
         .groupBy("op")
         .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice")).as("sum_price"))
     },
@@ -622,9 +650,11 @@ object ScaleOpsPack extends QueryPack {
     "q189_delete_cdc_feed" -> { (s, d) =>
       val base = Staging.scratch("q189_delcdc")
       stagedOrdersCopy(s, d, base)
-      graft.io.FileSkipping.deleteRange(s, s"$base/data", s"$base/manifest",
-        "o_orderkey", lit(1000L), lit(4000L), cdcDir = Some(s"$base/cdc"))
-      s.read.parquet(s"$base/cdc")
+      val vdir = s"$base/versions"
+      graft.io.VersionLog.commit(s, vdir, s"$base/manifest") // v0
+      graft.io.FileSkipping.deleteRangeOcc(s, s"$base/data", vdir,
+        "o_orderkey", lit(1000L), lit(4000L), "Q189", cdcDir = Some(s"$base/cdc"))
+      graft.io.FileSkipping.readCommittedFeeds(s, s"$base/cdc")
         .groupBy("op", "o_orderpriority")
         .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice")).as("sum_price"))
     },
@@ -651,11 +681,13 @@ object ScaleOpsPack extends QueryPack {
           .agg(count(lit(1)).as("n"),
             sum(col("o_totalprice").cast(DecimalType(28, 4))).as("sum_dec")),
         s"$base/view")
-      graft.io.FileSkipping.mergeKeyed(s, s"$base/data", s"$base/manifest",
-        "o_orderkey", mergeUpdates(orders).unionByName(mergeInserts(orders)),
+      val vdir = s"$base/versions"
+      graft.io.VersionLog.commit(s, vdir, s"$base/manifest") // v0
+      graft.io.FileSkipping.mergeKeyedOcc(s, s"$base/data", vdir,
+        "o_orderkey", mergeUpdates(orders).unionByName(mergeInserts(orders)), "Q190",
         cdcDir = Some(s"$base/cdc"))
-      // maintenance: ONLY the staged view + the feed
-      val delta = s.read.parquet(s"$base/cdc")
+      // maintenance: ONLY the staged view + the feed's committed slots
+      val delta = graft.io.FileSkipping.readCommittedFeeds(s, s"$base/cdc")
         .withColumn("w",
           when(col("op") === "update_preimage", lit(-1L)).otherwise(lit(1L)))
         .groupBy("o_orderpriority")
@@ -776,11 +808,10 @@ object ScaleOpsPack extends QueryPack {
     },
 
     // ── q194: VERSIONED streaming ingest — time travel across an active
-    // ingest (round-9 verdict #7). q184 proved exactly-once slot ingest
-    // but required a quiesced handoff before any reader guarantee; here
-    // every micro-batch commits one log version (head ∪ slot stats) with
-    // a _BATCH_<id> idempotence token, so a reader pinned after batch 0
-    // replays EXACTLY batch 0 even though two more batches (and a
+    // ingest (round-9 verdict #7), the serial-writer twin of q184's OCC
+    // ingest: every micro-batch commits one log version (head ∪ slot
+    // stats) with a _BATCH_<id> idempotence token, so a reader pinned
+    // after batch 0 replays EXACTLY batch 0 even though two more batches (and a
     // mid-batch-1 crash + replay, which the token short-circuits without
     // a duplicate version) land after it. The query returns the pinned
     // b0 aggregate beside the head aggregate; the oracle recomputes both
@@ -838,8 +869,10 @@ object ScaleOpsPack extends QueryPack {
 
     // ── q199: STREAMING CDC view maintenance, crash-idempotent ────────
     // q190 consumed the change feed as a batch; this is how a live
-    // replica actually consumes it — `readStream` over the feed
-    // directory, each micro-batch folded into the maintained view with
+    // replica actually consumes it — `readStream` over the feed's
+    // COMMITTED slots (a path glob built from committedFeedSlots, never
+    // a blind listing of the feed dir), each micro-batch folded into the
+    // maintained view with
     // signed weights and exact-decimal sums. Two sequential MERGEs emit
     // the feed (the second overwrites some of the first's rows —
     // replacement semantics, so the oracle's CASE arithmetic is
@@ -868,25 +901,30 @@ object ScaleOpsPack extends QueryPack {
           .agg(count(lit(1)).as("n"),
             sum(col("o_totalprice").cast(DecimalType(28, 4))).as("sum_dec")),
         s"$base/view_seed")
-      graft.io.FileSkipping.mergeKeyed(s, s"$base/data", s"$base/manifest",
-        "o_orderkey", mergeUpdates(orders).unionByName(mergeInserts(orders)),
-        cdcDir = Some(s"$base/cdc"))
-      graft.io.FileSkipping.mergeKeyed(s, s"$base/data", s"$base/manifest",
+      val (vdir, cdc) = (s"$base/versions", s"$base/cdc")
+      graft.io.VersionLog.commit(s, vdir, s"$base/manifest") // v0
+      graft.io.FileSkipping.mergeKeyedOcc(s, s"$base/data", vdir,
+        "o_orderkey", mergeUpdates(orders).unionByName(mergeInserts(orders)), "Q199A",
+        cdcDir = Some(cdc))
+      graft.io.FileSkipping.mergeKeyedOcc(s, s"$base/data", vdir,
         "o_orderkey", orders.filter(col("o_orderkey") % 89 === 0)
           .withColumn("o_orderpriority", lit("8-M2"))
-          .withColumn("o_totalprice", col("o_totalprice") * 3),
-        cdcDir = Some(s"$base/cdc"))
-      // 1 file per trigger: each merge's feed is now ONE coalesced file
+          .withColumn("o_totalprice", col("o_totalprice") * 3), "Q199B",
+        cdcDir = Some(cdc))
+      // 1 file per trigger: each merge's feed slot is ONE coalesced file
       // (the O(|delta|) feed write pays one file-commit, not ~32 — see
-      // mergeKeyed's coalesce note), so the two merges give exactly two
-      // micro-batches — still a multi-batch fold (convergence is the
+      // mergeKeyedOcc's coalesce note), so the two merges give exactly
+      // two micro-batches — still a multi-batch fold (convergence is the
       // property under test, and the crash harness needs a batch 1 to
       // crash in) without the old ~64 fixed per-batch job costs
-      val schema = s.read.parquet(s"$base/cdc").schema
+      val slots = graft.io.FileSkipping.committedFeedSlots(s, cdc)
+        .map { case (_, slot) => new org.apache.hadoop.fs.Path(slot).getName }
+      val committed = s"$cdc/{${slots.mkString(",")}}"
+      val schema = graft.io.FileSkipping.readCommittedFeeds(s, cdc).schema
       @volatile var lastBatch = -1L
       graft.streaming.Streams.drainWithCrashRecoveryInto(
         () => s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$base/cdc"),
+          .option("maxFilesPerTrigger", 1).parquet(committed),
         "q199_streamcdc", "append", crashAtBatch = 1) { (b, id) =>
           val delta = b
             .withColumn("w",
@@ -923,13 +961,13 @@ object ScaleOpsPack extends QueryPack {
     // oracle, so the SQL path must be observationally identical.
 
     // q195: q181's MERGE through a MERGE INTO string; the read-back also
-    // goes through the SQL frontend (manifest-decided head view).
+    // goes through the SQL frontend (log-head view).
     "q195_sql_merge" -> { (s, d) =>
       import graft.io.TableSql
       val base = Staging.scratch("q195_sqlmerge")
       val orders = stagedOrdersCopy(s, d, base)
-      val reg = Map("otable" -> TableSql.TableRef(
-        s"$base/data", s"$base/manifest", "o_orderkey"))
+      graft.io.VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
+      val reg = Map("otable" -> TableSql.TableRef(s"$base/data", s"$base/versions", "o_orderkey"))
       mergeUpdates(orders).unionByName(mergeInserts(orders))
         .createOrReplaceTempView("q195_delta")
       TableSql(s, reg,
@@ -943,9 +981,9 @@ object ScaleOpsPack extends QueryPack {
             FROM otable GROUP BY o_orderpriority""")
     },
 
-    // q196: q179's range delete through a DELETE string — in VERSIONED
-    // mode, then VACUUM RETAIN 1 VERSIONS through its string (the
-    // physical delete), then the survivor read through the head view.
+    // q196: q179's range delete through a DELETE string, then VACUUM
+    // RETAIN 1 VERSIONS through its string (the physical delete), then
+    // the survivor read through the head view.
     "q196_sql_delete_vacuum" -> { (s, d) =>
       import graft.io.TableSql
       val base = Staging.scratch("q196_sqldel")
@@ -959,9 +997,7 @@ object ScaleOpsPack extends QueryPack {
           .write.mode("overwrite").parquet(s"$base/manifest")
       }
       graft.io.VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
-      val reg = Map("dtable" -> TableSql.TableRef(
-        s"$base/data", s"$base/manifest", "o_orderdate",
-        versionsDir = Some(s"$base/versions")))
+      val reg = Map("dtable" -> TableSql.TableRef(s"$base/data", s"$base/versions", "o_orderdate"))
       TableSql(s, reg,
         """DELETE FROM dtable WHERE o_orderdate
            BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '1995-12-31'""").collect()
@@ -973,7 +1009,7 @@ object ScaleOpsPack extends QueryPack {
     },
 
     // q197: q185's snapshot isolation through the SQL surface — a
-    // MERGE INTO and a DELETE (both versioned), then ONE statement reads
+    // MERGE INTO and a DELETE (one commit each), then ONE statement reads
     // `VERSION AS OF 0` beside the head and must see the original table
     // bit-exactly on the v0 side.
     "q197_sql_time_travel" -> { (s, d) =>
@@ -981,9 +1017,7 @@ object ScaleOpsPack extends QueryPack {
       val base = Staging.scratch("q197_sqltravel")
       val orders = stagedOrdersCopy(s, d, base)
       graft.io.VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
-      val reg = Map("ttable" -> TableSql.TableRef(
-        s"$base/data", s"$base/manifest", "o_orderkey",
-        versionsDir = Some(s"$base/versions")))
+      val reg = Map("ttable" -> TableSql.TableRef(s"$base/data", s"$base/versions", "o_orderkey"))
       mergeUpdates(orders).createOrReplaceTempView("q197_delta")
       TableSql(s, reg,
         """MERGE INTO ttable USING q197_delta
@@ -1002,16 +1036,15 @@ object ScaleOpsPack extends QueryPack {
             FROM ttable GROUP BY o_orderpriority""")
     },
 
-    // ── q200/q201: the SQL frontend's OCC path (round-10 verdict #6:
-    // "a versioned table's SQL users cannot reach multi-writer
-    // semantics"). Same statements as q195/q196, tables registered
-    // `occ = true`: each statement is ONE OCC transaction — fresh pin,
-    // private txn slot, rebase commit, CDC slot tied to the commit's
-    // fate — and SELECTs bind the LOG head (under OCC the log is truth,
-    // the flat manifest a cache). Oracles are the Scala twins' oracles
-    // plus the committed version the metrics frame returned, so the
-    // result proves BOTH observational identity and that the
-    // transactional path (v0 bootstrap + one commit = v1) actually ran.
+    // ── q200/q201: the SQL frontend's transactions made visible (round-10
+    // verdict #6: "a versioned table's SQL users cannot reach
+    // multi-writer semantics"). Same statements as q195/q196: each
+    // statement is ONE OCC transaction — fresh pin, private txn slot,
+    // rebase commit, CDC slot tied to the commit's fate — and SELECTs
+    // bind the LOG head. Oracles are the Scala twins' oracles plus the
+    // committed version the metrics frame returned, so the result proves
+    // BOTH observational identity and that the transactional path (v0
+    // bootstrap + one commit = v1) actually ran.
 
     "q200_sql_occ_merge" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
@@ -1019,9 +1052,7 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
       val reg = Map("omtable" -> TableSql.TableRef(
-        s"$base/data", s"$base/manifest", "o_orderkey",
-        versionsDir = Some(s"$base/versions"), cdcDir = Some(s"$base/cdc"),
-        occ = true))
+        s"$base/data", s"$base/versions", "o_orderkey", cdcDir = Some(s"$base/cdc")))
       mergeUpdates(orders).unionByName(mergeInserts(orders))
         .createOrReplaceTempView("q200_delta")
       val v = TableSql(s, reg,
@@ -1052,9 +1083,7 @@ object ScaleOpsPack extends QueryPack {
           .write.mode("overwrite").parquet(s"$base/manifest")
       }
       graft.io.VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
-      val reg = Map("odtable" -> TableSql.TableRef(
-        s"$base/data", s"$base/manifest", "o_orderdate",
-        versionsDir = Some(s"$base/versions"), occ = true))
+      val reg = Map("odtable" -> TableSql.TableRef(s"$base/data", s"$base/versions", "o_orderdate"))
       val v = TableSql(s, reg,
         """DELETE FROM odtable WHERE o_orderdate
            BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '1995-12-31'""")
@@ -1071,8 +1100,8 @@ object ScaleOpsPack extends QueryPack {
     // stretch: "carry the multi-stats columns through the snapshot
     // schema"). The table is z-ordered on hash-derived (x, y) and keyed
     // by zk = zvalue·2³³ + o_orderkey (injective, z-clustered); its
-    // snapshots carry min/max for x AND y beside the key stats
-    // (buildManifestStats bootstrap, statCols on the merge), so after an
+    // snapshots carry min/max for x AND y beside the key stats (the
+    // buildManifestStats bootstrap; every commit carries them), so after an
     // OCC merge BOTH the pinned v0 and the new head serve 2D box-pruned
     // reads from their own snapshot's stats — no derived cache to go
     // stale (the q187 layout, composed with q192's transaction and
@@ -1101,8 +1130,7 @@ object ScaleOpsPack extends QueryPack {
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
       val delta = withZk(src.filter(col("o_orderkey") % 97 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2))
-      val v1 = FileSkipping.mergeKeyedOcc(s, s"$base/data", vdir, "zk", delta,
-        "Q202", statCols = Seq("x", "y"))
+      val v1 = FileSkipping.mergeKeyedOcc(s, s"$base/data", vdir, "zk", delta, "Q202")
       def box(v: Int, snap: String) =
         FileSkipping.prunedReadVersionMulti(s, vdir, v,
           Seq(("x", lit(64L), lit(95L)), ("y", lit(160L), lit(191L))))
@@ -1266,23 +1294,23 @@ object ScaleOpsPack extends QueryPack {
 
     // ── q206: INSERT INTO through the SQL frontend ─────────────────────
     // Round-11 verdict #6: the most common mutation a user types reaches
-    // appendWithManifest (plain) / appendOcc (OCC transaction) through
-    // its string; the SELECT half binds registered tables like any other
-    // statement, the column sets are schema-checked by NAME before
-    // anything lands (TableSqlSpec pins the mismatch guard), and the OCC
-    // side's committed version rides the result. Oracle = base ∪
-    // inserted rows, identical on both sides.
+    // appendOcc (one transaction) through its string, on two tables
+    // (labelled 'plain' and 'occ'); the SELECT half binds registered
+    // tables like any other statement, the column sets are
+    // schema-checked by NAME before anything lands (TableSqlSpec pins
+    // the mismatch guard), and the 'occ' table's committed version rides
+    // the result. Oracle = base ∪ inserted rows, identical on both sides.
     "q206_sql_insert" -> { (s, d) =>
       import graft.io.{TableSql, VersionLog}
       val basep = Staging.scratch("q206_insp")
       val baseo = Staging.scratch("q206_inso")
       val orders = stagedOrdersCopy(s, d, basep)
       stagedOrdersCopy(s, d, baseo)
+      VersionLog.commit(s, s"$basep/versions", s"$basep/manifest") // v0
       VersionLog.commit(s, s"$baseo/versions", s"$baseo/manifest") // v0
       val reg = Map(
-        "ptable" -> TableSql.TableRef(s"$basep/data", s"$basep/manifest", "o_orderkey"),
-        "oitable" -> TableSql.TableRef(s"$baseo/data", s"$baseo/manifest", "o_orderkey",
-          versionsDir = Some(s"$baseo/versions"), occ = true))
+        "ptable" -> TableSql.TableRef(s"$basep/data", s"$basep/versions", "o_orderkey"),
+        "oitable" -> TableSql.TableRef(s"$baseo/data", s"$baseo/versions", "o_orderkey"))
       mergeInserts(orders).createOrReplaceTempView("q206_rows")
       TableSql(s, reg,
         """INSERT INTO ptable
@@ -1315,20 +1343,13 @@ object ScaleOpsPack extends QueryPack {
     // double-committed by the rebase shows up to the penny.
     // ConcurrencySpec races the genuinely-threaded version.
     "q207_occ_stream_ingest" -> { (s, d) =>
-      import org.apache.spark.sql.types._
       import graft.io.{FileSkipping, VersionLog}
       import graft.streaming.Streams
       val base = Staging.scratch("q207_occingest")
       graft.util.Staging.deleteRecursive(base)
       val src = Streams.prepareLateArrivalFiles(s, d)
       val vdir = s"$base/versions"
-      // bootstrap an EMPTY table: v0 is a zero-row stats manifest (the
-      // schema record is not needed — the first batch's files define it)
-      VersionLog.commitSnapshot(s, vdir, s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("file", StringType), StructField("min_key", TimestampType),
-          StructField("max_key", TimestampType), StructField("n_rows", LongType),
-          StructField("n_keys", LongType)))))
+      emptyTsLog(s, vdir) // v0: an EMPTY table
       @volatile var compacted = false
       Streams.drainWithCrashRecoveryInto(
         () => Streams.lateArrivalStream(s, src), "q207_occingest", "append", 1) {
@@ -1375,9 +1396,8 @@ object ScaleOpsPack extends QueryPack {
       val base = Staging.scratch("q208_alter")
       val orders = stagedOrdersCopy(s, d, base)
       VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
-      val reg = Map("atable" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(s"$base/versions"), occ = true,
-        evolveSchema = true))
+      val reg = Map("atable" -> TableSql.TableRef(s"$base/data", s"$base/versions",
+        "o_orderkey", evolveSchema = true))
       TableSql(s, reg, "ALTER TABLE atable ADD COLUMN o_bonus DOUBLE") // v1
       // old-shape INSERT: the added column null-fills
       mergeInserts(orders).createOrReplaceTempView("q208_old_rows")
@@ -1427,8 +1447,7 @@ object ScaleOpsPack extends QueryPack {
       val base = Staging.scratch("q209_optimize")
       stagedOrdersCopy(s, d, base)
       VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
-      val reg = Map("octable" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(s"$base/versions"), occ = true))
+      val reg = Map("octable" -> TableSql.TableRef(s"$base/data", s"$base/versions", "o_orderkey"))
       val m = TableSql(s, reg, "OPTIMIZE octable").head() // v1, rewrite-only
       require(m.getLong(1) >= 2 && m.getLong(2) < m.getLong(1),
         s"OPTIMIZE must fold small files: compacted=${m.getLong(1)} written=${m.getLong(2)}")
@@ -1457,8 +1476,7 @@ object ScaleOpsPack extends QueryPack {
       val base = Staging.scratch("q210_restore")
       val orders = stagedOrdersCopy(s, d, base)
       VersionLog.commit(s, s"$base/versions", s"$base/manifest") // v0
-      val reg = Map("rtable" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(s"$base/versions"), occ = true))
+      val reg = Map("rtable" -> TableSql.TableRef(s"$base/data", s"$base/versions", "o_orderkey"))
       mergeInserts(orders).createOrReplaceTempView("q210_ins")
       TableSql(s, reg, "INSERT INTO rtable SELECT * FROM q210_ins") // v1 good
       TableSql(s, reg,
@@ -1508,8 +1526,7 @@ object ScaleOpsPack extends QueryPack {
       }
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("ztable" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(s"$base/versions"), occ = true))
+      val reg = Map("ztable" -> TableSql.TableRef(s"$base/data", s"$base/versions", "o_orderkey"))
       val m = TableSql(s, reg, "OPTIMIZE ztable ZORDER BY (x, y)").head() // v1
       require(m.getLong(0) == 1 && m.getLong(1) == 16,
         s"expected v1 rewriting 16 files, got ${m}")
@@ -1571,8 +1588,7 @@ object ScaleOpsPack extends QueryPack {
           markers = Seq(s"_TS_$ts1"))                                              // v1
         VersionLog.commitSnapshot(s, vdir, mEven, markers = Seq(s"_TS_$ts2"))      // v2
       }
-      val reg = Map("ttable" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), occ = true))
+      val reg = Map("ttable" -> TableSql.TableRef(s"$base/data", vdir, "o_orderkey"))
       // a pre-v0 instant rejects loudly — serving v0 would be silently wrong
       val rejected =
         try { TableSql(s, reg, s"SELECT * FROM ttable TIMESTAMP AS OF ${ts0 - 1}"); false }
@@ -1618,8 +1634,7 @@ object ScaleOpsPack extends QueryPack {
       }
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("z3table" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), occ = true))
+      val reg = Map("z3table" -> TableSql.TableRef(s"$base/data", vdir, "o_orderkey"))
       val m = TableSql(s, reg, "OPTIMIZE z3table ZORDER BY (x, y, w)").head() // v1
       require(m.getLong(0) == 1 && m.getLong(1) == 16,
         s"expected v1 rewriting 16 files, got $m")
@@ -1668,8 +1683,7 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("owtable" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), occ = true))
+      val reg = Map("owtable" -> TableSql.TableRef(s"$base/data", vdir, "o_orderkey"))
       val keyMax = manifestMaxKey(s, base)
       val (lo, hi) = (1L, keyMax / 4) // ~the first quarter of the key space
       val before = VersionLog.manifestAt(s, vdir, 0)
@@ -1717,8 +1731,7 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("cktable" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), occ = true))
+      val reg = Map("cktable" -> TableSql.TableRef(s"$base/data", vdir, "o_orderkey"))
       mergeInserts(orders).createOrReplaceTempView("q215_ins")
       TableSql(s, reg, "INSERT INTO cktable SELECT * FROM q215_ins")           // v1
       TableSql(s, reg, "DELETE FROM cktable WHERE o_orderkey BETWEEN 100 AND 50000") // v2
@@ -1751,8 +1764,8 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("dvt" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), occ = true, deletionVectors = true))
+      val reg = Map("dvt" -> TableSql.TableRef(s"$base/data", vdir,
+        "o_orderkey", deletionVectors = true))
       val mx = manifestMaxKey(s, base)
       val (lo1, hi1) = (mx / 8, mx / 4)
       val (lo2, hi2) = (mx / 5, mx / 3) // overlaps [lo2, hi1]
@@ -1804,9 +1817,8 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("ct" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), cdcDir = Some(s"$base/cdc"),
-        occ = true, deletionVectors = true))
+      val reg = Map("ct" -> TableSql.TableRef(s"$base/data", vdir,
+        "o_orderkey", cdcDir = Some(s"$base/cdc"), deletionVectors = true))
       mergeInserts(orders).createOrReplaceTempView("q217_ins")
       mergeUpdates(orders).createOrReplaceTempView("q217_up")
       val mx = manifestMaxKey(s, base)
@@ -1844,9 +1856,8 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("ut" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), cdcDir = Some(s"$base/cdc"),
-        occ = true, deletionVectors = true))
+      val reg = Map("ut" -> TableSql.TableRef(s"$base/data", vdir,
+        "o_orderkey", cdcDir = Some(s"$base/cdc"), deletionVectors = true))
       val mx = manifestMaxKey(s, base)
       val (dlo, dhi) = (mx / 2, mx / 2 + mx / 20)
       val (ulo, uhi) = (mx / 4, mx / 2 + mx / 10) // straddles the deleted range
@@ -1896,8 +1907,7 @@ object ScaleOpsPack extends QueryPack {
       }
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("hctable" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), occ = true))
+      val reg = Map("hctable" -> TableSql.TableRef(s"$base/data", vdir, "o_orderkey"))
       val m = TableSql(s, reg, "OPTIMIZE hctable CLUSTER BY (x, y, w)").head() // v1
       require(m.getLong(0) == 1 && m.getLong(1) == 16,
         s"expected v1 rewriting 16 files, got $m")
@@ -1942,8 +1952,7 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("kt" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), occ = true))
+      val reg = Map("kt" -> TableSql.TableRef(s"$base/data", vdir, "o_orderkey"))
       val mx = manifestMaxKey(s, base)
       val (lo, hi) = (mx / 10, mx / 5)
       TableSql(s, reg,
@@ -1992,12 +2001,10 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val srcReg = Map("srct" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), occ = true))
+      val srcReg = Map("srct" -> TableSql.TableRef(s"$base/data", vdir, "o_orderkey"))
       val m = TableSql(s, srcReg, s"CLONE srct TO '$base/clone/versions'").head()
       require(m.getLong(0) == 0L, s"clone must pin source v0, got $m")
-      val clRef = TableSql.TableRef(s"$base/clone/data", s"$base/clone/manifest",
-        "o_orderkey", versionsDir = Some(s"$base/clone/versions"), occ = true)
+      val clRef = TableSql.TableRef(s"$base/clone/data", s"$base/clone/versions", "o_orderkey")
       val reg = srcReg + ("clt" -> clRef)
       require(VersionLog.manifestAt(s, vdir, 0).select("file").collect().map(_.getString(0)).toSet
         == VersionLog.manifestAt(s, s"$base/clone/versions", 0).select("file")
@@ -2032,8 +2039,8 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("dt" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), occ = true, deletionVectors = true))
+      val reg = Map("dt" -> TableSql.TableRef(s"$base/data", vdir,
+        "o_orderkey", deletionVectors = true))
       TableSql(s, reg,
         "ALTER TABLE dt ADD CONSTRAINT price_pos CHECK (o_totalprice > 0)") // v1
       val mx = manifestMaxKey(s, base)
@@ -2080,8 +2087,7 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("pt" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), occ = true))
+      val reg = Map("pt" -> TableSql.TableRef(s"$base/data", vdir, "o_orderkey"))
       TableSql(s, reg, "ALTER TABLE pt DROP COLUMN o_orderpriority") // v1
       val headCols = TableSql(s, reg, "SELECT * FROM pt").columns
       require(headCols.toSeq == Seq("o_orderkey", "o_totalprice"),
@@ -2156,9 +2162,8 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("rt" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), cdcDir = Some(s"$base/cdc"),
-        occ = true))
+      val reg = Map("rt" -> TableSql.TableRef(s"$base/data", vdir,
+        "o_orderkey", cdcDir = Some(s"$base/cdc")))
       val mx = manifestMaxKey(s, base)
       val (lo, hi) = (mx / 3, mx / 3 + mx / 10)
       val sliceN = orders.filter(col("o_orderkey").between(lo, hi)).count()
@@ -2216,8 +2221,7 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("pt" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), occ = true))
+      val reg = Map("pt" -> TableSql.TableRef(s"$base/data", vdir, "o_orderkey"))
       TableSql(s, reg,
         """ALTER TABLE pt SET TBLPROPERTIES
            ('pipeline' = 'trainprep', 'graft.retain.versions' = '3')""") // v1
@@ -2266,9 +2270,8 @@ object ScaleOpsPack extends QueryPack {
       val orders = stagedOrdersCopy(s, d, base)
       val vdir = s"$base/versions"
       VersionLog.commit(s, vdir, s"$base/manifest") // v0
-      val reg = Map("st" -> TableSql.TableRef(s"$base/data", s"$base/manifest",
-        "o_orderkey", versionsDir = Some(vdir), cdcDir = Some(s"$base/cdc"),
-        occ = true))
+      val reg = Map("st" -> TableSql.TableRef(s"$base/data", vdir,
+        "o_orderkey", cdcDir = Some(s"$base/cdc")))
       orders.filter(col("o_orderkey") % 13 === 0)
         .withColumn("o_orderpriority", lit("9-SRC"))
         .withColumn("o_totalprice", col("o_totalprice") + 10)
@@ -2327,7 +2330,7 @@ object ScaleOpsPack extends QueryPack {
           GROUP BY 1""",
 
     // q179: the survivor table must equal orders minus the deleted range
-    // exactly — same inclusive predicate the engine's deleteRange applied
+    // exactly — same inclusive predicate the engine's deleteRangeOcc applied
     "q179_manifest_range_delete" ->
       s"""SELECT CAST(year(o_orderdate) AS BIGINT) AS y, COUNT(*) AS n,
                  ${Sql.dsum("o_totalprice")} AS sum_price

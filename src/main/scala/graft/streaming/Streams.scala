@@ -832,9 +832,9 @@ object Streams {
 
   /** The crash/replay harness of [[drainWithCrashRecovery]] with a
     * CALLER-SUPPLIED sink body — for sinks that are more than a parquet
-    * slot write, e.g. the manifest-maintaining table ingest of
-    * [[graft.io.FileSkipping.ingestBatch]] (q184), where each batch
-    * must land data AND stats. The contract transfers unchanged: the
+    * slot write, e.g. the table ingest of
+    * [[graft.io.FileSkipping.ingestBatchOcc]] (q184, q207), where each
+    * batch must land data AND commit its stats. The contract transfers unchanged: the
     * body MUST be idempotent by batch id, because attempt 1 crashes
     * AFTER the body ran for `crashAtBatch` but BEFORE that batch
     * commits, so the restarted query feeds the same batch through the

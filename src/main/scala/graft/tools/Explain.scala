@@ -9,7 +9,7 @@ import graft.core.GraftSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(8, "explain")
-    val d = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
+    val d = if (args.length > 1) args(1) else graft.util.Staging.corpus("sf0.001")
     val names = if (args.nonEmpty && args(0) != "all") args(0).split(",").toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

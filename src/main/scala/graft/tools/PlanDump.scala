@@ -21,7 +21,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
-    val d = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
+    val d = if (args.length > 1) args(1) else graft.util.Staging.corpus("sf0.01")
     val outDir = if (args.length > 2) args(2) else "plans/r15"
     val suffix = if (args.length > 3) args(3) else "after"
     val spark = graft.core.GraftSession.local(32, "plandump")

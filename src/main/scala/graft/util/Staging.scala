@@ -66,6 +66,14 @@ object Staging {
   def scratch(name: String): String =
     new java.io.File("target/scratch", name).getAbsolutePath
 
+  /** The generated test corpus (TESTDATA.md): one directory of parquet
+    * tables per scale factor. The one place its root is named — every
+    * default corpus path (specs, `Bench`, the plan tools) resolves here. */
+  val CorpusRoot = "/root/testdata"
+
+  /** Corpus directory of scale factor `sf` (e.g. `"sf0.01"`). */
+  def corpus(sf: String): String = s"$CorpusRoot/$sf"
+
   /** Canonical scratch location for an artifact derived from `sfDir`. */
   def dirFor(name: String, sfDir: String): String =
     scratch(s"${name}_${math.abs(sfDir.hashCode)}")

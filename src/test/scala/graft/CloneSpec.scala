@@ -78,8 +78,7 @@ class CloneSpec extends SparkSpec {
   test("clone vacuum skips source files, reclaims its own; SQL verb") {
     val base = freshOcc("vac")
     val src = s"$base/versions"
-    val reg = Map("st" -> TableSql.TableRef(s"$base/data", s"$base/m", "k",
-      versionsDir = Some(src), occ = true))
+    val reg = Map("st" -> TableSql.TableRef(s"$base/data", src, "k"))
     val cl = s"$base/clsql"
     val m = TableSql(spark, reg, s"CLONE st TO '$cl/versions'").head()
     assert(m.getLong(0) == 0L)

@@ -134,8 +134,7 @@ class ConstraintSpec extends SparkSpec {
 
   test("SQL frontend: ADD/DROP CONSTRAINT, INSERT and UPDATE enforcement") {
     val base = freshOcc("sql")
-    val reg = Map("ctab" -> TableSql.TableRef(s"$base/data", s"$base/m", "k",
-      versionsDir = Some(s"$base/versions"), occ = true))
+    val reg = Map("ctab" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k"))
     val m = TableSql(spark, reg,
       "ALTER TABLE ctab ADD CONSTRAINT v_nonneg CHECK (v >= 0)").head()
     assert(m.getAs[String]("constraint_added") == "v_nonneg")

@@ -260,8 +260,8 @@ class DeletionVectorSpec extends SparkSpec {
 
   test("SQL frontend: DELETE on a deletionVectors table is merge-on-read; SELECT applies DVs") {
     val base = freshOcc("sql")
-    val reg = Map("dvtab" -> TableSql.TableRef(s"$base/data", s"$base/manifest_unused",
-      "k", versionsDir = Some(s"$base/versions"), occ = true, deletionVectors = true))
+    val reg = Map("dvtab" -> TableSql.TableRef(s"$base/data", s"$base/versions",
+      "k", deletionVectors = true))
     val filesBefore = manifestFiles(base, 0)
     val m = TableSql(spark, reg, "DELETE FROM dvtab WHERE k BETWEEN 700 AND 1900").collect().head
     assert(m.getAs[Long]("rows_deleted") == 1201L)

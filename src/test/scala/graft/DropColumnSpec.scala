@@ -91,8 +91,7 @@ class DropColumnSpec extends SparkSpec {
 
   test("SQL verb") {
     val base = freshOcc("sql")
-    val reg = Map("dc" -> TableSql.TableRef(s"$base/data", s"$base/m", "k",
-      versionsDir = Some(s"$base/versions"), occ = true))
+    val reg = Map("dc" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k"))
     val m = TableSql(spark, reg, "ALTER TABLE dc DROP COLUMN tag").head()
     assert(m.getAs[String]("column_dropped") == "tag")
     assert(TableSql(spark, reg, "SELECT * FROM dc").columns.toSeq == Seq("k", "v"))

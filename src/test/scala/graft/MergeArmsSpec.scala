@@ -132,8 +132,7 @@ class MergeArmsSpec extends SparkSpec {
 
   test("SQL: general arms parse, aliases rewrite, INSERT cond sees source only") {
     val base = freshOcc("sql")
-    val reg = Map("mt" -> TableSql.TableRef(s"$base/data", s"$base/manifest0", "k",
-      versionsDir = Some(s"$base/versions"), occ = true))
+    val reg = Map("mt" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k"))
     rows(200, 400).unionByName(rows(7000, 7050)).withColumn("v", lit(77.0))
       .createOrReplaceTempView("ma_src")
     val res = TableSql(spark, reg,

@@ -141,8 +141,7 @@ class ReplaceWhereSpec extends SparkSpec {
 
   test("SQL: INSERT OVERWRITE … WHERE routes here; wrong key and non-OCC reject") {
     val base = freshOcc("sql")
-    val reg = Map("rwtbl" -> TableSql.TableRef(s"$base/data", s"$base/manifest0", "k",
-      versionsDir = Some(s"$base/versions"), occ = true))
+    val reg = Map("rwtbl" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k"))
     replacement(500, 599, 1).createOrReplaceTempView("rw_src")
     val res = TableSql(spark, reg,
       "INSERT OVERWRITE rwtbl WHERE k BETWEEN 500 AND 599 SELECT * FROM rw_src")
@@ -158,11 +157,14 @@ class ReplaceWhereSpec extends SparkSpec {
         "INSERT OVERWRITE rwtbl WHERE v BETWEEN 1 AND 2 SELECT * FROM rw_src")
     }
     assert(e.getMessage.contains("clustering key"), e.getMessage)
-    val plainReg = Map("plaintbl" -> TableSql.TableRef(s"$base/data", s"$base/manifest0", "k"))
+    // every table is an OCC table: one registered over a log with no
+    // committed version rejects before anything lands
+    val unloggedReg = Map("plaintbl" -> TableSql.TableRef(s"$base/data", s"$base/nolog", "k"))
     val e2 = intercept[IllegalArgumentException] {
-      TableSql(spark, plainReg,
+      TableSql(spark, unloggedReg,
         "INSERT OVERWRITE plaintbl WHERE k BETWEEN 1 AND 2 SELECT * FROM rw_src")
     }
-    assert(e2.getMessage.contains("occ"), e2.getMessage)
+    assert(e2.getMessage.contains("no committed version"), e2.getMessage)
+    assert(!new java.io.File(s"$base/nolog/v0").exists())
   }
 }

@@ -14,6 +14,51 @@ import graft.text.TextOps
   */
 class ScaleOpsSpec extends SparkSpec {
 
+  /** v0 of `base/versions` over `base/data`'s files (key stats plus
+    * `extra` columns' min/max); returns the log dir. */
+  private def bootstrap(base: String, keyCol: String, extra: Seq[String] = Nil): String = {
+    val vdir = s"$base/versions"
+    graft.io.VersionLog.commitSnapshot(spark, vdir,
+      graft.io.FileSkipping.buildManifestStats(spark, s"$base/data", keyCol, extra))
+    vdir
+  }
+
+  private def headVersion(vdir: String): Int = graft.io.VersionLog.head(spark, vdir)
+  private def headOf(vdir: String) = graft.io.VersionLog.readVersion(spark, vdir, headVersion(vdir))
+  private def headManifest(vdir: String) =
+    graft.io.VersionLog.manifestAt(spark, vdir, headVersion(vdir)).drop("rewrite_only")
+  private def headFiles(vdir: String): Set[String] =
+    headManifest(vdir).select("file").collect().map(_.getString(0)).toSet
+  private def nameOf(file: String): String = new org.apache.hadoop.fs.Path(file).getName
+
+  /** Top-level parquet files of `dir`: name → (bytes, mtime). */
+  private def topLevelFiles(dir: String): Map[String, (Long, Long)] =
+    new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> (f.length(), f.lastModified())).toMap
+
+  /** Names of every parquet file under `dir`, transaction slots included. */
+  private def parquetNames(dir: String): Set[String] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try {
+      import scala.jdk.CollectionConverters._
+      files.iterator.asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+    } finally files.close()
+  }
+
+  /** The head snapshot's key stats equal a from-scratch scan of exactly
+    * the files it references. */
+  private def assertStatsRebuilt(vdir: String, keyCol: String): Unit = {
+    val maintained = headManifest(vdir)
+      .select("file", "min_key", "max_key", "n_rows", "n_keys").filter(col("n_rows") > 0)
+    val rebuilt = spark.read.parquet(headFiles(vdir).toSeq: _*)
+      .groupBy(input_file_name().as("file"))
+      .agg(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
+        count(lit(1)).as("n_rows"), count(col(keyCol)).as("n_keys"))
+    assert(maintained.exceptAll(rebuilt).count() == 0 && rebuilt.exceptAll(maintained).count() == 0,
+      "snapshot stats diverge from a full rebuild over its files")
+  }
+
   test("Bloom has no false negatives and prunes the non-member stream") {
     val keys = (0L until 5000L).map(k => k * 2654435761L + 17).toArray
     val bits = Bloom.build(keys)
@@ -206,7 +251,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("write-path manifest maintenance equals a full rebuild; pruning stays exact") {
-    import graft.io.FileSkipping
+    import graft.io.{FileSkipping, VersionLog}
     val base = scratch("fskip_incr")
     graft.util.Staging.deleteRecursive(base)
     val orders = graft.io.Tables.orders(spark, sf("sf0.001"))
@@ -214,39 +259,32 @@ class ScaleOpsSpec extends SparkSpec {
     // o_orderdate is TIMESTAMP_NTZ → keep the split as an opaque literal
     val split = orders.agg(percentile_approx(col("o_orderdate"), lit(0.8), lit(100)))
       .head().get(0)
-    // bootstrap: the older 80% as the base table + its manifest
+    // bootstrap: the older 80% as the base table + its v0 snapshot
     orders.filter(col("o_orderdate") < lit(split))
       .repartitionByRange(4, col("o_orderdate")).sortWithinPartitions("o_orderdate")
       .write.mode("overwrite").parquet(s"$base/data")
-    FileSkipping.buildManifest(spark, s"$base/data", "o_orderdate")
-      .write.mode("overwrite").parquet(s"$base/manifest")
-    // steady state: the newest 20% appended WITH incremental maintenance —
-    // only the delta files are ever scanned for stats
-    FileSkipping.appendWithManifest(
-      orders.filter(col("o_orderdate") >= lit(split)).coalesce(1),
-      s"$base/data", s"$base/manifest", "o_orderdate")
-    // the incrementally maintained manifest IS the full rebuild
-    val maintained = spark.read.parquet(s"$base/manifest")
-    val rebuilt = FileSkipping.buildManifest(spark, s"$base/data", "o_orderdate")
-    assert(maintained.count() == rebuilt.count())
-    assert(maintained.exceptAll(rebuilt).count() == 0)
-    assert(rebuilt.exceptAll(maintained).count() == 0)
+    val vdir = bootstrap(base, "o_orderdate")
+    // steady state: the newest 20% appended as one transaction — only the
+    // appended files are ever scanned for stats
+    val v1 = FileSkipping.appendOcc(orders.filter(col("o_orderdate") >= lit(split)).coalesce(1),
+      s"$base/data", vdir, "o_orderdate", "APPEND")
+    // the incrementally maintained snapshot IS the full rebuild
+    assertStatsRebuilt(vdir, "o_orderdate")
     // and pruning through it stays exact over the full (base ∪ delta) range
     val lo = lit(split)
     val hi = lit(split) + expr("INTERVAL 90 DAY")
-    val pruned = FileSkipping.prunedRead(spark, s"$base/data", s"$base/manifest", lo, hi)
+    val pruned = VersionLog.prunedReadVersion(spark, vdir, v1, lo, hi)
       .filter(col("o_orderdate").between(lo, hi))
-    val full = spark.read.parquet(s"$base/data")
-      .filter(col("o_orderdate").between(lo, hi))
+    val full = orders.filter(col("o_orderdate").between(lo, hi))
     assert(pruned.count() > 0 && pruned.count() == full.count())
   }
 
   test("appendWithManifest lists through the Hadoop FileSystem: file: scheme + nested base files") {
     // round-8 review: the java.io.File listing was local-FS-only and
-    // top-level-only. This drives the append through a non-java.io path
-    // string (file: URI — same code path any Hadoop scheme takes) with a
-    // pre-existing NESTED data file that a top-level diff would have
-    // mis-attributed to the append.
+    // top-level-only. This drives the append (appendOcc) through a
+    // non-java.io path string (file: URI — same code path any Hadoop
+    // scheme takes) with a NESTED data file the log never committed: the
+    // append's private slot means no listing diff can claim it.
     import graft.io.FileSkipping
     val localBase = scratch("fskip_hadoop")
     graft.util.Staging.deleteRecursive(localBase)
@@ -257,97 +295,83 @@ class ScaleOpsSpec extends SparkSpec {
       .head().get(0)
     orders.filter(col("o_orderdate") < lit(split))
       .coalesce(2).write.mode("overwrite").parquet(s"$base/data")
-    FileSkipping.buildManifest(spark, s"$base/data", "o_orderdate")
-      .write.mode("overwrite").parquet(s"$base/manifest")
-    val manifestBefore = spark.read.parquet(s"$base/manifest")
-      .select("file").collect().map(_.getString(0)).toSet
-    // plant a nested pre-existing file (a partitioned-layout shape): the
-    // recursive before-listing must see it so the diff can't claim it
+    val vdir = bootstrap(base, "o_orderdate")
+    val filesBefore = headFiles(vdir)
+    // plant a nested pre-existing file (a partitioned-layout shape)
     orders.filter(col("o_orderdate") < lit(split)).limit(10)
       .coalesce(1).write.mode("overwrite").parquet(s"$base/data/nested")
-    FileSkipping.appendWithManifest(
-      orders.filter(col("o_orderdate") >= lit(split)).coalesce(1),
-      s"$base/data", s"$base/manifest", "o_orderdate")
-    val manifestAfter = spark.read.parquet(s"$base/manifest")
-      .select("file").collect().map(_.getString(0)).toSet
-    val gained = manifestAfter -- manifestBefore
+    FileSkipping.appendOcc(orders.filter(col("o_orderdate") >= lit(split)).coalesce(1),
+      s"$base/data", vdir, "o_orderdate", "APPEND")
+    val gained = headFiles(vdir) -- filesBefore
     assert(gained.size == 1, s"expected exactly the 1 appended file, got $gained")
     assert(!gained.exists(_.contains("/nested/")),
       s"nested pre-existing file mis-attributed to the append: $gained")
-    // and the new manifest row's stats admit the delta range
-    val hi = spark.read.parquet(s"$base/manifest")
+    // and the new snapshot row's stats admit the delta range
+    val hi = headManifest(vdir)
       .filter(col("file").isin(gained.toSeq: _*))
       .agg(max("max_key")).head().get(0)
     assert(hi != null)
   }
 
   test("deleteRange retires covered files unread, rewrites only boundary files, keeps the rest byte-identical") {
-    import graft.io.FileSkipping
+    import graft.io.{FileSkipping, VersionLog}
     val localBase = scratch("fskip_delete")
     graft.util.Staging.deleteRecursive(localBase)
     val orders = graft.io.Tables.orders(spark, sf("sf0.01"))
       .select("o_orderkey", "o_orderdate", "o_totalprice")
     orders.repartitionByRange(16, col("o_orderdate")).sortWithinPartitions("o_orderdate")
       .write.mode("overwrite").parquet(s"$localBase/data")
-    FileSkipping.buildManifest(spark, s"$localBase/data", "o_orderdate")
-      .write.mode("overwrite").parquet(s"$localBase/manifest")
-    def snapshot(): Map[String, (Long, Long)] =
-      new java.io.File(s"$localBase/data").listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> (f.length(), f.lastModified())).toMap
-    val before = snapshot()
+    val vdir = bootstrap(localBase, "o_orderdate")
+    val before = topLevelFiles(s"$localBase/data")
     val lo = lit("1995-01-01").cast("timestamp")
     val hi = lit("1995-12-31").cast("timestamp")
     val expected = orders.filter(!(col("o_orderdate") >= lo && col("o_orderdate") <= hi))
     val expectedCount = expected.count()
-    val (retired, rewritten) = FileSkipping.deleteRange(
-      spark, s"$localBase/data", s"$localBase/manifest", "o_orderdate", lo, hi)
+    val (v1, retired, rewritten) = FileSkipping.deleteRangeOcc(
+      spark, s"$localBase/data", vdir, "o_orderdate", lo, hi, "DEL")
     // a ~mid-table year over 16 range-sorted files: some files fully
     // covered (retired unread), at most the two boundary files rewritten
     assert(retired >= 1, s"no file was fully covered (retired=$retired)")
     assert(rewritten <= 2, s"more than boundary files rewritten: $rewritten")
-    val after = snapshot()
-    // survivors byte-identical (same name, size, mtime); retired gone
-    val survivors = before.keySet.intersect(after.keySet)
-    assert(survivors.forall(k => before(k) == after(k)),
-      "a file outside the delete range was modified")
+    // MVCC: the mutation deletes nothing — every pre-delete file is still
+    // on disk byte-identical (v0 reads it); the head drops exactly the
+    // retired and rewritten ones
+    assert(topLevelFiles(s"$localBase/data") == before, "the delete touched a file on disk")
+    val survivors = before.keySet.intersect(headFiles(vdir).map(nameOf))
     assert(before.size - survivors.size == retired + rewritten)
-    // table content == orders minus the range, and the manifest agrees
-    // with a full rebuild over the surviving files
-    val remaining = spark.read.parquet(s"$localBase/data")
+    // head content == orders minus the range, and the snapshot's stats
+    // agree with a full rebuild over its files
+    val remaining = headOf(vdir)
     assert(remaining.count() == expectedCount)
     assert(remaining.exceptAll(expected).count() == 0)
-    val maintained = spark.read.parquet(s"$localBase/manifest")
-      .filter(col("n_rows") > 0)
-    val rebuilt = FileSkipping.buildManifest(spark, s"$localBase/data", "o_orderdate")
-      .filter(col("n_rows") > 0)
-    assert(maintained.exceptAll(rebuilt).count() == 0 &&
-      rebuilt.exceptAll(maintained).count() == 0,
-      "rewritten manifest diverges from a full rebuild")
-    // and pruned reads through the rewritten manifest stay exact
+    assertStatsRebuilt(vdir, "o_orderdate")
+    // VACUUM is the physical delete: the retired and rewritten originals
+    // go, the survivors stay byte-identical
+    val (deleted, dropped) = VersionLog.vacuum(spark, s"$localBase/data", vdir, 1)
+    assert(deleted == retired + rewritten && dropped == 1, s"vacuum: ($deleted, $dropped)")
+    val afterVacuum = topLevelFiles(s"$localBase/data")
+    assert(afterVacuum.keySet == survivors && survivors.forall(k => afterVacuum(k) == before(k)),
+      "vacuum deleted a live file or kept a dead one")
+    // and pruned reads through the head stay exact
     val lo2 = lit("1996-01-01").cast("timestamp")
     val hi2 = lit("1996-06-30").cast("timestamp")
-    val pruned = FileSkipping.prunedRead(spark, s"$localBase/data", s"$localBase/manifest", lo2, hi2)
+    val pruned = VersionLog.prunedReadVersion(spark, vdir, v1, lo2, hi2)
       .filter(col("o_orderdate").between(lo2, hi2))
     val full = remaining.filter(col("o_orderdate").between(lo2, hi2))
     assert(pruned.count() == full.count() && pruned.count() > 0)
   }
 
   test("mergeKeyed rewrites only range-hit files, inserts beyond-range keys, keeps the rest byte-identical") {
-    import graft.io.FileSkipping
+    import graft.io.{FileSkipping, VersionLog}
     val localBase = scratch("fskip_merge")
     graft.util.Staging.deleteRecursive(localBase)
     val orders = graft.io.Tables.orders(spark, sf("sf0.01"))
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
     orders.repartitionByRange(16, col("o_orderkey")).sortWithinPartitions("o_orderkey")
       .write.mode("overwrite").parquet(s"$localBase/data")
-    FileSkipping.buildManifest(spark, s"$localBase/data", "o_orderkey")
-      .write.mode("overwrite").parquet(s"$localBase/manifest")
-    def snapshot(): Map[String, (Long, Long)] =
-      new java.io.File(s"$localBase/data").listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> (f.length(), f.lastModified())).toMap
-    val before = snapshot()
+    val vdir = bootstrap(localBase, "o_orderkey")
+    val before = topLevelFiles(s"$localBase/data")
+    val v0Files = headFiles(vdir)
     // updates clustered in a narrow key band (hits 1–2 of 16 range-sorted
     // files) + one insert beyond every file's range
     val updates = orders.filter(col("o_orderkey").between(1000, 1030))
@@ -357,30 +381,27 @@ class ScaleOpsSpec extends SparkSpec {
       lit(100000000L).as("o_orderkey"), lit("X-INS").as("o_orderpriority"),
       lit(1.25).as("o_totalprice"))
     val delta = updates.unionByName(inserts)
-    val (rewritten, appended) = FileSkipping.mergeKeyed(
-      spark, s"$localBase/data", s"$localBase/manifest", "o_orderkey", delta)
+    val v1 = FileSkipping.mergeKeyedOcc(spark, s"$localBase/data", vdir, "o_orderkey",
+      delta, "MERGE")
+    val rewritten = (v0Files -- headFiles(vdir)).size
+    val appended = (headFiles(vdir) -- v0Files).size
     assert(rewritten >= 1 && rewritten <= 2,
       s"a 31-key band over 16 range-sorted files should hit 1-2 files, hit $rewritten")
     assert(appended >= 1)
-    val after = snapshot()
-    val survivors = before.keySet.intersect(after.keySet)
-    assert(survivors.size == before.size - rewritten,
-      s"expected ${before.size - rewritten} untouched files, got ${survivors.size}")
-    assert(survivors.forall(k => before(k) == after(k)),
-      "a file outside the merge's key range was modified")
+    // untouched files stay in the head byte-identical; nothing was deleted
+    assert(topLevelFiles(s"$localBase/data") == before,
+      "the merge modified or deleted a file on disk")
+    assert(before.keySet.intersect(headFiles(vdir).map(nameOf)).size == before.size - rewritten)
     // content == the set-theoretic merge
     val expected = orders.filter(!col("o_orderkey").between(1000, 1030))
       .unionByName(updates).unionByName(inserts)
-    val merged = spark.read.parquet(s"$localBase/data")
+    val merged = headOf(vdir)
     assert(merged.count() == expected.count())
     assert(merged.exceptAll(expected).count() == 0 &&
       expected.exceptAll(merged).count() == 0)
-    // manifest == full rebuild; pruned reads stay exact (incl. the insert)
-    val maintained = spark.read.parquet(s"$localBase/manifest")
-    val rebuilt = FileSkipping.buildManifest(spark, s"$localBase/data", "o_orderkey")
-    assert(maintained.exceptAll(rebuilt).count() == 0 &&
-      rebuilt.exceptAll(maintained).count() == 0)
-    val pruned = FileSkipping.prunedRead(spark, s"$localBase/data", s"$localBase/manifest",
+    // snapshot stats == full rebuild; pruned reads stay exact (incl. the insert)
+    assertStatsRebuilt(vdir, "o_orderkey")
+    val pruned = VersionLog.prunedReadVersion(spark, vdir, v1,
         lit(99999999L), lit(100000001L))
       .filter(col("o_orderkey").between(99999999L, 100000001L))
     assert(pruned.count() == 1 && pruned.head.getString(1) == "X-INS")
@@ -393,24 +414,19 @@ class ScaleOpsSpec extends SparkSpec {
     val orders = graft.io.Tables.orders(spark, sf("sf0.001"))
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
     orders.coalesce(2).write.mode("overwrite").parquet(s"$localBase/data")
-    FileSkipping.buildManifest(spark, s"$localBase/data", "o_orderkey")
-      .write.mode("overwrite").parquet(s"$localBase/manifest")
+    val vdir = bootstrap(localBase, "o_orderkey")
+    val v0Files = headFiles(vdir)
     val inserts = spark.range(3).select(
       (col("id") + 200000000L).as("o_orderkey"), lit("X-INS").as("o_orderpriority"),
       lit(2.5).as("o_totalprice"))
-    val (rewritten, appended) = FileSkipping.mergeKeyed(
-      spark, s"$localBase/data", s"$localBase/manifest", "o_orderkey", inserts)
-    assert(rewritten == 0 && appended >= 1)
-    val merged = spark.read.parquet(s"$localBase/data")
-    assert(merged.count() == orders.count() + 3)
-    val maintained = spark.read.parquet(s"$localBase/manifest")
-    val rebuilt = FileSkipping.buildManifest(spark, s"$localBase/data", "o_orderkey")
-    assert(maintained.exceptAll(rebuilt).count() == 0 &&
-      rebuilt.exceptAll(maintained).count() == 0)
+    FileSkipping.mergeKeyedOcc(spark, s"$localBase/data", vdir, "o_orderkey", inserts, "INS")
+    assert(v0Files.subsetOf(headFiles(vdir)) && headFiles(vdir).size > v0Files.size)
+    assert(headOf(vdir).count() == orders.count() + 3)
+    assertStatsRebuilt(vdir, "o_orderkey")
   }
 
   test("compactSmall folds only sub-threshold files, leaves big files byte-identical, output is range-clustered") {
-    import graft.io.FileSkipping
+    import graft.io.{FileSkipping, VersionLog}
     val localBase = scratch("fskip_compact")
     graft.util.Staging.deleteRecursive(localBase)
     val orders = graft.io.Tables.orders(spark, sf("sf0.01"))
@@ -423,53 +439,44 @@ class ScaleOpsSpec extends SparkSpec {
     orders.filter(col("o_orderdate") >= lit(split))
       .repartitionByRange(12, col("o_orderdate")).sortWithinPartitions("o_orderdate")
       .write.mode("append").parquet(s"$localBase/data")
-    FileSkipping.buildManifest(spark, s"$localBase/data", "o_orderdate")
-      .write.mode("overwrite").parquet(s"$localBase/manifest")
-    def snapshot(): Map[String, (Long, Long)] =
-      new java.io.File(s"$localBase/data").listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> (f.length(), f.lastModified())).toMap
-    val before = snapshot()
+    val vdir = bootstrap(localBase, "o_orderdate")
+    val v0Files = headFiles(vdir)
+    val before = topLevelFiles(s"$localBase/data")
     val bigName = before.maxBy(_._2._1)._1
     val smallTotal = before.filterNot(_._1 == bigName).values.map(_._1).sum
     // threshold sits between the big file and every micro-batch file;
     // target forces MULTIPLE output bins so disjointness is non-trivial
-    val (compacted, written) = FileSkipping.compactSmall(
-      spark, s"$localBase/data", s"$localBase/manifest", "o_orderdate",
-      smallBytes = before(bigName)._1, targetBytes = math.max(1, smallTotal / 3))
+    val (v1, compacted, written) = FileSkipping.compactSmallOcc(
+      spark, s"$localBase/data", vdir, "o_orderdate",
+      smallBytes = before(bigName)._1, targetBytes = math.max(1, smallTotal / 3), "CPT")
     assert(compacted == 12, s"expected the 12 micro-batch files compacted, got $compacted")
     assert(written >= 2 && written < 12, s"expected a handful of bins, got $written")
-    val after = snapshot()
-    assert(after(bigName) == before(bigName), "the big file was touched")
-    assert(after.size == before.size - compacted + written)
+    assert(topLevelFiles(s"$localBase/data") == before, "compaction touched a file on disk")
+    assert(headFiles(vdir).map(nameOf).contains(bigName), "the big file left the head")
+    assert(headFiles(vdir).size == v0Files.size - compacted + written)
     // pure layout change: content identical
-    val now = spark.read.parquet(s"$localBase/data")
+    val now = headOf(vdir)
     assert(now.count() == orders.count())
     assert(now.exceptAll(orders).count() == 0 && orders.exceptAll(now).count() == 0)
-    // manifest == rebuild
-    val maintained = spark.read.parquet(s"$localBase/manifest")
-    val rebuilt = FileSkipping.buildManifest(spark, s"$localBase/data", "o_orderdate")
-    assert(maintained.exceptAll(rebuilt).count() == 0 &&
-      rebuilt.exceptAll(maintained).count() == 0)
+    assertStatsRebuilt(vdir, "o_orderdate")
     // replacement files are keyspace-disjoint (range exchange): sorted by
     // min_key, each file's max <= the next file's min (equal keys may
     // share a boundary)
-    val freshNames = after.keySet -- before.keySet
-    val spans = maintained
-      .filter(col("file").isin(freshNames.map(n => s"file://$localBase/data/$n").toSeq: _*))
+    val spans = headManifest(vdir)
+      .filter(!col("file").isin(v0Files.toSeq: _*))
       .orderBy("min_key")
       .select(col("min_key").cast("string"), col("max_key").cast("string")).collect()
       .map(r => (r.getString(0), r.getString(1)))  // ISO text orders like the timestamp
-    assert(spans.length == written, s"fresh manifest rows ${spans.length} != written $written")
+    assert(spans.length == written, s"fresh snapshot rows ${spans.length} != written $written")
     spans.sliding(2).foreach {
       case Array((_, hi), (lo2, _)) =>
         assert(hi <= lo2, s"compacted files overlap: $hi > $lo2")
       case _ =>
     }
-    // pruning through the folded manifest stays exact
+    // pruning through the folded snapshot stays exact
     val lo = lit(split)
     val hi = lit(split) + expr("INTERVAL 60 DAY")
-    val pruned = FileSkipping.prunedRead(spark, s"$localBase/data", s"$localBase/manifest", lo, hi)
+    val pruned = VersionLog.prunedReadVersion(spark, vdir, v1, lo, hi)
       .filter(col("o_orderdate").between(lo, hi))
     val full = now.filter(col("o_orderdate").between(lo, hi))
     assert(pruned.count() == full.count() && pruned.count() > 0)
@@ -489,21 +496,21 @@ class ScaleOpsSpec extends SparkSpec {
     assert(VersionLog.commit(spark, vdir, s"$localBase/manifest") == 0)
     val updates = orders.filter(col("o_orderkey") % 53 === 0)
       .withColumn("o_orderpriority", lit("X-UPD"))
-    FileSkipping.mergeKeyed(spark, s"$localBase/data", s"$localBase/manifest",
-      "o_orderkey", updates, versionLog = Some(vdir))
-    FileSkipping.deleteRange(spark, s"$localBase/data", s"$localBase/manifest",
-      "o_orderkey", lit(1L), lit(300L), versionLog = Some(vdir))
+    FileSkipping.mergeKeyedOcc(spark, s"$localBase/data", vdir, "o_orderkey", updates, "M1")
+    FileSkipping.deleteRangeOcc(spark, s"$localBase/data", vdir, "o_orderkey",
+      lit(1L), lit(300L), "D2")
     assert(VersionLog.head(spark, vdir) == 2)
     // snapshot isolation: v0 replays the ORIGINAL table although the head
     // has retired its files twice since
     val v0 = VersionLog.readVersion(spark, vdir, 0)
     assert(v0.count() == orders.count())
     assert(v0.exceptAll(orders).count() == 0 && orders.exceptAll(v0).count() == 0)
-    // head == the set-theoretic expectation, and == the live manifest's view
+    // head == the set-theoretic expectation, and == the synced flat manifest
     val expected = orders.filter(col("o_orderkey") % 53 =!= 0).unionByName(updates)
       .filter(!col("o_orderkey").between(1L, 300L))
     val headV = VersionLog.readVersion(spark, vdir, 2)
     assert(headV.exceptAll(expected).count() == 0 && expected.exceptAll(headV).count() == 0)
+    VersionLog.syncLive(spark, vdir, s"$localBase/manifest")
     val live = spark.read.parquet(s"$localBase/manifest")
     // modulo the per-commit classification column snapshots carry (log
     // metadata, not manifest data — syncLive strips it the same way)
@@ -511,17 +518,13 @@ class ScaleOpsSpec extends SparkSpec {
     assert(live.exceptAll(snap).count() == 0 && snap.exceptAll(live).count() == 0)
     // vacuum to head only: both old versions dropped, dead files really
     // deleted, every head-referenced file survives, head still replays
-    def onDisk(): Set[String] =
-      new java.io.File(s"$localBase/data").listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    val beforeVacuum = onDisk()
-    val headFiles = snap.select("file").collect()
-      .map(f => new java.io.File(f.getString(0).stripPrefix("file:")).getName).toSet
+    val beforeVacuum = parquetNames(s"$localBase/data")
+    val headNames = headFiles(vdir).map(nameOf)
     val (deadCount, droppedVersions) = VersionLog.vacuum(spark, s"$localBase/data", vdir, 1)
     assert(droppedVersions == 2 && deadCount > 0)
     assert(!new java.io.File(s"$vdir/v0").exists() && !new java.io.File(s"$vdir/v1").exists())
-    val afterVacuum = onDisk()
-    assert(afterVacuum == headFiles, "vacuum left orphans or deleted a live file")
+    val afterVacuum = parquetNames(s"$localBase/data")
+    assert(afterVacuum == headNames, "vacuum left orphans or deleted a live file")
     assert((beforeVacuum -- afterVacuum).size == deadCount)
     val replay = VersionLog.readVersion(spark, vdir, 2)
     assert(replay.exceptAll(expected).count() == 0 && expected.exceptAll(replay).count() == 0)
@@ -529,8 +532,8 @@ class ScaleOpsSpec extends SparkSpec {
     // vacuum must work after older version dirs are already gone
     // (regression: the first cut read manifests for ALL versions < cutoff,
     // crashing on the deleted v0)
-    FileSkipping.deleteRange(spark, s"$localBase/data", s"$localBase/manifest",
-      "o_orderkey", lit(400L), lit(500L), versionLog = Some(vdir)) // v3
+    FileSkipping.deleteRangeOcc(spark, s"$localBase/data", vdir, "o_orderkey",
+      lit(400L), lit(500L), "D3") // v3
     val (dead2, dropped2) = VersionLog.vacuum(spark, s"$localBase/data", vdir, 1)
     assert(dropped2 == 1, s"second vacuum should drop exactly v2, dropped $dropped2")
     val expected2 = expected.filter(!col("o_orderkey").between(400L, 500L))
@@ -551,18 +554,17 @@ class ScaleOpsSpec extends SparkSpec {
       .withColumn("o_orderkey",
         when(col("o_orderkey") % 13 === 0, lit(null)).otherwise(col("o_orderkey")))
     src.coalesce(4).write.mode("overwrite").parquet(s"$localBase/data")
-    FileSkipping.buildManifest(spark, s"$localBase/data", "o_orderkey")
-      .write.mode("overwrite").parquet(s"$localBase/manifest")
+    val vdir = bootstrap(localBase, "o_orderkey")
     val nNull = src.filter(col("o_orderkey").isNull).count()
     assert(nNull > 0, "fixture lost its null keys")
-    FileSkipping.deleteRange(spark, s"$localBase/data", s"$localBase/manifest",
-      "o_orderkey", lit(200L), lit(900L), cdcDir = Some(s"$localBase/cdc"))
-    val survivors = spark.read.parquet(s"$localBase/data")
+    FileSkipping.deleteRangeOcc(spark, s"$localBase/data", vdir, "o_orderkey",
+      lit(200L), lit(900L), "DEL", cdcDir = Some(s"$localBase/cdc"))
+    val survivors = headOf(vdir)
     // regression: the bare !(k >= lo && k <= hi) filter silently dropped
     // null-key rows from every rewritten boundary file
     assert(survivors.filter(col("o_orderkey").isNull).count() == nNull,
       "null-key rows were lost in the boundary rewrite")
-    val feed = spark.read.parquet(s"$localBase/cdc")
+    val feed = FileSkipping.readCommittedFeeds(spark, s"$localBase/cdc")
     assert(feed.filter(col("o_orderkey").isNull).count() == 0)
     val rebuilt = survivors.unionByName(feed.drop("op"))
     assert(rebuilt.exceptAll(src).count() == 0 && src.exceptAll(rebuilt).count() == 0)
@@ -584,48 +586,45 @@ class ScaleOpsSpec extends SparkSpec {
     fileA.coalesce(1).write.mode("overwrite").parquet(s"$localBase/data")
     fileB.coalesce(1).write.mode("append").parquet(s"$localBase/data")
     fileC.coalesce(1).write.mode("append").parquet(s"$localBase/data")
-    FileSkipping.buildManifest(spark, s"$localBase/data", "k")
-      .write.mode("overwrite").parquet(s"$localBase/manifest")
+    val vdir = bootstrap(localBase, "k")
     val nNull = fileA.filter(col("k").isNull).count()
     assert(nNull > 0)
-    val (retired, rewritten) = FileSkipping.deleteRange(
-      spark, s"$localBase/data", s"$localBase/manifest", "k",
-      lit(0L), lit(1500L), cdcDir = Some(s"$localBase/cdc"))
+    val (_, retired, rewritten) = FileSkipping.deleteRangeOcc(
+      spark, s"$localBase/data", vdir, "k", lit(0L), lit(1500L), "DEL",
+      cdcDir = Some(s"$localBase/cdc"))
     // regression (round-9 review): file A was retired UNREAD because its
     // non-null [min,max] is covered — deleting its null rows and omitting
     // them from the CDC feed. n_keys < n_rows now demotes it to the
     // rewrite path; the provably null-free file B still retires unread.
     assert(retired == 1, s"expected only the null-free covered file retired unread, got $retired")
     assert(rewritten == 1, s"expected the null-bearing covered file rewritten, got $rewritten")
-    val survivors = spark.read.parquet(s"$localBase/data")
+    val survivors = headOf(vdir)
     assert(survivors.filter(col("k").isNull).count() == nNull,
       "null-key rows were lost from a covered file")
     assert(survivors.filter(col("k").isNotNull && col("k") < 2000L).count() == 0)
     // the feed holds exactly the deleted (non-null, in-range) rows, so
     // survivors ∪ feed == source exactly once — including A's null rows
-    val feed = spark.read.parquet(s"$localBase/cdc")
+    val feed = FileSkipping.readCommittedFeeds(spark, s"$localBase/cdc")
     val src = fileA.unionByName(fileB).unionByName(fileC)
     val rebuilt = survivors.unionByName(feed.drop("op"))
     assert(rebuilt.exceptAll(src).count() == 0 && src.exceptAll(rebuilt).count() == 0)
   }
 
   test("mergeKeyed rejects a duplicate-key delta before touching the table") {
-    import graft.io.FileSkipping
+    import graft.io.{FileSkipping, VersionLog}
     val localBase = scratch("fskip_dupdelta")
     graft.util.Staging.deleteRecursive(localBase)
     spark.range(100).select(col("id").as("k"), lit(1.0).as("v"))
       .coalesce(2).write.mode("overwrite").parquet(s"$localBase/data")
-    FileSkipping.buildManifest(spark, s"$localBase/data", "k")
-      .write.mode("overwrite").parquet(s"$localBase/manifest")
-    val manBefore = spark.read.parquet(s"$localBase/manifest").collect().toSet
+    val vdir = bootstrap(localBase, "k")
     val dup = spark.range(2).select(lit(7L).as("k"), col("id").cast("double").as("v"))
     val e = intercept[IllegalArgumentException] {
-      FileSkipping.mergeKeyed(spark, s"$localBase/data", s"$localBase/manifest", "k", dup)
+      FileSkipping.mergeKeyedOcc(spark, s"$localBase/data", vdir, "k", dup, "DUP")
     }
     assert(e.getMessage.contains("one row per"), e.getMessage)
-    // the guard runs before any write: table and manifest untouched
-    assert(spark.read.parquet(s"$localBase/data").count() == 100)
-    assert(spark.read.parquet(s"$localBase/manifest").collect().toSet == manBefore)
+    // the guard runs before any write: no slot, no commit, table untouched
+    assert(!new java.io.File(s"$localBase/data/txn-DUP").exists())
+    assert(VersionLog.head(spark, vdir) == 0 && headOf(vdir).count() == 100)
   }
 
   test("bloom manifest rejects non-integral keys and survives null keys") {
@@ -678,62 +677,59 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("multi-column manifest survives MERGE, delete, and compaction: folded == rebuild, 2D pruning stays exact") {
-    import graft.io.FileSkipping
+    import graft.io.{FileSkipping, VersionLog}
     val localBase = scratch("fskip_multifold")
     graft.util.Staging.deleteRecursive(localBase)
     // k range-sorted into 10 files; x = k/1000 rides along (tight per-file
-    // extents, so a 2D manifest has real pruning power on BOTH columns)
+    // extents, so 2D snapshot stats have real pruning power on BOTH columns)
     val src = spark.range(10000).select(col("id").as("k"),
       (col("id") / 1000).cast("long").as("x"), (col("id") % 997).cast("double").as("v"))
     src.repartitionByRange(10, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$localBase/data")
-    FileSkipping.buildManifest(spark, s"$localBase/data", "k")
-      .write.mode("overwrite").parquet(s"$localBase/manifest")
-    FileSkipping.buildManifestMulti(spark, s"$localBase/data", Seq("k", "x"))
-      .write.mode("overwrite").parquet(s"$localBase/multi")
+    // the snapshots carry min/max for k AND x: every commit recomputes
+    // them for the files it writes
+    val vdir = bootstrap(localBase, "k", Seq("k", "x"))
     def assertMultiFresh(): Unit = {
-      val folded = spark.read.parquet(s"$localBase/multi")
-      val rebuilt = FileSkipping.buildManifestMulti(spark, s"$localBase/data", Seq("k", "x"))
+      val folded = headManifest(vdir).select("file", "min_k", "max_k", "min_x", "max_x")
+      val rebuilt = spark.read.parquet(headFiles(vdir).toSeq: _*)
+        .groupBy(input_file_name().as("file"))
+        .agg(min("k"), max("k"), min("x"), max("x"))
       assert(folded.exceptAll(rebuilt).count() == 0 && rebuilt.exceptAll(folded).count() == 0,
-        "multi-column manifest diverged from a full rebuild")
+        "multi-column snapshot stats diverged from a full rebuild")
     }
+    def box(ranges: (String, Long, Long)*) =
+      FileSkipping.prunedReadVersionMulti(spark, vdir, VersionLog.head(spark, vdir),
+        ranges.map { case (c, lo, hi) => (c, lit(lo), lit(hi)) })
     // MERGE (the round-9 staleness case): updates in one band + an insert
-    // carrying a brand-new x extent the stale manifest could never admit
+    // carrying a brand-new x extent stale stats could never admit
     val delta = src.filter(col("k").between(1500, 1540))
       .withColumn("v", col("v") * 2)
       .unionByName(spark.range(1).select(lit(1000000L).as("k"), lit(999L).as("x"),
         lit(3.5).as("v")))
-    FileSkipping.mergeKeyed(spark, s"$localBase/data", s"$localBase/manifest", "k",
-      delta, multiManifest = Some(s"$localBase/multi"))
+    FileSkipping.mergeKeyedOcc(spark, s"$localBase/data", vdir, "k", delta, "M")
     assertMultiFresh()
-    // 2D pruning stays exact AND still prunes after the fold
-    val pruned = FileSkipping.prunedReadMulti(spark, s"$localBase/data", s"$localBase/multi",
-        Seq(("x", lit(2L), lit(3L)), ("k", lit(2000L), lit(3500L))))
+    // 2D pruning stays exact AND still prunes after the commit
+    val pruned = box(("x", 2L, 3L), ("k", 2000L, 3500L))
       .filter(col("x").between(2L, 3L) && col("k").between(2000L, 3500L))
-    val full = spark.read.parquet(s"$localBase/data")
+    val full = headOf(vdir)
       .filter(col("x").between(2L, 3L) && col("k").between(2000L, 3500L))
     assert(pruned.count() == full.count() && pruned.count() > 0)
-    val opened = FileSkipping.prunedReadMulti(spark, s"$localBase/data", s"$localBase/multi",
-      Seq(("x", lit(2L), lit(3L)))).inputFiles.length
-    val total = spark.read.parquet(s"$localBase/multi").count()
-    assert(opened < total, s"fold destroyed pruning power: opened $opened of $total")
-    // the merged insert's new extent is findable through the folded manifest
-    val ins = FileSkipping.prunedReadMulti(spark, s"$localBase/data", s"$localBase/multi",
-        Seq(("x", lit(999L), lit(999L))))
-      .filter(col("x") === 999L)
-    assert(ins.count() == 1)
-    // range delete and compaction fold it too
-    FileSkipping.deleteRange(spark, s"$localBase/data", s"$localBase/manifest", "k",
-      lit(4200L), lit(5300L), multiManifest = Some(s"$localBase/multi"))
+    val opened = box(("x", 2L, 3L)).inputFiles.length
+    val total = headFiles(vdir).size
+    assert(opened < total, s"the commit destroyed pruning power: opened $opened of $total")
+    // the merged insert's new extent is findable through the snapshot stats
+    assert(box(("x", 999L, 999L)).filter(col("x") === 999L).count() == 1)
+    // range delete and compaction carry the stats too
+    FileSkipping.deleteRangeOcc(spark, s"$localBase/data", vdir, "k",
+      lit(4200L), lit(5300L), "D")
     assertMultiFresh()
-    FileSkipping.compactSmall(spark, s"$localBase/data", s"$localBase/manifest", "k",
-      smallBytes = Long.MaxValue, targetBytes = Long.MaxValue,
-      multiManifest = Some(s"$localBase/multi"))
+    FileSkipping.compactSmallOcc(spark, s"$localBase/data", vdir, "k",
+      smallBytes = Long.MaxValue, targetBytes = Long.MaxValue, "C")
     assertMultiFresh()
-    // content is never touched by the manifest machinery
+    // content is never touched by the stats machinery
     val expected = src.filter(!col("k").between(1500, 1540)).unionByName(delta)
       .filter(!col("k").between(4200L, 5300L))
-    val now = spark.read.parquet(s"$localBase/data")
+    val now = headOf(vdir)
     assert(now.exceptAll(expected).count() == 0 && expected.exceptAll(now).count() == 0)
   }
 
@@ -750,8 +746,8 @@ class ScaleOpsSpec extends SparkSpec {
     VersionLog.commit(spark, vdir, s"$localBase/manifest") // v0
     // a later delete retires files from the head; the pinned pruned read
     // must still see v0's rows AND still prune v0's file set
-    FileSkipping.deleteRange(spark, s"$localBase/data", s"$localBase/manifest", "k",
-      lit(2000L), lit(6000L), versionLog = Some(vdir)) // v1
+    FileSkipping.deleteRangeOcc(spark, s"$localBase/data", vdir, "k",
+      lit(2000L), lit(6000L), "DEL") // v1
     val pruned = VersionLog.prunedReadVersion(spark, vdir, 0, lit(3000L), lit(3499L))
     assert(pruned.inputFiles.length < 16,
       s"pinned pruned read opened ${pruned.inputFiles.length} of 16 files")
@@ -799,15 +795,14 @@ class ScaleOpsSpec extends SparkSpec {
     val orders = graft.io.Tables.orders(spark, sf("sf0.001"))
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
     orders.coalesce(4).write.mode("overwrite").parquet(s"$localBase/data")
-    FileSkipping.buildManifest(spark, s"$localBase/data", "o_orderkey")
-      .write.mode("overwrite").parquet(s"$localBase/manifest")
+    val vdir = bootstrap(localBase, "o_orderkey")
     val updates = orders.filter(col("o_orderkey") % 53 === 0)
       .withColumn("o_totalprice", col("o_totalprice") * 2)
     val inserts = spark.range(2).select((col("id") + 300000000L).as("o_orderkey"),
       lit("X-INS").as("o_orderpriority"), lit(1.5).as("o_totalprice"))
-    FileSkipping.mergeKeyed(spark, s"$localBase/data", s"$localBase/manifest",
-      "o_orderkey", updates.unionByName(inserts), cdcDir = Some(s"$localBase/cdc"))
-    val cdc = spark.read.parquet(s"$localBase/cdc").cache()
+    FileSkipping.mergeKeyedOcc(spark, s"$localBase/data", vdir, "o_orderkey",
+      updates.unionByName(inserts), "CDC", cdcDir = Some(s"$localBase/cdc"))
+    val cdc = FileSkipping.readCommittedFeeds(spark, s"$localBase/cdc").cache()
     try {
       val pre = cdc.filter(col("op") === "update_preimage")
       val post = cdc.filter(col("op") === "update_postimage")
@@ -821,7 +816,7 @@ class ScaleOpsSpec extends SparkSpec {
       assert(ins.count() == 2 &&
         ins.filter(col("o_orderkey") >= 300000000L).count() == 2)
       // the feed replays the table delta: base + post + ins - pre == merged table
-      val merged = spark.read.parquet(s"$localBase/data")
+      val merged = headOf(vdir)
       val replayed = orders.unionByName(post.drop("op")).unionByName(ins.drop("op"))
         .exceptAll(pre.drop("op"))
       assert(merged.exceptAll(replayed).count() == 0 && replayed.exceptAll(merged).count() == 0)
@@ -836,64 +831,62 @@ class ScaleOpsSpec extends SparkSpec {
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
     orders.repartitionByRange(8, col("o_orderkey")).sortWithinPartitions("o_orderkey")
       .write.mode("overwrite").parquet(s"$localBase/data")
-    FileSkipping.buildManifest(spark, s"$localBase/data", "o_orderkey")
-      .write.mode("overwrite").parquet(s"$localBase/manifest")
-    val (retired, rewritten) = FileSkipping.deleteRange(
-      spark, s"$localBase/data", s"$localBase/manifest", "o_orderkey",
-      lit(200L), lit(900L), cdcDir = Some(s"$localBase/cdc"))
+    val vdir = bootstrap(localBase, "o_orderkey")
+    val (_, retired, rewritten) = FileSkipping.deleteRangeOcc(
+      spark, s"$localBase/data", vdir, "o_orderkey",
+      lit(200L), lit(900L), "DEL", cdcDir = Some(s"$localBase/cdc"))
     assert(retired + rewritten > 0, "delete touched nothing — feed not exercised")
-    val feed = spark.read.parquet(s"$localBase/cdc")
+    val feed = FileSkipping.readCommittedFeeds(spark, s"$localBase/cdc")
     assert(feed.select("op").distinct().collect().map(_.getString(0)).toSeq == Seq("delete"))
     val expectedDeleted = orders.filter(col("o_orderkey").between(200L, 900L))
     assert(feed.count() == expectedDeleted.count() && feed.count() > 0)
     assert(feed.drop("op").exceptAll(expectedDeleted).count() == 0)
     // survivors ∪ feed == the original table, row-exact
-    val survivors = spark.read.parquet(s"$localBase/data")
+    val survivors = headOf(vdir)
     val rebuilt = survivors.unionByName(feed.drop("op"))
     assert(rebuilt.exceptAll(orders).count() == 0 && orders.exceptAll(rebuilt).count() == 0)
   }
 
   test("streaming ingest slots land exactly-once through a mid-batch crash; manifest == rebuild") {
-    import graft.io.FileSkipping
+    import org.apache.spark.sql.types._
+    import graft.io.{FileSkipping, VersionLog}
     import graft.streaming.Streams
     val d = sf("sf0.001")
     val localBase = scratch("fskip_ingest")
     graft.util.Staging.deleteRecursive(localBase)
     val src = Streams.prepareLateArrivalFiles(spark, d)
-    // crash mid-batch-1: slot b1 holds partial-then-replaced output, and
-    // the harness itself asserts the commit log gained batch 1 only
-    // after the recovered run
+    // v0: an EMPTY table — the first batch's files define the schema
+    val vdir = s"$localBase/versions"
+    VersionLog.commitSnapshot(spark, vdir, spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("file", StringType), StructField("min_key", TimestampType),
+        StructField("max_key", TimestampType), StructField("n_rows", LongType),
+        StructField("n_keys", LongType)))))
+    // crash mid-batch-1: slot b1 holds partial-then-replaced output, the
+    // replay commits it once (its _BATCH_1 token), and the harness itself
+    // asserts the commit log gained batch 1 only after the recovered run
     Streams.drainWithCrashRecoveryInto(
       () => Streams.lateArrivalStream(spark, src), "fskip_ingest", "append", 1) {
-      (b, id) => FileSkipping.ingestBatch(b, id, s"$localBase/data", s"$localBase/manifest", "ts")
+      (b, id) => FileSkipping.ingestBatchOcc(b, id, s"$localBase/data", "ts", vdir); ()
     }
-    // one slot pair per micro-batch
+    // one slot and one commit per micro-batch
     (0 to 2).foreach { i =>
       assert(new java.io.File(s"$localBase/data/b$i").isDirectory, s"missing data slot b$i")
-      assert(new java.io.File(s"$localBase/manifest/b$i").isDirectory, s"missing manifest slot b$i")
     }
+    assert(VersionLog.head(spark, vdir) == 3, "the crash replay committed a batch twice")
     // exactly-once: the table equals the staged source, no dup, no loss
     val staged = spark.read.parquet(src)
-    val table = spark.read.option("recursiveFileLookup", "true").parquet(s"$localBase/data")
+    val table = headOf(vdir)
     assert(table.count() == staged.count())
     assert(table.exceptAll(staged).count() == 0 && staged.exceptAll(table).count() == 0)
-    // handoff: flattened manifest == full rebuild over the slot files
-    FileSkipping.finalizeIngest(spark, s"$localBase/manifest")
-    val maintained = spark.read.parquet(s"$localBase/manifest")
-    val files = maintained.select("file").collect().map(_.getString(0)).sorted
-    val rebuilt = spark.read.parquet(files.toIndexedSeq: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col("ts")).as("min_key"), max(col("ts")).as("max_key"),
-        count(lit(1)).as("n_rows"), count(col("ts")).as("n_keys"))
-    assert(maintained.exceptAll(rebuilt).count() == 0 &&
-      rebuilt.exceptAll(maintained).count() == 0)
-    // batch maintenance now owns the table: compaction folds the
-    // micro-batch slot files and content survives exactly
-    val (compacted, written) = FileSkipping.compactSmall(
-      spark, s"$localBase/data", s"$localBase/manifest", "ts",
-      smallBytes = 64L * 1024 * 1024, targetBytes = 256L * 1024 * 1024)
+    // the snapshot built batch by batch == a full rebuild over its files
+    assertStatsRebuilt(vdir, "ts")
+    // compaction folds the micro-batch slot files and content survives exactly
+    val (_, compacted, written) = FileSkipping.compactSmallOcc(
+      spark, s"$localBase/data", vdir, "ts",
+      smallBytes = 64L * 1024 * 1024, targetBytes = 256L * 1024 * 1024, "CPT")
     assert(compacted == 3 && written == 1, s"expected 3 slots -> 1 file, got $compacted -> $written")
-    val after = spark.read.option("recursiveFileLookup", "true").parquet(s"$localBase/data")
+    val after = headOf(vdir)
     assert(after.exceptAll(staged).count() == 0 && staged.exceptAll(after).count() == 0)
   }
 

@@ -167,41 +167,44 @@ class SchemaEvolutionSpec extends SparkSpec {
       "merge of a missing-column delta clobbered other rows' evolved values")
   }
 
-  test("plain mutators reject divergent frames loudly too: appendWithManifest and slot ingest have no log to evolve into") {
-    // round-12 verdict #1: these three paths previously accepted a
-    // divergent frame silently — mixed-schema files whose read depends on
-    // footer-sampling order, the exact shape the OCC contract closed
-    val base = scratch("schevo_plain")
-    graft.util.Staging.deleteRecursive(base)
-    rows(0, 2000).repartitionByRange(2, col("k")).sortWithinPartitions("k")
-      .write.mode("overwrite").parquet(s"$base/data")
-    FileSkipping.buildManifest(spark, s"$base/data", "k")
-      .write.mode("overwrite").parquet(s"$base/manifest")
+  test("appendOcc and slot ingest reject divergent frames loudly by default, before anything lands") {
+    // round-12 verdict #1: these paths once accepted a divergent frame
+    // silently — mixed-schema files whose read depends on
+    // footer-sampling order. Without evolveSchema they reject before any
+    // slot or commit lands, and a conforming frame still lands.
+    import org.apache.spark.sql.types._
+    val (data, vdir) = freshOcc("plain")
     val e = intercept[IllegalArgumentException] {
-      FileSkipping.appendWithManifest(rows(2000, 2010).withColumn("extra", lit(1.0)),
-        s"$base/data", s"$base/manifest", "k")
+      FileSkipping.appendOcc(rows(4000, 4010).withColumn("extra", lit(1.0)), data, vdir, "k",
+        "BAD")
     }
     assert(e.getMessage.contains("appended frame") && e.getMessage.contains("extra"),
       e.getMessage)
-    assert(spark.read.parquet(s"$base/data").count() == 2000,
-      "a rejected plain append landed files anyway")
+    assert(VersionLog.head(spark, vdir) == 0, "a rejected append committed anyway")
+    assert(!new java.io.File(s"$data/txn-BAD").exists(), "a rejected append landed files")
     // a conforming append still works
-    assert(FileSkipping.appendWithManifest(rows(2000, 2010),
-      s"$base/data", s"$base/manifest", "k") >= 1)
-    // slot ingest: batch 0 defines the schema, a divergent batch 1
-    // rejects BEFORE its slot lands, a conforming batch 1 still lands
-    val ib = s"$base/ingest"
-    FileSkipping.ingestBatch(rows(0, 100), 0L, s"$ib/data", s"$ib/manifest", "k")
+    assert(FileSkipping.appendOcc(rows(4000, 4010), data, vdir, "k", "OK") == 1)
+    // slot ingest: batch 0 defines an empty table's schema, a batch
+    // MISSING a column rejects BEFORE its slot lands, a conforming batch
+    // 1 still lands
+    val ib = scratch("schevo_plain_ingest")
+    graft.util.Staging.deleteRecursive(ib)
+    VersionLog.commitSnapshot(spark, s"$ib/versions", spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("file", StringType), StructField("min_key", LongType),
+        StructField("max_key", LongType), StructField("n_rows", LongType),
+        StructField("n_keys", LongType)))))
+    FileSkipping.ingestBatchOcc(rows(0, 100), 0L, s"$ib/data", "k", s"$ib/versions")
     val e2 = intercept[IllegalArgumentException] {
-      FileSkipping.ingestBatch(rows(100, 200).drop("v"), 1L,
-        s"$ib/data", s"$ib/manifest", "k")
+      FileSkipping.ingestBatchOcc(rows(100, 200).drop("v"), 1L, s"$ib/data", "k",
+        s"$ib/versions")
     }
     assert(e2.getMessage.contains("ingest batch 1") && e2.getMessage.contains("missing: v"),
       e2.getMessage)
     assert(!new java.io.File(s"$ib/data/b1").exists(), "rejected batch left slot files")
-    FileSkipping.ingestBatch(rows(100, 200), 1L, s"$ib/data", s"$ib/manifest", "k")
-    assert(spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$ib/data").count() == 200)
+    assert(FileSkipping.ingestBatchOcc(rows(100, 200), 1L, s"$ib/data", "k",
+      s"$ib/versions") == 2)
+    assert(VersionLog.readVersion(spark, s"$ib/versions", 2).count() == 200)
   }
 
   test("a same-name/new-type delta rejects loudly naming both types — with or without evolveSchema") {

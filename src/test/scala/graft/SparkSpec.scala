@@ -18,7 +18,7 @@ trait SparkSpec extends AnyFunSuite {
     graft.util.TaskFailureAudit.install(s)
     s
   }
-  def sf(name: String) = s"/root/testdata/$name"
+  def sf(name: String) = graft.util.Staging.corpus(name)
 
   /** Absolute path of `name` under `target/scratch` of the working
     * directory (the checkout the suite runs from), so a spec never writes

@@ -37,8 +37,7 @@ class TableChangesSpec extends SparkSpec {
   test("per-version attribution, empty window, insert feeds, literal masking") {
     val base = freshOcc("attr")
     val cdc = s"$base/cdc"
-    val reg = Map("ct" -> TableSql.TableRef(s"$base/data", s"$base/m", "k",
-      versionsDir = Some(s"$base/versions"), cdcDir = Some(cdc), occ = true))
+    val reg = Map("ct" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k", cdcDir = Some(cdc)))
     // v1: INSERT (append feed), v2: MERGE (pre/post/insert), v3: DELETE
     spark.range(5000, 5020).select(col("id").as("k"), lit(1.5).as("v"))
       .createOrReplaceTempView("tc_ins")

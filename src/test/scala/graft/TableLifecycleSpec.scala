@@ -551,43 +551,44 @@ class TableLifecycleSpec extends SparkSpec {
     assert(VersionLog.head(spark, vdir) == 2, "aborted ZORDER moved head")
   }
 
-  test("plain appendWithManifest memoizes the contract footer probe (zero re-opens), still rejects divergence") {
-    // round-13 verdict #6: the plain-table schema contract probed one
-    // parquet footer on EVERY append (~4 RPCs + a Spark job on an
-    // object store). The schema is immutable by the very contract being
-    // enforced, so one probe per (table, JVM) serves all later appends —
-    // memo identity-tagged by the probed file's presence in the current
-    // listing (same discipline as the OCC bootstrap memo).
+  test("appendOcc memoizes the bootstrap schema probe (zero footer re-opens), still rejects divergence") {
+    // round-13 verdict #6: a schema contract that probes one parquet
+    // footer on EVERY append costs ~4 RPCs + a Spark job on an object
+    // store. With no schema record the table's schema is immutable by the
+    // very contract being enforced, so one probe per (log, JVM) serves
+    // all later appends — memo identity-tagged by the log's v0 part file.
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.countfs.impl", classOf[graft.util.CountFs].getName)
     hc.setBoolean("fs.countfs.impl.disable.cache", true)
     val base = scratch("lifec_appmemo")
     graft.util.Staging.deleteRecursive(base)
     val dataDir = s"countfs:$base/data"
-    val manifestDir = s"$base/manifest"
+    val vdir = s"$base/versions"
     def delta(lo: Long) = rows(lo, lo + 20)
-    assert(FileSkipping.appendWithManifest(delta(0), dataDir, manifestDir, "k") >= 1)
-    // second append populates the memo: it probes the table's sorted-
-    // FIRST file (the contract footer); later appends must never re-open
-    // it — fresh-file stats reads touch only each append's own files
-    assert(FileSkipping.appendWithManifest(delta(100), dataDir, manifestDir, "k") >= 1)
+    delta(0).coalesce(1).write.parquet(dataDir)
+    VersionLog.commitSnapshot(spark, vdir, FileSkipping.buildManifestStats(spark, dataDir, "k", Nil))
+    // the first append probes the one v0 file's footer (the contract
+    // schema); later appends must never re-open it — fresh-file stats
+    // reads touch only each append's own slot
+    assert(FileSkipping.appendOcc(delta(100), dataDir, vdir, "k", "A1") == 1)
     val probedFile = new java.io.File(s"$base/data").listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).sorted.head
     try {
       graft.util.CountFs.openNeedle = Some(probedFile)
       graft.util.CountFs.openHits.set(0)
-      assert(FileSkipping.appendWithManifest(delta(200), dataDir, manifestDir, "k") >= 1)
-      assert(FileSkipping.appendWithManifest(delta(300), dataDir, manifestDir, "k") >= 1)
+      assert(FileSkipping.appendOcc(delta(200), dataDir, vdir, "k", "A2") == 2)
+      assert(FileSkipping.appendOcc(delta(300), dataDir, vdir, "k", "A3") == 3)
       val opens = graft.util.CountFs.openHits.get()
       assert(opens == 0,
-        s"steady-state plain appends opened the contract-probe footer $opens time(s) " +
+        s"steady-state appends opened the contract-probe footer $opens time(s) " +
           "— the per-append footer read is back")
       // the MEMOIZED schema still enforces the contract loudly
       val bad = delta(400).withColumn("k", col("k").cast("string"))
       val e = intercept[IllegalArgumentException] {
-        FileSkipping.appendWithManifest(bad, dataDir, manifestDir, "k")
+        FileSkipping.appendOcc(bad, dataDir, vdir, "k", "A4")
       }
       assert(e.getMessage.contains("physical TYPE"), e.getMessage)
+      assert(VersionLog.head(spark, vdir) == 3, "a rejected append committed")
     } finally graft.util.CountFs.openNeedle = None
   }
 
@@ -639,8 +640,7 @@ class TableLifecycleSpec extends SparkSpec {
     val vdir = s"$base/versions"
     VersionLog.commitSnapshot(spark, vdir,
       FileSkipping.buildManifest(spark, s"$base/data", "k")) // v0
-    val reg = Map("t" -> graft.io.TableSql.TableRef(s"$base/data", s"$base/manifest", "k",
-      versionsDir = Some(vdir), occ = true))
+    val reg = Map("t" -> graft.io.TableSql.TableRef(s"$base/data", vdir, "k"))
     assert(graft.io.TableSql(spark, reg, "DESCRIBE DETAIL t").head()
       .getAs[Long]("size_bytes") > 0)
     val lost = VersionLog.manifestAt(spark, vdir, 0).select("file").collect()

@@ -5,20 +5,31 @@ import org.apache.spark.sql.functions._
 /** The SQL table-op frontend's GUARD RAILS — the statements themselves
   * are oracle-gated end-to-end by q195/q196/q197; what a spec must pin
   * is that a malformed or mis-targeted statement fails loudly instead of
-  * silently running as a different mutation. */
+  * silently running as a different mutation. Every registered table is
+  * an OCC table: its log is bootstrapped (v0) before registration. */
 class TableSqlSpec extends SparkSpec {
   import graft.io.{FileSkipping, TableSql, VersionLog}
 
+  /** `n` rows (k, v = k % 7) in `files` key-sorted files under
+    * `base/data`, with the v0 snapshot of `base/versions` over them. */
+  private def stageTable(base: String, n: Long, files: Int): Unit = {
+    graft.util.Staging.deleteRecursive(base)
+    spark.range(n).select(col("id").as("k"), (col("id") % 7).cast("double").as("v"))
+      .repartitionByRange(files, col("k")).sortWithinPartitions("k")
+      .write.mode("overwrite").parquet(s"$base/data")
+    VersionLog.commitSnapshot(spark, s"$base/versions",
+      FileSkipping.buildManifest(spark, s"$base/data", "k"))
+    ()
+  }
+
   private lazy val reg: Map[String, TableSql.TableRef] = {
     val base = scratch("tablesql_fixture")
-    graft.util.Staging.deleteRecursive(base)
-    spark.range(1000).select(col("id").as("k"), (col("id") % 7).cast("double").as("v"))
-      .repartitionByRange(4, col("k")).sortWithinPartitions("k")
-      .write.mode("overwrite").parquet(s"$base/data")
-    FileSkipping.buildManifest(spark, s"$base/data", "k")
-      .write.mode("overwrite").parquet(s"$base/manifest")
-    Map("tbl" -> TableSql.TableRef(s"$base/data", s"$base/manifest", "k"))
+    stageTable(base, 1000, 4)
+    Map("tbl" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k"))
   }
+
+  private def headCount(ref: TableSql.TableRef): Long =
+    VersionLog.readVersion(spark, ref.versionsDir, VersionLog.head(spark, ref.versionsDir)).count()
 
   test("unknown table and unsupported statements fail loudly") {
     val e1 = intercept[IllegalArgumentException] {
@@ -37,7 +48,7 @@ class TableSqlSpec extends SparkSpec {
   }
 
   test("mutations on the wrong key column are rejected before touching the table") {
-    val before = spark.read.parquet(reg("tbl").dataDir).count()
+    val before = headCount(reg("tbl"))
     val e = intercept[IllegalArgumentException] {
       TableSql(spark, reg, "DELETE FROM tbl WHERE v BETWEEN 1 AND 2")
     }
@@ -50,38 +61,55 @@ class TableSqlSpec extends SparkSpec {
            WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
     }
     assert(e2.getMessage.contains("clustering key"), e2.getMessage)
-    assert(spark.read.parquet(reg("tbl").dataDir).count() == before)
+    assert(headCount(reg("tbl")) == before)
+    assert(VersionLog.head(spark, reg("tbl").versionsDir) == 0)
   }
 
   test("VACUUM and VERSION AS OF on an unversioned table are rejected") {
+    // a table without a version log does not type-check: the log is a
+    // required field, so no statement can reach a log-less table
+    assertTypeError("""TableSql.TableRef("data", None, "k")""")
+    // history the log never committed is refused loudly
+    intercept[org.apache.spark.sql.AnalysisException] {
+      TableSql(spark, reg, "SELECT COUNT(*) FROM tbl VERSION AS OF 7").collect()
+    }
     val e = intercept[IllegalArgumentException] {
-      TableSql(spark, reg, "VACUUM tbl RETAIN 1 VERSIONS")
+      TableSql(spark, reg, "VACUUM tbl RETAIN 0 VERSIONS")
     }
-    assert(e.getMessage.contains("no version log"), e.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      TableSql(spark, reg, "SELECT COUNT(*) FROM tbl VERSION AS OF 0")
-    }
-    assert(e2.getMessage.contains("no version log"), e2.getMessage)
+    assert(e.getMessage.contains("retain at least the head"), e.getMessage)
   }
 
-  test("a registered multi-column manifest stays fresh through SQL mutations") {
+  test("2D snapshot stats equal a rebuild through SQL DELETE, UPDATE and OPTIMIZE") {
     val base = scratch("tablesql_multi")
     graft.util.Staging.deleteRecursive(base)
     spark.range(2000).select(col("id").as("k"), (col("id") / 200).cast("long").as("x"),
         (col("id") % 7).cast("double").as("v"))
       .repartitionByRange(8, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")
-    FileSkipping.buildManifest(spark, s"$base/data", "k")
-      .write.mode("overwrite").parquet(s"$base/manifest")
-    FileSkipping.buildManifestMulti(spark, s"$base/data", Seq("k", "x"))
-      .write.mode("overwrite").parquet(s"$base/multi")
-    val mreg = Map("mtbl" -> TableSql.TableRef(s"$base/data", s"$base/manifest", "k",
-      multiManifest = Some(s"$base/multi")))
+    val vdir = s"$base/versions"
+    VersionLog.commitSnapshot(spark, vdir,
+      FileSkipping.buildManifestStats(spark, s"$base/data", "k", Seq("x")))
+    val mreg = Map("mtbl" -> TableSql.TableRef(s"$base/data", vdir, "k"))
+    // the head snapshot's per-file x extents == a fresh scan of its files
+    def assertStatsFresh(after: String): Unit = {
+      val snap = VersionLog.manifestAt(spark, vdir, VersionLog.head(spark, vdir))
+      val stats = snap.select("file", "min_x", "max_x").collect()
+        .map(r => (new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath,
+          Option(r.get(1)), Option(r.get(2)))).toSet
+      val rebuilt = spark.read.parquet(snap.select("file").collect().map(_.getString(0)): _*)
+        .groupBy(input_file_name().as("file")).agg(min("x"), max("x")).collect()
+        .map(r => (new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath,
+          Option(r.get(1)), Option(r.get(2)))).toSet
+      assert(stats.forall(_._2.isDefined), s"null x stats after $after: $stats")
+      assert(stats == rebuilt, s"x stats after $after diverge from a rebuild")
+    }
     TableSql(spark, mreg, "DELETE FROM mtbl WHERE k BETWEEN 300 AND 700").collect()
-    val folded = spark.read.parquet(s"$base/multi")
-    val rebuilt = FileSkipping.buildManifestMulti(spark, s"$base/data", Seq("k", "x"))
-    assert(folded.exceptAll(rebuilt).count() == 0 && rebuilt.exceptAll(folded).count() == 0,
-      "SQL DELETE left the registered 2D manifest stale")
+    assertStatsFresh("DELETE")
+    TableSql(spark, mreg, "UPDATE mtbl SET v = v + 1 WHERE k BETWEEN 1000 AND 1100").collect()
+    assertStatsFresh("UPDATE")
+    val m = TableSql(spark, mreg, "OPTIMIZE mtbl").head()
+    assert(m.getLong(1) >= 2, s"OPTIMIZE compacted nothing: $m")
+    assertStatsFresh("OPTIMIZE")
   }
 
   test("SELECT binds, never rewrites: a string literal containing a table name survives verbatim") {
@@ -96,19 +124,14 @@ class TableSqlSpec extends SparkSpec {
 
   test("DELETE bounds parse through the SQL grammar: a lower bound containing AND splits correctly") {
     val base = scratch("tablesql_between")
-    graft.util.Staging.deleteRecursive(base)
-    spark.range(1000).select(col("id").as("k"), (col("id") % 7).cast("double").as("v"))
-      .repartitionByRange(4, col("k")).sortWithinPartitions("k")
-      .write.mode("overwrite").parquet(s"$base/data")
-    FileSkipping.buildManifest(spark, s"$base/data", "k")
-      .write.mode("overwrite").parquet(s"$base/manifest")
-    val breg = Map("btbl" -> TableSql.TableRef(s"$base/data", s"$base/manifest", "k"))
+    stageTable(base, 1000, 4)
+    val breg = Map("btbl" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k"))
     // round-10 review: the old non-greedy regex split this clause at the
     // FIRST ' AND ' — inside the CASE — and deleted the wrong range
     TableSql(spark, breg,
       """DELETE FROM btbl WHERE k BETWEEN
          CASE WHEN 1 = 1 AND 2 = 2 THEN 100 ELSE 0 END AND 199""").collect()
-    val left = spark.read.parquet(s"$base/data")
+    val left = TableSql(spark, breg, "SELECT * FROM btbl")
     assert(left.count() == 900, s"expected 900 survivors, got ${left.count()}")
     assert(left.filter(col("k").between(100, 199)).count() == 0)
     assert(left.filter(col("k") < 100).count() == 100,
@@ -116,9 +139,15 @@ class TableSqlSpec extends SparkSpec {
   }
 
   test("occ registration without a version log is rejected before touching the table") {
+    // the type carries the log, so "registered without one" cannot be
+    // written; the runtime counterpart is a log with no committed
+    // version, which every mutation refuses before writing anything
+    assertTypeError("""TableSql.TableRef("data", "versions", "k", occ = true)""")
     val ref = reg("tbl")
-    val occReg = Map("otbl" -> ref.copy(occ = true)) // no versionsDir
-    val before = spark.read.parquet(ref.dataDir).count()
+    val base = scratch("tablesql_nolog")
+    graft.util.Staging.deleteRecursive(base)
+    val occReg = Map("otbl" -> ref.copy(versionsDir = s"$base/versions"))
+    val before = headCount(ref)
     spark.range(1).select(lit(5L).as("k"), lit(9.9).as("v"))
       .createOrReplaceTempView("tsql_occ_delta")
     val e = intercept[IllegalArgumentException] {
@@ -126,12 +155,15 @@ class TableSqlSpec extends SparkSpec {
         """MERGE INTO otbl USING tsql_occ_delta ON otbl.k = tsql_occ_delta.k
            WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
     }
-    assert(e.getMessage.contains("no versionsDir"), e.getMessage)
+    assert(e.getMessage.contains("no committed version"), e.getMessage)
     val e2 = intercept[IllegalArgumentException] {
       TableSql(spark, occReg, "DELETE FROM otbl WHERE k BETWEEN 1 AND 2")
     }
-    assert(e2.getMessage.contains("no versionsDir"), e2.getMessage)
-    assert(spark.read.parquet(ref.dataDir).count() == before)
+    assert(e2.getMessage.contains("no committed version"), e2.getMessage)
+    assert(headCount(ref) == before)
+    assert(!new java.io.File(s"$base/versions/v0").exists())
+    assert(!new java.io.File(ref.dataDir).list().exists(_.startsWith("txn-sql-")),
+      "a refused statement left a transaction slot behind")
   }
 
   test("a string literal containing 'name VERSION AS OF n' survives verbatim (no rewrite inside literals)") {
@@ -151,9 +183,7 @@ class TableSqlSpec extends SparkSpec {
     // table with an empty log then threw out of an otherwise-valid SELECT
     val base = scratch("tablesql_litbind")
     graft.util.Staging.deleteRecursive(base)
-    val bindReg = reg ++ Map("emptyocc" -> TableSql.TableRef(
-      s"$base/data", s"$base/manifest", "k",
-      versionsDir = Some(s"$base/versions"), occ = true))
+    val bindReg = reg ++ Map("emptyocc" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k"))
     // 'emptyocc' only in a literal: must not bind, must not throw
     val r = TableSql(spark, bindReg,
       "SELECT 'emptyocc' AS who, COUNT(*) AS n FROM tbl").head()
@@ -167,23 +197,14 @@ class TableSqlSpec extends SparkSpec {
   test("INSERT INTO: appends through the string on plain and OCC tables; schema mismatch rejected before touching the table") {
     val base = scratch("tablesql_insert")
     graft.util.Staging.deleteRecursive(base)
-    def stage(sub: String): Unit = {
-      spark.range(100).select(col("id").as("k"), (col("id") % 7).cast("double").as("v"))
-        .repartitionByRange(2, col("k")).sortWithinPartitions("k")
-        .write.mode("overwrite").parquet(s"$base/$sub/data")
-      FileSkipping.buildManifest(spark, s"$base/$sub/data", "k")
-        .write.mode("overwrite").parquet(s"$base/$sub/manifest")
-    }
-    stage("plain"); stage("occ")
-    VersionLog.commit(spark, s"$base/occ/versions", s"$base/occ/manifest") // v0
+    stageTable(s"$base/plain", 100, 2); stageTable(s"$base/occ", 100, 2)
     val ireg = Map(
-      "ptbl" -> TableSql.TableRef(s"$base/plain/data", s"$base/plain/manifest", "k"),
-      "otbl" -> TableSql.TableRef(s"$base/occ/data", s"$base/occ/manifest", "k",
-        versionsDir = Some(s"$base/occ/versions"), occ = true))
+      "ptbl" -> TableSql.TableRef(s"$base/plain/data", s"$base/plain/versions", "k"),
+      "otbl" -> TableSql.TableRef(s"$base/occ/data", s"$base/occ/versions", "k"))
     spark.range(1000, 1020).select(col("id").as("k"), lit(9.5).as("v"))
       .createOrReplaceTempView("ins_src")
     val m1 = TableSql(spark, ireg, "INSERT INTO ptbl SELECT k, v FROM ins_src").head()
-    assert(m1.getLong(0) >= 1, "plain INSERT appended no files")
+    assert(m1.getLong(0) == 1, s"INSERT should commit v1, got ${m1.getLong(0)}")
     assert(TableSql(spark, ireg, "SELECT COUNT(*) AS n FROM ptbl").head().getLong(0) == 120)
     val m2 = TableSql(spark, ireg, "INSERT INTO otbl SELECT k, v FROM ins_src").head()
     assert(m2.getLong(0) == 1, s"OCC INSERT should commit v1, got ${m2.getLong(0)}")
@@ -198,7 +219,7 @@ class TableSqlSpec extends SparkSpec {
     // registered table works end to end
     val m3 = TableSql(spark, ireg,
       "INSERT INTO ptbl SELECT k + 5000 AS k, v FROM otbl WHERE k >= 1000").head()
-    assert(m3.getLong(0) >= 1)
+    assert(m3.getLong(0) == 2)
     assert(TableSql(spark, ireg, "SELECT COUNT(*) AS n FROM ptbl").head().getLong(0) == 140)
   }
 
@@ -211,8 +232,7 @@ class TableSqlSpec extends SparkSpec {
     FileSkipping.buildManifest(spark, s"$base/data", "k")
       .write.mode("overwrite").parquet(s"$base/manifest")
     VersionLog.commit(spark, s"$base/versions", s"$base/manifest") // v0
-    val ereg = Map("etbl" -> TableSql.TableRef(s"$base/data", s"$base/manifest", "k",
-      versionsDir = Some(s"$base/versions"), occ = true, evolveSchema = true))
+    val ereg = Map("etbl" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k", evolveSchema = true))
     // MERGE whose source ADDS a column: evolves instead of rejecting
     spark.range(10, 30).select(col("id").as("k"), lit(9.9).as("v"),
         (col("id") * 2.0).as("w"))
@@ -233,13 +253,14 @@ class TableSqlSpec extends SparkSpec {
     val after = TableSql(spark, ereg,
       "SELECT COUNT(*) AS n, COUNT(w) AS n_w FROM etbl").head()
     assert(after.getLong(0) == 410 && after.getLong(1) == 20)
-    // the flag without occ is rejected before touching the table
-    val preg = Map("ptbl2" -> TableSql.TableRef(s"$base/data", s"$base/manifest", "k",
-      evolveSchema = true))
+    // the same log registered WITHOUT the flag rejects the divergent
+    // source before touching the table: evolution is opt-in per table
+    val preg = Map("ptbl2" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k"))
     val e = intercept[IllegalArgumentException] {
       TableSql(spark, preg, "INSERT INTO ptbl2 SELECT k, v FROM evo_ins")
     }
-    assert(e.getMessage.contains("but not occ"), e.getMessage)
+    assert(e.getMessage.contains("must match the table's"), e.getMessage)
+    assert(TableSql(spark, preg, "SELECT COUNT(*) AS n FROM ptbl2").head().getLong(0) == 410)
   }
 
   test("the head view reads the manifest's files, never the directory listing") {
@@ -266,9 +287,7 @@ class TableSqlSpec extends SparkSpec {
     // (the empty-log OCC table would throw out of headRead if it bound)
     val base = scratch("tablesql_dqbind")
     graft.util.Staging.deleteRecursive(base)
-    val bindReg = reg ++ Map("dqocc" -> TableSql.TableRef(
-      s"$base/data", s"$base/manifest", "k",
-      versionsDir = Some(s"$base/versions"), occ = true))
+    val bindReg = reg ++ Map("dqocc" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k"))
     val r2 = TableSql(spark, bindReg,
       """SELECT "dqocc" AS who, COUNT(*) AS n FROM tbl""").head()
     assert(r2.getString(0) == "dqocc" && r2.getLong(1) == 1000)
@@ -299,8 +318,7 @@ class TableSqlSpec extends SparkSpec {
     FileSkipping.buildManifest(spark, s"$base/data", "k")
       .write.mode("overwrite").parquet(s"$base/manifest")
     VersionLog.commit(spark, s"$base/versions", s"$base/manifest") // v0
-    val oreg = Map("optbl" -> TableSql.TableRef(s"$base/data", s"$base/manifest", "k",
-      versionsDir = Some(s"$base/versions"), occ = true))
+    val oreg = Map("optbl" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k"))
     val m = TableSql(spark, oreg, "OPTIMIZE optbl").head()
     assert(m.getLong(1) == 8 && m.getLong(2) >= 1 && m.getLong(2) < 8,
       s"expected 8 small files folded, got ${m}")
@@ -318,11 +336,12 @@ class TableSqlSpec extends SparkSpec {
     // thresholds parse: SMALL 1 byte finds nothing small enough
     val m2 = TableSql(spark, oreg, "OPTIMIZE optbl SMALL 1 TARGET 1000000").head()
     assert(m2.getLong(1) == 0 && m2.getLong(2) == 0)
-    // DESCRIBE HISTORY without a version log rejects loudly
+    // DESCRIBE HISTORY of a log that was never bootstrapped rejects loudly
     val e = intercept[IllegalArgumentException] {
-      TableSql(spark, reg, "DESCRIBE HISTORY tbl")
+      TableSql(spark, Map("nolog" -> reg("tbl").copy(versionsDir = s"$base/nolog")),
+        "DESCRIBE HISTORY nolog")
     }
-    assert(e.getMessage.contains("no version log"), e.getMessage)
+    assert(e.getMessage.contains("does not exist"), e.getMessage)
   }
 
   test("backtick-quoted identifiers still BIND: backticks quote names, not literals") {
@@ -341,8 +360,7 @@ class TableSqlSpec extends SparkSpec {
     FileSkipping.buildManifest(spark, s"$base/data", "k")
       .write.mode("overwrite").parquet(s"$base/manifest")
     VersionLog.commit(spark, s"$base/versions", s"$base/manifest") // v0
-    val areg = Map("atbl" -> TableSql.TableRef(s"$base/data", s"$base/manifest", "k",
-      versionsDir = Some(s"$base/versions"), occ = true, evolveSchema = true))
+    val areg = Map("atbl" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k", evolveSchema = true))
     val res = TableSql(spark, areg, "ALTER TABLE atbl ADD COLUMN score DOUBLE").head()
     assert(res.getLong(0) == 1 && res.getString(1) == "score")
     // schema-only: same rows, evolved columns, all-null new column
@@ -372,11 +390,12 @@ class TableSqlSpec extends SparkSpec {
       TableSql(spark, areg, "ALTER TABLE atbl ADD COLUMN V INT")
     }
     assert(e.getMessage.contains("already exists"), e.getMessage)
-    // a non-OCC table has no log to record the schema in
+    // a log with no committed version has no schema to evolve
     val e2 = intercept[IllegalArgumentException] {
-      TableSql(spark, reg, "ALTER TABLE tbl ADD COLUMN score DOUBLE")
+      TableSql(spark, Map("nolog" -> areg("atbl").copy(versionsDir = s"$base/nolog")),
+        "ALTER TABLE nolog ADD COLUMN score DOUBLE")
     }
-    assert(e2.getMessage.contains("OCC version log"), e2.getMessage)
+    assert(e2.getMessage.contains("no committed version"), e2.getMessage)
     // multi-column DDL rejects LOUDLY instead of silently adding only the
     // first field (round-13 advice: the type regex swallows the tail, and
     // fromDDL happily parses 'INT, d STRING' as a second field)
@@ -404,8 +423,7 @@ class TableSqlSpec extends SparkSpec {
     VersionLog.commitSnapshot(spark, vdir, stats.limit(0),
       markers = Seq("_TS_1700000100000"),
       schemaJson = Some(spark.read.parquet(s"$base/data").schema.json)) // v1: empty table
-    val tReg = Map("ttbl" -> TableSql.TableRef(s"$base/data", s"$base/manifest", "k",
-      versionsDir = Some(vdir), occ = true))
+    val tReg = Map("ttbl" -> TableSql.TableRef(s"$base/data", vdir, "k"))
     // epoch + quoted forms resolve; head is the empty v1
     assert(TableSql(spark, tReg,
       "SELECT COUNT(*) AS n FROM ttbl TIMESTAMP AS OF 1700000050000").head().getLong(0) == 100)
@@ -426,5 +444,19 @@ class TableSqlSpec extends SparkSpec {
     assert(r.getLong(0) == 2 && r.getLong(1) == 0, s"restore row: $r")
     assert(TableSql(spark, tReg,
       "SELECT COUNT(*) AS n FROM ttbl").head().getLong(0) == 100)
+  }
+
+  test("graftbench's TableRef shape: occ = true with a log registers; occ = false or no log throws") {
+    val ok = TableSql.TableRef("d", "m", "k", versionsDir = Some("v"), cdcDir = Some("c"),
+      occ = true)
+    assert(ok == TableSql.TableRef("d", "v", "k", cdcDir = Some("c")))
+    val e1 = intercept[IllegalArgumentException] {
+      TableSql.TableRef("d", "m", "k", versionsDir = Some("v"), cdcDir = None, occ = false)
+    }
+    assert(e1.getMessage.contains("occ = false"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      TableSql.TableRef("d", "m", "k", versionsDir = None, cdcDir = Some("c"), occ = true)
+    }
+    assert(e2.getMessage.contains("no versionsDir"), e2.getMessage)
   }
 }

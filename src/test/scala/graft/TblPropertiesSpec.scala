@@ -24,8 +24,7 @@ class TblPropertiesSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$base/data")
     VersionLog.commitSnapshot(spark, s"$base/versions",
       FileSkipping.buildManifest(spark, s"$base/data", "k"))
-    (base, Map(name -> TableSql.TableRef(s"$base/data", s"$base/manifest0", "k",
-      versionsDir = Some(s"$base/versions"), occ = true)))
+    (base, Map(name -> TableSql.TableRef(s"$base/data", s"$base/versions", "k")))
   }
 
   test("SET merges and versions; SHOW reads head; UNSET is loud on a missing key") {

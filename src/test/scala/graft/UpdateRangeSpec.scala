@@ -100,8 +100,7 @@ class UpdateRangeSpec extends SparkSpec {
         pinned = Some(pin))
     }
     // SQL path: nested commas (greatest(v, 10, 20)) and a literal comma
-    val reg = Map("ut" -> TableSql.TableRef(s"$base/data", s"$base/m", "k",
-      versionsDir = Some(s"$base/versions"), occ = true))
+    val reg = Map("ut" -> TableSql.TableRef(s"$base/data", s"$base/versions", "k"))
     val m = TableSql(spark, reg,
       "UPDATE ut SET v = greatest(v, 10, 20), tag = 'a,b' " +
         "WHERE k BETWEEN 0 AND 9").head()

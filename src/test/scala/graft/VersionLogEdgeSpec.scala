@@ -123,18 +123,20 @@ class VersionLogEdgeSpec extends SparkSpec {
 
   test("legacy 4-column manifest: deleteRange demotes covered files to the rewrite path, content exact") {
     val base = freshLegacyTable("legacydel")
+    val vdir = s"$base/versions"
+    VersionLog.commit(spark, vdir, s"$base/manifest") // v0: LEGACY schema
     // [1000, 1999] covers file 1 ENTIRELY — with n_keys the file would
     // retire unread; without it nothing can prove null-freeness, so the
     // covered file must DEMOTE to the rewrite path instead of crashing
     // the stats union (round-10 review)
-    val (unread, rewritten) = FileSkipping.deleteRange(spark, s"$base/data",
-      s"$base/manifest", "k", lit(1000L), lit(1999L))
+    val (v1, unread, rewritten) = FileSkipping.deleteRangeOcc(spark, s"$base/data", vdir, "k",
+      lit(1000L), lit(1999L), "LDEL")
     assert(unread == 0, "a legacy manifest cannot prove null-freeness — no unread retire")
     assert(rewritten >= 1)
-    val got = spark.read.parquet(s"$base/manifest")
-    assert(got.columns.contains("n_keys"), "the rewrite upgrades the manifest schema")
+    assert(VersionLog.manifestAt(spark, vdir, v1).columns.contains("n_keys"),
+      "the rewrite upgrades the snapshot schema")
     val expected = rows(0, 4000).filter(!col("k").between(1000, 1999))
-    val data = FileSkipping.prunedRead(spark, s"$base/data", s"$base/manifest",
+    val data = VersionLog.prunedReadVersion(spark, vdir, v1,
       lit(Long.MinValue), lit(Long.MaxValue))
     assert(data.count() == expected.count())
     assert(data.exceptAll(expected).count() == 0 && expected.exceptAll(data).count() == 0)
@@ -142,23 +144,23 @@ class VersionLogEdgeSpec extends SparkSpec {
 
   test("legacy 4-column manifest: mergeKeyed and compactSmall complete, content exact") {
     val base = freshLegacyTable("legacymerge")
+    val vdir = s"$base/versions"
+    VersionLog.commit(spark, vdir, s"$base/manifest") // v0: LEGACY schema
     val delta = rows(500, 520).withColumn("tag", lit("LM"))
       .unionByName(rows(900000, 900010).withColumn("tag", lit("LI")))
-    FileSkipping.mergeKeyed(spark, s"$base/data", s"$base/manifest", "k", delta)
-    val afterMerge = spark.read.parquet(s"$base/data")
+    val v1 = FileSkipping.mergeKeyedOcc(spark, s"$base/data", vdir, "k", delta, "LM")
+    val afterMerge = VersionLog.readVersion(spark, vdir, v1)
     assert(afterMerge.filter(col("tag") === "LM").count() == 20)
     assert(afterMerge.filter(col("tag") === "LI").count() == 10)
     assert(afterMerge.count() == 4010)
-    // the merge's manifest (now mixed legacy/new rows) feeds compaction
-    val (compacted, written) = FileSkipping.compactSmall(spark, s"$base/data",
-      s"$base/manifest", "k", smallBytes = Long.MaxValue, targetBytes = Long.MaxValue)
+    // the merge's snapshot (now mixed legacy/new rows) feeds compaction
+    val (v2, compacted, written) = FileSkipping.compactSmallOcc(spark, s"$base/data", vdir,
+      "k", smallBytes = Long.MaxValue, targetBytes = Long.MaxValue, "LC")
     assert(compacted >= 2 && written >= 1)
-    // compare against a reconstructed expectation — compaction physically
-    // deleted the files the lazy afterMerge frame referenced
     val expectedAfter = rows(0, 4000).filter(!col("k").between(500, 519))
       .unionByName(rows(500, 520).withColumn("tag", lit("LM")))
       .unionByName(rows(900000, 900010).withColumn("tag", lit("LI")))
-    val afterCompact = spark.read.parquet(s"$base/data")
+    val afterCompact = VersionLog.readVersion(spark, vdir, v2)
     assert(afterCompact.count() == 4010)
     assert(afterCompact.exceptAll(expectedAfter).count() == 0 &&
       expectedAfter.exceptAll(afterCompact).count() == 0)
@@ -200,8 +202,8 @@ class VersionLogEdgeSpec extends SparkSpec {
       FileSkipping.buildManifestStats(spark, s"$base/data", "zk", Seq("x", "y")))
     val delta = withZk(src.filter(col("id") % 17 === 0)
       .withColumn("price", col("price") * 2))
-    val v1 = FileSkipping.mergeKeyedOcc(spark, s"$base/data", vdir, "zk", delta,
-      "E2D", statCols = Seq("x", "y"))
+    // the snapshot's x/y stats ride the merge: no column list to pass
+    val v1 = FileSkipping.mergeKeyedOcc(spark, s"$base/data", vdir, "zk", delta, "E2D")
     assert(v1 == 1)
     Seq(0, v1).foreach { v =>
       val pruned = FileSkipping.prunedReadVersionMulti(spark, vdir, v,
