@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Driver-side parquet IO for METADATA-SCALE frames (snapshot manifests,
-  * live-manifest swaps, checkpoint summaries) — both halves of the
+  * checkpoint summaries, oracle dumps) — both halves of the
   * engine's Delta-style driver log.
   *
   * WRITE ([[writeSmall]], round-15 optimization, guide §1/§5): every OCC

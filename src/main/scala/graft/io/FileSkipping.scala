@@ -14,10 +14,14 @@ import org.apache.spark.sql.functions._
   *
   * Three parts:
   *
-  *   - READ-ONLY flat-manifest readers ([[prunedRead]],
-  *     [[prunedReadMulti]], [[semiJoinRead]], [[bloomPointRead]]) over a
-  *     manifest a caller built once with `buildManifest*` for a layout
-  *     nothing mutates;
+  *   - file-pruned reads of a COMMITTED snapshot: range
+  *     ([[VersionLog.prunedReadVersion]]), box ([[prunedReadVersionMulti]])
+  *     and semi-join ([[semiJoinReadVersion]]) reads admit files from a
+  *     version's per-file stats and read them through one engine
+  *     ([[VersionLog.readAdmitted]]) with deletion vectors applied. The
+  *     bloom point read ([[bloomPointRead]]) is the one reader over a
+  *     separate index: a per-file bloom is too large to ride every
+  *     snapshot;
   *   - ONE write path: every table mutation is an OCC transaction over a
   *     [[VersionLog]] (pin a version, write to a private
   *     `dataDir/txn-<id>` slot, rebase-commit) — a single writer with no
@@ -38,25 +42,28 @@ import org.apache.spark.sql.functions._
 object FileSkipping {
 
   /** One manifest row per data file: (file, min_key, max_key, n_rows,
-    * n_keys). Built in one scan via `input_file_name()` — the
-    * bootstrap path (a table's v0 snapshot, or a read-only layout's
-    * manifest); after that every commit folds in only its own replacement
-    * files' stats (the Delta-log shape). `n_keys` is the NON-NULL key
-    * count: min/max stats ignore nulls, so `n_keys < n_rows` is the only
-    * signal that a file holds null-key rows the range math cannot see —
-    * [[deleteRangeOcc]] uses it to demote such files from the
-    * retire-unread path (round-9 review: a fully-covered file's null rows
-    * were deleted unread AND absent from the CDC feed). */
-  def buildManifest(spark: SparkSession, dataDir: String, keyCol: String): DataFrame =
-    spark.read.parquet(dataDir)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key"),
-        count(lit(1)).as("n_rows"), count(col(keyCol)).as("n_keys"))
+    * n_keys), plus `min_<c>`/`max_<c>` for each of `extraCols` — the
+    * bootstrap of a table's v0 snapshot; after that every commit folds in
+    * only its own replacement files' stats (the Delta-log shape), the
+    * extra columns included ([[snapStatCols]]). One recursive listing and
+    * one scan ([[statsFor]]), typed from one footer — no schema-inference
+    * job. `n_keys` is the NON-NULL key count: min/max stats ignore nulls,
+    * so `n_keys < n_rows` is the only signal that a file holds null-key
+    * rows the range math cannot see — [[deleteRangeOcc]] uses it to
+    * demote such files from the retire-unread path (round-9 review: a
+    * fully-covered file's null rows were deleted unread AND absent from
+    * the CDC feed). */
+  def buildManifest(spark: SparkSession, dataDir: String, keyCol: String,
+                    extraCols: Seq[String] = Nil): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(dataDir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    statsFor(spark, listParquet(fs, p).toSeq.sorted, keyCol, extraCols)
+  }
 
   /** Files whose [min_key, max_key] can contain at least one key of the
     * single-column `keys` frame — a broadcast range semi-join against
     * the \|files\|-row manifest, shared by the MERGE's hit probe and
-    * [[semiJoinRead]]. */
+    * [[semiJoinReadVersion]]. */
   private def rangeHitFiles(manifest: DataFrame, keys: DataFrame): Array[String] =
     manifest.join(
         broadcast(keys.toDF("__k").distinct()),
@@ -65,36 +72,32 @@ object FileSkipping {
       .select("file").collect().map(_.getString(0)).sorted
 
   /** DYNAMIC FILE PRUNING — the read side of the MERGE's range probe:
-    * open only the files whose key range can contain a key of the
-    * (small) driving set, the manifest-level analog of Spark's dynamic
-    * partition pruning for tables that are range-CLUSTERED rather than
-    * partitioned-by-value. The classic shape: a selective dimension
-    * filter drives which fact files are read at all — at 100 TB the
-    * difference between scanning the week's files and scanning the
-    * table. Superset semantics as always (a range can admit keys that
-    * don't exist); the caller's join/filter stays exact. `keys` must be
-    * broadcast-small — it is collected into the probe twice removed
-    * (distinct + semi-join), same economics as the MERGE delta. */
-  def semiJoinRead(spark: SparkSession, dataDir: String, manifestDir: String,
-                   keys: DataFrame): DataFrame = {
-    val man = spark.read.parquet(manifestDir)
-    val hit = rangeHitFiles(man, keys)
-    if (hit.isEmpty) emptyLike(spark, dataDir, Some(man))
-    else spark.read.parquet(hit.toIndexedSeq: _*)
-  }
+    * open only the files of version `v` whose key range can contain a
+    * key of the (small) driving set, the manifest-level analog of Spark's
+    * dynamic partition pruning for tables that are range-CLUSTERED
+    * rather than partitioned-by-value. The classic shape: a selective
+    * dimension filter drives which fact files are read at all — at
+    * 100 TB the difference between scanning the week's files and
+    * scanning the table. Superset semantics as always (a range can admit
+    * keys that don't exist); the caller's join/filter stays exact. `keys`
+    * must be broadcast-small, same economics as the MERGE delta. */
+  def semiJoinReadVersion(spark: SparkSession, versionsDir: String, v: Int,
+                          keys: DataFrame): DataFrame =
+    VersionLog.readAdmitted(spark, versionsDir, v) { man =>
+      man.filter(col("file").isin(rangeHitFiles(man, keys).toIndexedSeq: _*))
+    }
 
-  /** Zero-row frame carrying the table's schema — the empty-admit branch
-    * of every pruned read. When the caller's manifest knows ANY file,
-    * the schema comes from that single file's footer (O(1)); only an
-    * empty manifest falls back to listing `dataDir` — recursively, so
+  /** Zero-row frame carrying the table's schema — the empty-hit branch
+    * of the MERGE probes and of [[bloomPointRead]] (snapshot reads have
+    * their own, [[VersionLog.readAdmitted]]). When `manifest` knows ANY
+    * file, the schema comes from that single file's footer (O(1)); only
+    * an empty manifest falls back to listing `dataDir` — recursively, so
     * the fallback also works on slot-resident layouts (`txn-<id>` and
     * `b<id>` slot dirs) where no parquet file sits at the top level. The
     * fallback's O(\|files\|) listing is the degenerate empty-table case,
-    * not the common empty-ADMIT case. */
-  private def emptyLike(spark: SparkSession, dataDir: String,
-                        manifest: Option[DataFrame] = None): DataFrame =
-    manifest.flatMap(_.select("file").limit(1).collect().headOption)
-      .map(_.getString(0)) match {
+    * not the common empty-hit case. */
+  private def emptyLike(spark: SparkSession, dataDir: String, manifest: DataFrame): DataFrame =
+    manifest.select("file").limit(1).collect().headOption.map(_.getString(0)) match {
       case Some(f) => DriverParquet.typedReader(spark, None, f).parquet(f).limit(0)
       case None =>
         spark.read.option("recursiveFileLookup", "true").parquet(dataDir).limit(0)
@@ -115,33 +118,6 @@ object FileSkipping {
       out.result()
     }
 
-  /** Stage `next` beside the live manifest and swap it in — the lazy
-    * manifest read never races its own overwrite. The swap is CHECKED:
-    * Hadoop rename/delete report most failures by returning false, and
-    * an unchecked delete-then-rename could leave the table with no
-    * manifest at all. The live manifest is retired by rename (its rows
-    * exist until the swap is proven), and the filesystem is resolved
-    * from the MANIFEST path — the caller's data-dir FS is the wrong one
-    * whenever the manifest lives on a different scheme. */
-  private[io] def swapManifest(spark: SparkSession, manifestDir: String,
-                               next: DataFrame): Unit = {
-    val live = new org.apache.hadoop.fs.Path(manifestDir)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(s"${manifestDir}__rewrite")
-    // one file per manifest (≤ ~10⁵ rows) — inherited partitioning wrote
-    // dozens of near-empty files, per-file open RTTs for every reader on
-    // an object store (the version log's object-store lesson, applied here);
-    // driver-direct since round 15 — see [[graft.io.DriverParquet]]
-    DriverParquet.writeSmall(next, tmp.toString)
-    val retired = new org.apache.hadoop.fs.Path(s"${manifestDir}__retiring")
-    fs.delete(retired, true) // a previous failed swap's leftover
-    require(fs.rename(live, retired),
-      s"could not retire live manifest $live — swap aborted, manifest intact")
-    require(fs.rename(tmp, live),
-      s"rename $tmp -> $live failed; previous manifest preserved at $retired")
-    require(fs.delete(retired, true), s"could not drop retired manifest $retired")
-  }
-
   /** Fresh per-file stats for `files` — one pass over the replacements.
     * `extraCols` appends `min_<c>`/`max_<c>` for each listed column the
     * files carry (a logically dropped column is absent from files
@@ -160,7 +136,7 @@ object FileSkipping {
   }
 
   /** The extra stat columns a snapshot carries beside the key stats:
-    * every `c` with both `min_<c>` and `max_<c>` (a [[buildManifestStats]]
+    * every `c` with both `min_<c>` and `max_<c>` (a [[buildManifest]]
     * bootstrap's `extraCols`). Every verb that writes replacement files
     * recomputes exactly these for them, so the stats a table was
     * bootstrapped with stay exact through every commit, at every version
@@ -171,16 +147,6 @@ object FileSkipping {
       case c if c.startsWith("min_") && c != "min_key" &&
           cols(s"max_${c.stripPrefix("min_")}") => c.stripPrefix("min_")
     }
-  }
-
-  /** [[buildManifest]] with the same `extraCols` stats [[statsFor]]
-    * appends — the bootstrap for a table whose SNAPSHOTS carry
-    * multi-column extents ([[snapStatCols]]). */
-  def buildManifestStats(spark: SparkSession, dataDir: String, keyCol: String,
-                         extraCols: Seq[String]): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dataDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    statsFor(spark, listParquet(fs, p).toSeq.sorted, keyCol, extraCols)
   }
 
   /** True when idempotent transaction `txn` is already at or below the
@@ -929,7 +895,7 @@ object FileSkipping {
         else stored match {
           case Some(st) =>
             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-          case None => emptyLike(spark, dataDir, Some(snap))
+          case None => emptyLike(spark, dataDir, snap)
         }).cache()
       try {
         val evolved = schemaContract(touched.schema, delta.schema, evolveSchema, "MERGE delta")
@@ -1082,7 +1048,7 @@ object FileSkipping {
         else stored match {
           case Some(st) =>
             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-          case None => emptyLike(spark, dataDir, Some(snap))
+          case None => emptyLike(spark, dataDir, snap)
         }).cache()
       try {
         schemaContract(touched.schema, delta.schema, evolveSchema = false, "MERGE source")
@@ -2243,25 +2209,8 @@ object FileSkipping {
       .as[(String, Array[Long])]
       .filter(fb => keys.exists(k => Bloom.mightContain(fb._2, k)))
       .map(_._1).collect().sorted
-    if (admitted.isEmpty) emptyLike(spark, dataDir, Some(man))
+    if (admitted.isEmpty) emptyLike(spark, dataDir, man)
     else spark.read.parquet(admitted.toIndexedSeq: _*)
-  }
-
-  /** MULTI-COLUMN manifest — the Iceberg per-file column-metrics shape:
-    * one row per file with `min_<c>`/`max_<c>` for EVERY listed column
-    * (plus `n_rows`). A single-key manifest prunes only its sort key; a
-    * z-ordered layout bounds every interleaved column's per-file extent
-    * at once, so this manifest turns ONE layout into file-level pruning
-    * on EACH filter column — the `OPTIMIZE ZORDER BY` + column-stats
-    * combination, one level above the row-group stats the z-order
-    * queries (q124/q134) already measure. */
-  def buildManifestMulti(spark: SparkSession, dataDir: String,
-                         keyCols: Seq[String]): DataFrame = {
-    require(keyCols.nonEmpty, "need at least one key column")
-    val stats = keyCols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read.parquet(dataDir).groupBy(input_file_name().as("file"))
-      .agg(stats.head, stats.tail :+ count(lit(1)).as("n_rows"): _*)
   }
 
   /** Conjunctive multi-range admit over `min_<c>`/`max_<c>` stats. NULL
@@ -2276,41 +2225,16 @@ object FileSkipping {
     }.reduce(_ && _)
   }
 
-  /** Open only the files whose per-column extents intersect EVERY
-    * requested range — conjunctive multi-dimensional file skipping over
-    * [[buildManifestMulti]]'s stats. Superset semantics as always: the
-    * caller's residual predicate makes the answer exact. */
-  def prunedReadMulti(spark: SparkSession, dataDir: String, manifestDir: String,
-                      ranges: Seq[(String, Column, Column)]): DataFrame = {
-    val man = spark.read.parquet(manifestDir)
-    val files = man.filter(multiRangeAdmit(ranges)).select("file").collect().map(_.getString(0))
-    if (files.isEmpty) emptyLike(spark, dataDir, Some(man))
-    else spark.read.parquet(files.toIndexedSeq: _*)
-  }
-
-  /** [[prunedReadMulti]] over a PINNED version's snapshot — the
-    * composition the round-10 verdict asked for: when an OCC table's
-    * snapshots carry multi-column stats (a [[buildManifestStats]]
-    * bootstrap, carried by every commit — [[snapStatCols]]), 2D file
-    * skipping works at ANY version, not just the head, with no derived
-    * cache to go stale. */
+  /** Open only the files of version `v` whose per-column extents
+    * intersect EVERY requested range — conjunctive multi-dimensional file
+    * skipping over the snapshot's `min_<c>`/`max_<c>` stats (a
+    * [[buildManifest]] bootstrap's `extraCols`, carried by every commit —
+    * [[snapStatCols]]), so 2D file skipping works at ANY version, not
+    * just the head, with no derived cache to go stale. Superset semantics
+    * as always: the caller's residual predicate makes the answer exact. */
   def prunedReadVersionMulti(spark: SparkSession, versionsDir: String, v: Int,
-                             ranges: Seq[(String, Column, Column)]): DataFrame = {
-    val man = VersionLog.manifestAt(spark, versionsDir, v)
-    val rows = VersionLog.dvRowsOf(man.filter(multiRangeAdmit(ranges)))
-    val schema = VersionLog.schemaAt(spark, versionsDir, v)
-    if (rows.isEmpty)
-      // schema from any file of the snapshot (footer-only read); a
-      // zero-FILE snapshot must not throw NoSuchElementException out of
-      // head() (round-11 review) — a typed empty read handles it
-      man.select("file").limit(1).collect().headOption match {
-        case Some(r) =>
-          val f = r.getString(0)
-          DriverParquet.typedReader(spark, schema, f).parquet(f).limit(0)
-        case None => VersionLog.readVersion(spark, versionsDir, v) // typed empty or loud
-      }
-    else VersionLog.readRowsWithDv(spark, schema, rows)
-  }
+                             ranges: Seq[(String, Column, Column)]): DataFrame =
+    VersionLog.readAdmitted(spark, versionsDir, v)(_.filter(multiRangeAdmit(ranges)))
 
   /** VERSIONED streaming ingest — per-batch slots composed with the
     * version log (round-9 verdict #7), so a reader can PIN a snapshot
@@ -2401,22 +2325,5 @@ object FileSkipping {
         .unionByName(stats, allowMissingColumns = true)
     VersionLog.commitSnapshot(spark, versionsDir, next, Seq(s"_BATCH_$batchId"),
       schemaJson = if (defines) Some(batch.schema.json) else None)
-  }
-
-  /** Read only the files whose [min_key, max_key] intersects [lo, hi].
-    * The manifest collect is driver-bounded BY DESIGN (|files| rows —
-    * 100 TB at 1 GB/file is ~10⁵ rows, the same order as the driver's
-    * own file listing). File pruning admits a superset, so the caller's
-    * residual predicate still applies — exactly like row-group skip. */
-  def prunedRead(spark: SparkSession, dataDir: String, manifestDir: String,
-                 lo: Column, hi: Column): DataFrame = {
-    val man = spark.read.parquet(manifestDir)
-    val files = man
-      .filter(col("max_key") >= lo && col("min_key") <= hi)
-      .select("file").collect().map(_.getString(0))
-    if (files.isEmpty)
-      // preserve the data schema on an empty admit (footer-only read)
-      emptyLike(spark, dataDir, Some(man))
-    else spark.read.parquet(files.toIndexedSeq: _*)
   }
 }

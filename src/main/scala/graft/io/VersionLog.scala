@@ -68,9 +68,10 @@ class TxnAlreadyApplied(val appId: String, val txnVersion: Long, val atVersion: 
   * conservative predicate check that catches two blind inserts of the
   * same key, Delta's WriteSerializable shape). Disjoint writers both
   * land; overlapping writers abort loudly and re-run against the new
-  * head. The LOG is the source of truth; a flat manifest dir is at most a
-  * mirror ([[syncLive]]). [[commit]]/[[commitSnapshot]] write a snapshot
-  * whole — a table's v0 bootstrap, and the serial-writer versioned
+  * head. The LOG is the source of truth, for writers and readers alike:
+  * every read of a table — whole ([[readVersion]]) or file-pruned —
+  * reads one committed snapshot through [[readAdmitted]].
+  * [[commit]]/[[commitSnapshot]] write a snapshot whole — a table's v0 bootstrap, and the serial-writer versioned
   * ingest, where the slot claim only turns a racing second writer into a
   * loud failure.
   *
@@ -618,8 +619,8 @@ object VersionLog {
     if (!landed && fs.exists(claim)) fs.delete(claim, false) else false
   }
 
-  /** The manifest as of version `v` — feed to
-    * [[FileSkipping.prunedRead]]-style logic or [[readVersion]]. The
+  /** The manifest as of version `v` — what [[readAdmitted]] admits
+    * files from, and what every transaction pins ([[begin]]). The
     * snapshot is read EAGERLY on the driver ([[DriverParquet.readSmall]]):
     * the returned frame is a local relation, so this call and every
     * `collect` of a projection or filter over it start no Spark job.
@@ -734,51 +735,53 @@ object VersionLog {
     * with no record reads schema-inferred, which is exact because the
     * mutators REJECT schema-divergent deltas unless evolution was
     * requested (the loud half of the round-11 verdict-#1 contract). */
-  def readVersion(spark: SparkSession, versionsDir: String, v: Int): DataFrame = {
-    val rows = dvRowsOf(manifestAt(spark, versionsDir, v))
-    if (rows.isEmpty) emptySnapshot(spark, versionsDir, v)
-    else readRowsWithDv(spark, schemaAt(spark, versionsDir, v), rows)
-  }
+  def readVersion(spark: SparkSession, versionsDir: String, v: Int): DataFrame =
+    readAdmitted(spark, versionsDir, v)(identity)
 
-  /** Zero-row frame for a zero-file snapshot (e.g. after a delete retired
-    * every file): schema from the version's record when present, else a
-    * LOUD error — never the old `head()` NoSuchElementException
-    * (round-11 review). */
-  private def emptySnapshot(spark: SparkSession, versionsDir: String, v: Int): DataFrame =
-    schemaAt(spark, versionsDir, v) match {
-      case Some(st) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-      case None => throw new UntypedEmptyTable(
-        s"version v$v of $versionsDir references zero files and records no schema — " +
-          "cannot produce a typed empty frame; read a neighboring version or record a " +
-          "schema (schema records appear from the first schema-evolving commit onward)")
+  /** The one reader engine over version `v`'s snapshot: `admit` filters
+    * the snapshot's rows (identity for a whole-table read; a stats
+    * predicate for a file-pruned one — [[prunedReadVersion]],
+    * [[FileSkipping.prunedReadVersionMulti]],
+    * [[FileSkipping.semiJoinReadVersion]]), and the admitted files are
+    * read with their deletion vectors applied ([[readRowsWithDv]]), typed
+    * by the version's schema record when it has one. An EMPTY ADMIT is a
+    * zero-row frame typed from any one snapshot file's footer (O(1), no
+    * Spark job); a ZERO-FILE snapshot (e.g. after a delete retired every
+    * file) uses the schema record, or fails LOUDLY with
+    * [[UntypedEmptyTable]] — never the old `head()`
+    * NoSuchElementException (round-11 review). */
+  private[io] def readAdmitted(spark: SparkSession, versionsDir: String, v: Int)(
+      admit: DataFrame => DataFrame): DataFrame = {
+    val man = manifestAt(spark, versionsDir, v)
+    val rows = dvRowsOf(admit(man))
+    val schema = schemaAt(spark, versionsDir, v)
+    if (rows.nonEmpty) readRowsWithDv(spark, schema, rows)
+    else man.select("file").limit(1).collect().headOption.map(_.getString(0)) match {
+      case Some(f) => DriverParquet.typedReader(spark, schema, f).parquet(f).limit(0)
+      case None => schema match {
+        case Some(st) =>
+          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
+        case None => throw new UntypedEmptyTable(
+          s"version v$v of $versionsDir references zero files and records no schema — " +
+            "cannot produce a typed empty frame; read a neighboring version or record a " +
+            "schema (schema records appear from the first schema-evolving commit onward)")
+      }
     }
+  }
 
   /** Time travel COMPOSED with file skipping: open only the files of
     * version `v` whose [min_key, max_key] intersects [lo, hi] — a pinned
     * reader of a range-clustered table should not pay O(snapshot files)
-    * for a narrow range any more than a head reader does
-    * ([[FileSkipping.prunedRead]]'s math over the version's own
-    * manifest). Superset semantics as always: the caller's residual
-    * predicate makes the answer exact. */
+    * for a narrow range any more than a head reader does. The manifest
+    * collect is driver-bounded BY DESIGN (\|files\| rows — 100 TB at
+    * 1 GB/file is ~10⁵ rows, the same order as the driver's own file
+    * listing). Superset semantics as always: the caller's residual
+    * predicate makes the answer exact, exactly like row-group skip. */
   def prunedReadVersion(spark: SparkSession, versionsDir: String, v: Int,
                         lo: org.apache.spark.sql.Column,
                         hi: org.apache.spark.sql.Column): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val man = manifestAt(spark, versionsDir, v)
-    val rows = dvRowsOf(man.filter(col("max_key") >= lo && col("min_key") <= hi))
-    val schema = schemaAt(spark, versionsDir, v)
-    if (rows.isEmpty)
-      // schema from any file of the snapshot (footer-only read); a
-      // zero-FILE snapshot falls back to the recorded schema or fails
-      // loudly (round-11 review: head() threw NoSuchElementException)
-      man.select("file").limit(1).collect().headOption match {
-        case Some(r) =>
-          val f = r.getString(0)
-          DriverParquet.typedReader(spark, schema, f).parquet(f).limit(0)
-        case None => emptySnapshot(spark, versionsDir, v)
-      }
-    else readRowsWithDv(spark, schema, rows)
+    readAdmitted(spark, versionsDir, v)(_.filter(col("max_key") >= lo && col("min_key") <= hi))
   }
 
   /** Pin an OCC transaction's read snapshot: (head version, that
@@ -1463,36 +1466,6 @@ object VersionLog {
           "the table to a version that does not reference it", e)
     }
 
-  /** Mirror the head snapshot into a flat manifest dir — for the
-    * read-only flat-manifest readers ([[FileSkipping.prunedRead]] and
-    * friends). Call once writers QUIESCE: the mirror itself is not
-    * concurrency-safe (concurrent readers should pin versions via
-    * [[readVersion]] while writers race). */
-  def syncLive(spark: SparkSession, versionsDir: String, manifestDir: String): Unit = {
-    val h = head(spark, versionsDir)
-    require(h >= 0, s"nothing committed in $versionsDir")
-    // strip the per-commit classification column: it describes the HEAD
-    // COMMIT, not the files, and a flat manifest has no commits to
-    // classify
-    val manifest0 = manifestAt(spark, versionsDir, h)
-    // a head with LIVE deletion vectors cannot be mirrored: flat-manifest
-    // readers have no DV apply path, so the mirror would silently
-    // resurrect every DV-deleted row. Materialize first (OPTIMIZE folds
-    // DV'd files into clean rewrites), then sync.
-    if (manifest0.columns.contains("dv_file"))
-      require(manifest0.filter(org.apache.spark.sql.functions.col("dv_file").isNotNull).isEmpty,
-        s"head v$h of $versionsDir carries live deletion vectors — the flat manifest " +
-          "has no DV apply path and would resurrect deleted rows; OPTIMIZE the table " +
-          "(materializes DVs) before syncLive")
-    val manifest = manifest0.drop("rewrite_only").drop("dv_file")
-    val live = new org.apache.hadoop.fs.Path(manifestDir)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(live))
-      FileSkipping.swapManifest(spark, manifestDir, manifest)
-    else
-      DriverParquet.writeSmall(manifest, manifestDir)
-  }
-
   /** Physically delete what time travel no longer needs: drop all but
     * the newest `retainLast` versions, then delete the data files
     * referenced only by the dropped versions. File liveness is decided
@@ -1502,7 +1475,9 @@ object VersionLog {
     * the log wants dead must resolve under `dataDir` or the vacuum
     * refuses. Idempotent and re-runnable: only version dirs that still
     * EXIST are read, so the recurring maintenance call keeps working
-    * after previous vacuums removed older versions.
+    * after previous vacuums removed older versions. A log dir that does
+    * not exist at all is a mistyped or never-bootstrapped table, not an
+    * empty one: it fails loudly, like [[describeHistory]].
     *
     * PINNED readers/transactions vs vacuum — the contract (the same one
     * Delta's VACUUM retention makes): a pin is an in-memory read of some
@@ -1519,7 +1494,7 @@ object VersionLog {
              retainLast: Int): (Int, Int) = {
     require(retainLast >= 1, "must retain at least the head version")
     val (fs, p) = fsFor(spark, versionsDir)
-    if (!fs.exists(p)) return (0, 0)
+    require(fs.exists(p), s"version log $versionsDir does not exist")
     val existing = fs.listStatus(p).map(_.getPath.getName)
       .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))
       .map(_.drop(1).toInt).sorted.toSeq
@@ -1571,7 +1546,7 @@ object VersionLog {
                    retainLast: Int): (Seq[String], Seq[String], Seq[Int]) = {
     require(retainLast >= 1, "must retain at least the head version")
     val (fs, p) = fsFor(spark, versionsDir)
-    if (!fs.exists(p)) return (Seq.empty, Seq.empty, Seq.empty)
+    require(fs.exists(p), s"version log $versionsDir does not exist")
     val existing = fs.listStatus(p).map(_.getPath.getName)
       .filter(n => n.startsWith("v") && n.drop(1).forall(_.isDigit))
       .map(_.drop(1).toInt).sorted.toSeq

@@ -18,12 +18,12 @@ import graft.util.{Parity, Staging}
   * deterministic negative sampling (map-only generation), a
   * bloom-prefiltered decontamination twin of q95 (membership pruning when
   * the benchmark set outgrows a broadcast hash relation), and the
-  * manifest table's full write lifecycle — pruned read (q164), keyed
-  * MERGE (q181), compaction (q182), bloom point-skip (q183), range
-  * delete (q179), streaming ingest through a crash (q184), version-log
-  * time travel (q185), change feeds from merge and delete (q186, q189),
-  * 2D file skipping over the z-order layout (q187), and dynamic file
-  * pruning through a manifest semi-join (q188).
+  * version-log table's full lifecycle — pruned snapshot read (q164),
+  * keyed MERGE (q181), compaction (q182), bloom point-skip (q183), range
+  * delete (q179), streaming ingest through a crash (q184), time travel
+  * (q185), change feeds from merge and delete (q186, q189), 2D file
+  * skipping over the z-order layout (q187), and dynamic file pruning
+  * through a snapshot semi-join (q188).
   *
   * Every query stays oracle-exact: approximate structures (sample
   * candidates, bloom bits) only decide WHERE work happens; an exact
@@ -47,17 +47,20 @@ object ScaleOpsPack extends QueryPack {
         .write.mode("overwrite").parquet(dir)
     }
 
-  /** q164: orders laid out as 16 date-range-sorted files plus their
-    * per-file min/max manifest — staged TOGETHER so the manifest can
-    * never go stale against a re-staged layout. */
+  /** q164/q188: orders laid out as 16 date-range-sorted files plus a
+    * version log whose v0 carries their per-file min/max stats — staged
+    * TOGETHER so the stats can never go stale against a re-staged
+    * layout. (The `_log` name keeps a layout staged with a flat manifest
+    * and no log from being reused.) */
   private def stagedDateLayout(s: SparkSession, d: String): String =
-    Staging.ensure(Staging.dirFor("orders_bydate", d), s"$d/orders.parquet") { dir =>
+    Staging.ensure(Staging.dirFor("orders_bydate_log", d), s"$d/orders.parquet") { dir =>
       Tables.orders(s, d)
         .repartitionByRange(16, col("o_orderdate"))
         .sortWithinPartitions("o_orderdate")
         .write.mode("overwrite").parquet(s"$dir/data")
-      graft.io.FileSkipping.buildManifest(s, s"$dir/data", "o_orderdate")
-        .write.mode("overwrite").parquet(s"$dir/manifest")
+      graft.io.VersionLog.commitSnapshot(s, s"$dir/versions",
+        graft.io.FileSkipping.buildManifest(s, s"$dir/data", "o_orderdate"))
+      ()
     }
 
   /** q183: lineitem laid out as 32 part-sorted files plus a per-file
@@ -79,11 +82,12 @@ object ScaleOpsPack extends QueryPack {
     * replayable keyHash from two DIFFERENT source columns (so both
     * coordinates cover the full 0..255 range at every scale factor —
     * raw l_suppkey tops out at 100 at sf0.01), as 32 z-sorted files
-    * plus a MULTI-column manifest carrying each file's extents in BOTH
+    * plus a version log whose v0 carries each file's extents in BOTH
     * dims — the layout that lets one table serve file-pruned reads on
-    * either filter column (read-only probe, staged once per sfDir). */
+    * either filter column (read-only probe, staged once per sfDir; the
+    * `_log` name as in [[stagedDateLayout]]). */
   private def stagedZLayout(s: SparkSession, d: String): String =
-    Staging.ensure(Staging.dirFor("lineitem_zorder", d), s"$d/lineitem.parquet") { dir =>
+    Staging.ensure(Staging.dirFor("lineitem_zorder_log", d), s"$d/lineitem.parquet") { dir =>
       Tables.lineitem(s, d)
         .select(pmod(Parity.keyHash(col("l_orderkey")), lit(256L)).as("x"),
           pmod(Parity.keyHash(col("l_partkey") * 131), lit(256L)).as("y"),
@@ -92,8 +96,9 @@ object ScaleOpsPack extends QueryPack {
         .repartitionByRange(32, col("z")).sortWithinPartitions("z")
         .drop("z")
         .write.mode("overwrite").parquet(s"$dir/data")
-      graft.io.FileSkipping.buildManifestMulti(s, s"$dir/data", Seq("x", "y"))
-        .write.mode("overwrite").parquet(s"$dir/manifest")
+      graft.io.VersionLog.commitSnapshot(s, s"$dir/versions",
+        graft.io.FileSkipping.buildManifest(s, s"$dir/data", "x", Seq("x", "y")))
+      ()
     }
 
   override def stage(s: SparkSession, d: String): Unit = {
@@ -401,10 +406,10 @@ object ScaleOpsPack extends QueryPack {
           coalesce(col("shared_grams"), lit(0L)).as("shared_grams"))
     },
 
-    // ── q164: manifest-driven FILE-level data skipping ────────────────
-    // The table-format pattern without the table format: a per-file
-    // min/max manifest (staged with the layout) decides which files a
-    // 2-month date probe OPENS — row-group skip prunes inside a file;
+    // ── q164: snapshot-driven FILE-level data skipping ────────────────
+    // The table-format pattern: the per-file min/max stats of the
+    // layout's committed v0 (staged with the layout) decide which files
+    // a 2-month date probe OPENS — row-group skip prunes inside a file;
     // this prunes the file open itself. The residual filter keeps the
     // answer exact, so the oracle is the plain filtered aggregate over
     // the source table; ScaleOpsSpec measures the file-open reduction.
@@ -412,7 +417,7 @@ object ScaleOpsPack extends QueryPack {
       val base = stagedDateLayout(s, d)
       val lo = lit("1998-03-01").cast("timestamp")
       val hi = lit("1998-04-30").cast("timestamp")
-      graft.io.FileSkipping.prunedRead(s, s"$base/data", s"$base/manifest", lo, hi)
+      graft.io.VersionLog.prunedReadVersion(s, s"$base/versions", 0, lo, hi)
         .filter(col("o_orderdate") >= lo && col("o_orderdate") <= hi)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice")).as("sum_price"))
@@ -599,9 +604,9 @@ object ScaleOpsPack extends QueryPack {
         .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice")).as("sum_price"))
     },
 
-    // ── q187: multi-column manifest × z-order — 2D FILE skipping ──────
+    // ── q187: multi-column snapshot stats × z-order — 2D FILE skipping ─
     // q124/q134 proved z-order's row-group pruning; this is the same
-    // property one level up, where 100 TB actually hurts: the manifest
+    // property one level up, where 100 TB actually hurts: the layout's v0
     // carries every file's extents in BOTH interleaved dims, so a 2D box
     // (1/64 of the plane) opens a handful of the 32 files, and a probe
     // on EITHER single column still prunes — one layout, two pruned
@@ -610,19 +615,19 @@ object ScaleOpsPack extends QueryPack {
     // the answer oracle-exact.
     "q187_zorder_multidim_skip" -> { (s, d) =>
       val base = stagedZLayout(s, d)
-      graft.io.FileSkipping.prunedReadMulti(s, s"$base/data", s"$base/manifest",
+      graft.io.FileSkipping.prunedReadVersionMulti(s, s"$base/versions", 0,
           Seq(("x", lit(64L), lit(95L)), ("y", lit(160L), lit(191L))))
         .filter(col("x").between(64L, 95L) && col("y").between(160L, 191L))
         .agg(count(lit(1)).as("n"), Parity.dsum(col("l_extendedprice")).as("sum_price"))
     },
 
-    // ── q188: DYNAMIC FILE PRUNING (manifest semi-join read) ──────────
+    // ── q188: DYNAMIC FILE PRUNING (snapshot semi-join read) ──────────
     // The read side of the MERGE's range probe, and the manifest-level
     // analog of Spark's dynamic partition pruning for range-CLUSTERED
     // (not partitioned-by-value) tables: a tiny driving dimension — a
     // deterministic ~1/601 sample of distinct order dates — decides
     // which fact files are opened at all via a broadcast range
-    // semi-join against the manifest; the residual broadcast join keeps
+    // semi-join against the layout's v0 stats; the residual broadcast join keeps
     // the answer exact. At 100 TB this is "scan the week's files, not
     // the table". ScaleOpsSpec measures the file-open bound (≤ one file
     // per driving date on the range-sorted layout).
@@ -633,7 +638,7 @@ object ScaleOpsPack extends QueryPack {
         .withColumn("rn", row_number().over(Window.orderBy(col("o_orderdate"))))
         .filter(pmod(col("rn"), lit(601)) === 1)
         .select(col("o_orderdate"))
-      graft.io.FileSkipping.semiJoinRead(s, s"$base/data", s"$base/manifest", dates)
+      graft.io.FileSkipping.semiJoinReadVersion(s, s"$base/versions", 0, dates)
         .join(broadcast(dates), Seq("o_orderdate"))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice")).as("sum_price"))
@@ -742,7 +747,6 @@ object ScaleOpsPack extends QueryPack {
         deltaA, "A", pinned = Some(pinA)) // v1
       val vB = FileSkipping.mergeKeyedOcc(s, s"$base/data", vdir, "o_orderkey",
         deltaB, "B", pinned = Some(pinB)) // v2, via rebase
-      VersionLog.syncLive(s, vdir, s"$base/manifest")
       VersionLog.readVersion(s, vdir, vB)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice")).as("sum_price"),
@@ -800,7 +804,6 @@ object ScaleOpsPack extends QueryPack {
       val (vC, _, _) = FileSkipping.compactSmallOcc(s, s"$base/data", vdir,
         "o_orderkey", smallBytes = bigLen, targetBytes = Long.MaxValue,
         "C", pinned = Some(pinC)) // v2, rewrite-only rebase over the merge
-      VersionLog.syncLive(s, vdir, s"$base/manifest")
       VersionLog.readVersion(s, vdir, vC)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice")).as("sum_price"),
@@ -860,7 +863,6 @@ object ScaleOpsPack extends QueryPack {
         lit(kmax / 10), lit(2 * (kmax / 10)), "A", pinned = Some(pinA)) // v1
       val (vB, _, _) = FileSkipping.deleteRangeOcc(s, s"$base/data", vdir, "o_orderkey",
         lit(7 * (kmax / 10)), lit(8 * (kmax / 10)), "B", pinned = Some(pinB)) // v2
-      VersionLog.syncLive(s, vdir, s"$base/manifest")
       VersionLog.readVersion(s, vdir, vB)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice")).as("sum_price"),
@@ -1101,7 +1103,7 @@ object ScaleOpsPack extends QueryPack {
     // schema"). The table is z-ordered on hash-derived (x, y) and keyed
     // by zk = zvalue·2³³ + o_orderkey (injective, z-clustered); its
     // snapshots carry min/max for x AND y beside the key stats (the
-    // buildManifestStats bootstrap; every commit carries them), so after an
+    // buildManifest bootstrap; every commit carries them), so after an
     // OCC merge BOTH the pinned v0 and the new head serve 2D box-pruned
     // reads from their own snapshot's stats — no derived cache to go
     // stale (the q187 layout, composed with q192's transaction and
@@ -1123,7 +1125,7 @@ object ScaleOpsPack extends QueryPack {
         withZk(src)
           .repartitionByRange(16, col("zk")).sortWithinPartitions("zk")
           .write.mode("overwrite").parquet(s"$base/data")
-        FileSkipping.buildManifestStats(s, s"$base/data", "zk", Seq("x", "y"))
+        FileSkipping.buildManifest(s, s"$base/data", "zk", Seq("x", "y"))
           .write.mode("overwrite").parquet(s"$base/manifest")
       }
       val vdir = s"$base/versions"
@@ -1521,7 +1523,7 @@ object ScaleOpsPack extends QueryPack {
           col("o_totalprice"))
           .repartition(16) // SCATTERED: every file spans the whole plane
           .write.mode("overwrite").parquet(s"$base/data")
-        FileSkipping.buildManifestStats(s, s"$base/data", "o_orderkey", Seq("x", "y"))
+        FileSkipping.buildManifest(s, s"$base/data", "o_orderkey", Seq("x", "y"))
           .write.mode("overwrite").parquet(s"$base/manifest")
       }
       val vdir = s"$base/versions"
@@ -1629,7 +1631,7 @@ object ScaleOpsPack extends QueryPack {
           col("o_totalprice"))
           .repartition(16) // SCATTERED: every file spans the whole cube
           .write.mode("overwrite").parquet(s"$base/data")
-        FileSkipping.buildManifestStats(s, s"$base/data", "o_orderkey", Seq("x", "y", "w"))
+        FileSkipping.buildManifest(s, s"$base/data", "o_orderkey", Seq("x", "y", "w"))
           .write.mode("overwrite").parquet(s"$base/manifest")
       }
       val vdir = s"$base/versions"
@@ -1902,7 +1904,7 @@ object ScaleOpsPack extends QueryPack {
           col("o_totalprice"))
           .repartition(16) // SCATTERED: every file spans the whole cube
           .write.mode("overwrite").parquet(s"$base/data")
-        FileSkipping.buildManifestStats(s, s"$base/data", "o_orderkey", Seq("x", "y", "w"))
+        FileSkipping.buildManifest(s, s"$base/data", "o_orderkey", Seq("x", "y", "w"))
           .write.mode("overwrite").parquet(s"$base/manifest")
       }
       val vdir = s"$base/versions"

@@ -20,13 +20,13 @@ import org.apache.spark.sql.functions._
   *     file-keyed presence window could not see), and vice versa;
   *   - materialization: MERGE, OPTIMIZE and ZORDER rewrite DV'd files
   *     clean (head carries no pointer; content preserved);
-  *   - time travel composes: the pre-delete version still reads all rows,
-  *     pruned reads apply DVs;
+  *   - time travel composes: the pre-delete version still reads all rows;
+  *     every file-pruned snapshot read (range, box, semi-join) applies
+  *     DVs through the same engine as the whole-table read;
   *   - vacuum: sidecars are log-referenced storage — live while any
   *     retained version points at them, reclaimed once only dropped
   *     versions do;
-  *   - syncLive refuses to mirror a head with live DVs (flat-manifest
-  *     readers have no apply path — a silent mirror would resurrect).
+  *   - `maxDvRows` bounds a sidecar: an over-limit DV delete refuses.
   */
 class DeletionVectorSpec extends SparkSpec {
   import graft.io.{FileSkipping, TableSql, VersionLog}
@@ -36,13 +36,14 @@ class DeletionVectorSpec extends SparkSpec {
       (col("id") % 97).cast("double").as("v"),
       concat(lit("t"), (col("id") % 7).cast("string")).as("tag"))
 
-  private def freshOcc(name: String, n: Long = 4000, nFiles: Int = 8): String = {
+  private def freshOcc(name: String, n: Long = 4000, nFiles: Int = 8,
+                       extraStats: Seq[String] = Nil): String = {
     val base = scratch(s"dv_$name")
     graft.util.Staging.deleteRecursive(base)
     rows(0, n).repartitionByRange(nFiles, col("k")).sortWithinPartitions("k")
       .write.mode("overwrite").parquet(s"$base/data")
     VersionLog.commitSnapshot(spark, s"$base/versions",
-      FileSkipping.buildManifest(spark, s"$base/data", "k"))
+      FileSkipping.buildManifest(spark, s"$base/data", "k", extraStats))
     base
   }
 
@@ -243,19 +244,47 @@ class DeletionVectorSpec extends SparkSpec {
     assert(keysAt(base, v2) == ((0L until 10L) ++ (21L until 4000L)))
   }
 
-  test("syncLive refuses a head with live DVs; maxDvRows bounds the sidecar") {
-    val base = freshOcc("synclive")
+  test("pruned snapshot reads apply DVs: range, box and semi-join") {
+    import spark.implicits._
+    val base = freshOcc("pruned", extraStats = Seq("k"))
+    val vdir = s"$base/versions"
+    val (v1, nDel, _) = FileSkipping.deleteRangeDvOcc(spark, s"$base/data", vdir,
+      "k", lit(1000), lit(1099), "t1")
+    assert(nDel == 100L)
+    def range(v: Int, lo: Long, hi: Long) = VersionLog.prunedReadVersion(spark, vdir, v, lit(lo), lit(hi))
+    def box(v: Int, lo: Long, hi: Long) =
+      FileSkipping.prunedReadVersionMulti(spark, vdir, v, Seq(("k", lit(lo), lit(hi))))
+    def semi(v: Int, keys: Long*) = FileSkipping.semiJoinReadVersion(spark, vdir, v, keys.toDF("k"))
+    def keys(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select("k").collect().map(_.getLong(0)).toSet
+    val deleted = (1000L to 1099L).toSet
+    // the head never returns a DV-deleted row, on any read shape — no
+    // residual filter, so the read itself must drop them
+    for (df <- Seq(range(v1, 950, 1150), box(v1, 950, 1150), semi(v1, 1000, 1050, 1200))) {
+      val ks = keys(df)
+      assert((ks & deleted).isEmpty, s"DV-deleted rows resurrected: ${(ks & deleted).size}")
+      assert(ks.contains(1100L) || ks.contains(1200L))
+    }
+    // a pin from before the delete still returns the deleted rows
+    for (df <- Seq(range(0, 950, 1150), box(0, 950, 1150), semi(0, 1000, 1050)))
+      assert(Set(1000L, 1050L).subsetOf(keys(df)))
+    // an empty admit is zero rows with the table's schema
+    val tableSchema = VersionLog.readVersion(spark, vdir, v1).schema.map(f => (f.name, f.dataType))
+    for (df <- Seq(range(v1, 90000, 99999), box(v1, 90000, 99999), semi(v1, 99999))) {
+      assert(df.count() == 0)
+      assert(df.schema.map(f => (f.name, f.dataType)) == tableSchema)
+    }
+  }
+
+  test("maxDvRows bounds the sidecar: an over-limit DV delete is refused") {
+    val base = freshOcc("maxdvrows")
     FileSkipping.deleteRangeDvOcc(spark, s"$base/data", s"$base/versions",
       "k", lit(10), lit(20), "t1")
     val e = intercept[IllegalArgumentException] {
-      VersionLog.syncLive(spark, s"$base/versions", s"$base/manifest_flat")
-    }
-    assert(e.getMessage.contains("deletion vectors"))
-    val e2 = intercept[IllegalArgumentException] {
       FileSkipping.deleteRangeDvOcc(spark, s"$base/data", s"$base/versions",
         "k", lit(0), lit(4000), "t2", maxDvRows = 100L)
     }
-    assert(e2.getMessage.contains("copy-on-write"))
+    assert(e.getMessage.contains("copy-on-write"))
   }
 
   test("SQL frontend: DELETE on a deletionVectors table is merge-on-read; SELECT applies DVs") {

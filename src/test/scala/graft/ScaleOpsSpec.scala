@@ -19,7 +19,7 @@ class ScaleOpsSpec extends SparkSpec {
   private def bootstrap(base: String, keyCol: String, extra: Seq[String] = Nil): String = {
     val vdir = s"$base/versions"
     graft.io.VersionLog.commitSnapshot(spark, vdir,
-      graft.io.FileSkipping.buildManifestStats(spark, s"$base/data", keyCol, extra))
+      graft.io.FileSkipping.buildManifest(spark, s"$base/data", keyCol, extra))
     vdir
   }
 
@@ -213,7 +213,7 @@ class ScaleOpsSpec extends SparkSpec {
   test("manifest file skipping opens strictly fewer files and stays exact") {
     val d = sf("sf0.01")
     SparkEntry.stage(spark, d)
-    val base = util.Staging.dirFor("orders_bydate", d)
+    val base = util.Staging.dirFor("orders_bydate_log", d)
     val lo = lit("1998-03-01").cast("timestamp")
     val hi = lit("1998-04-30").cast("timestamp")
     def numFilesScanned(df: org.apache.spark.sql.DataFrame): Long = {
@@ -231,8 +231,7 @@ class ScaleOpsSpec extends SparkSpec {
         .sum
     }
     val total = spark.read.parquet(s"$base/data").inputFiles.length
-    val pruned = graft.io.FileSkipping.prunedRead(
-        spark, s"$base/data", s"$base/manifest", lo, hi)
+    val pruned = graft.io.VersionLog.prunedReadVersion(spark, s"$base/versions", 0, lo, hi)
       .filter(col("o_orderdate").between(lo, hi))
     val full = spark.read.parquet(s"$base/data")
       .filter(col("o_orderdate").between(lo, hi))
@@ -245,7 +244,7 @@ class ScaleOpsSpec extends SparkSpec {
       s"manifest barely pruned: opened $opened of $total files")
     // empty admit: a range before the data's min returns an EMPTY frame
     // with the data schema, not an error
-    val none = graft.io.FileSkipping.prunedRead(spark, s"$base/data", s"$base/manifest",
+    val none = graft.io.VersionLog.prunedReadVersion(spark, s"$base/versions", 0,
       lit("1960-01-01").cast("timestamp"), lit("1960-12-31").cast("timestamp"))
     assert(none.count() == 0 && none.schema == full.schema)
   }
@@ -505,17 +504,11 @@ class ScaleOpsSpec extends SparkSpec {
     val v0 = VersionLog.readVersion(spark, vdir, 0)
     assert(v0.count() == orders.count())
     assert(v0.exceptAll(orders).count() == 0 && orders.exceptAll(v0).count() == 0)
-    // head == the set-theoretic expectation, and == the synced flat manifest
+    // head == the set-theoretic expectation
     val expected = orders.filter(col("o_orderkey") % 53 =!= 0).unionByName(updates)
       .filter(!col("o_orderkey").between(1L, 300L))
     val headV = VersionLog.readVersion(spark, vdir, 2)
     assert(headV.exceptAll(expected).count() == 0 && expected.exceptAll(headV).count() == 0)
-    VersionLog.syncLive(spark, vdir, s"$localBase/manifest")
-    val live = spark.read.parquet(s"$localBase/manifest")
-    // modulo the per-commit classification column snapshots carry (log
-    // metadata, not manifest data — syncLive strips it the same way)
-    val snap = VersionLog.manifestAt(spark, vdir, 2).drop("rewrite_only")
-    assert(live.exceptAll(snap).count() == 0 && snap.exceptAll(live).count() == 0)
     // vacuum to head only: both old versions dropped, dead files really
     // deleted, every head-referenced file survives, head still replays
     val beforeVacuum = parquetNames(s"$localBase/data")
@@ -967,14 +960,15 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("multi-column manifest on the z-layout file-prunes each dimension; a 1D-sorted layout cannot") {
-    import graft.io.FileSkipping
+    import graft.io.{FileSkipping, VersionLog}
     val d = sf("sf0.01")
     SparkEntry.stage(spark, d)
-    val base = util.Staging.dirFor("lineitem_zorder", d)
-    val total = spark.read.parquet(s"$base/manifest").count()
+    val base = util.Staging.dirFor("lineitem_zorder_log", d)
+    val vdir = s"$base/versions"
+    val total = VersionLog.manifestAt(spark, vdir, 0).count()
     assert(total >= 16)
     // 2D box (1/64 of the plane): opens a small fraction of the files
-    val box = FileSkipping.prunedReadMulti(spark, s"$base/data", s"$base/manifest",
+    val box = FileSkipping.prunedReadVersionMulti(spark, vdir, 0,
       Seq(("x", lit(64L), lit(95L)), ("y", lit(160L), lit(191L))))
     assert(box.inputFiles.length * 4 <= total,
       s"2D box opened ${box.inputFiles.length} of $total files")
@@ -985,10 +979,8 @@ class ScaleOpsSpec extends SparkSpec {
     assert(resid.count() == full.count() && resid.count() > 0)
     // EITHER single dimension prunes from the one z-layout — the
     // property a 1D sort cannot give
-    val xOnly = FileSkipping.prunedReadMulti(spark, s"$base/data", s"$base/manifest",
-      Seq(("x", lit(64L), lit(95L))))
-    val yOnly = FileSkipping.prunedReadMulti(spark, s"$base/data", s"$base/manifest",
-      Seq(("y", lit(160L), lit(191L))))
+    val xOnly = FileSkipping.prunedReadVersionMulti(spark, vdir, 0, Seq(("x", lit(64L), lit(95L))))
+    val yOnly = FileSkipping.prunedReadVersionMulti(spark, vdir, 0, Seq(("y", lit(160L), lit(191L))))
     assert(xOnly.inputFiles.length * 2 <= total,
       s"x-only probe opened ${xOnly.inputFiles.length} of $total")
     assert(yOnly.inputFiles.length * 2 <= total,
@@ -1000,10 +992,9 @@ class ScaleOpsSpec extends SparkSpec {
     spark.read.parquet(s"$base/data")
       .repartitionByRange(32, col("x")).sortWithinPartitions("x")
       .write.mode("overwrite").parquet(s"$localBase/data")
-    FileSkipping.buildManifestMulti(spark, s"$localBase/data", Seq("x", "y"))
-      .write.mode("overwrite").parquet(s"$localBase/manifest")
-    val totalX = spark.read.parquet(s"$localBase/manifest").count()
-    val yOnSorted = FileSkipping.prunedReadMulti(spark, s"$localBase/data", s"$localBase/manifest",
+    val xdir = bootstrap(localBase, "x", Seq("x", "y"))
+    val totalX = VersionLog.manifestAt(spark, xdir, 0).count()
+    val yOnSorted = FileSkipping.prunedReadVersionMulti(spark, xdir, 0,
       Seq(("y", lit(160L), lit(191L))))
     assert(yOnSorted.inputFiles.length * 4 >= totalX * 3,
       s"x-sorted layout unexpectedly pruned the y probe: " +
@@ -1015,15 +1006,15 @@ class ScaleOpsSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     val d = sf("sf0.01")
     SparkEntry.stage(spark, d)
-    val base = util.Staging.dirFor("orders_bydate", d)
-    val total = spark.read.parquet(s"$base/manifest").count()
+    val base = util.Staging.dirFor("orders_bydate_log", d)
+    val total = graft.io.VersionLog.manifestAt(spark, s"$base/versions", 0).count()
     val dates = graft.io.Tables.orders(spark, d).select(col("o_orderdate")).distinct()
       .withColumn("rn", row_number().over(Window.orderBy(col("o_orderdate"))))
       .filter(pmod(col("rn"), lit(601)) === 1)
       .select(col("o_orderdate"))
     val nDates = dates.count()
     assert(nDates >= 3, s"driving set too small ($nDates) to exercise pruning")
-    val pruned = FileSkipping.semiJoinRead(spark, s"$base/data", s"$base/manifest", dates)
+    val pruned = FileSkipping.semiJoinReadVersion(spark, s"$base/versions", 0, dates)
     val opened = pruned.inputFiles.length
     // range-sorted layout: each scattered date lives in exactly one file
     assert(opened <= nDates, s"opened $opened files for $nDates driving dates")

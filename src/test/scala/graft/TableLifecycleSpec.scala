@@ -566,7 +566,7 @@ class TableLifecycleSpec extends SparkSpec {
     val vdir = s"$base/versions"
     def delta(lo: Long) = rows(lo, lo + 20)
     delta(0).coalesce(1).write.parquet(dataDir)
-    VersionLog.commitSnapshot(spark, vdir, FileSkipping.buildManifestStats(spark, dataDir, "k", Nil))
+    VersionLog.commitSnapshot(spark, vdir, FileSkipping.buildManifest(spark, dataDir, "k"))
     // the first append probes the one v0 file's footer (the contract
     // schema); later appends must never re-open it — fresh-file stats
     // reads touch only each append's own slot

@@ -79,6 +79,20 @@ class TableSqlSpec extends SparkSpec {
     assert(e.getMessage.contains("retain at least the head"), e.getMessage)
   }
 
+  test("VACUUM and its DRY RUN on a table whose version log does not exist throw") {
+    // a mistyped or never-bootstrapped log is not an empty one: VACUUM
+    // fails loudly, naming the dir, exactly like DESCRIBE HISTORY
+    val missing = scratch("tablesql_vacuum_nolog") + "/versions"
+    graft.util.Staging.deleteRecursive(missing)
+    val nreg = Map("nolog" -> reg("tbl").copy(versionsDir = missing))
+    for (stmt <- Seq("VACUUM nolog RETAIN 1 VERSIONS", "VACUUM nolog RETAIN 1 VERSIONS DRY RUN")) {
+      val e = intercept[IllegalArgumentException](TableSql(spark, nreg, stmt))
+      assert(e.getMessage.contains("does not exist") && e.getMessage.contains(missing),
+        s"$stmt: ${e.getMessage}")
+    }
+    assert(!new java.io.File(missing).exists())
+  }
+
   test("2D snapshot stats equal a rebuild through SQL DELETE, UPDATE and OPTIMIZE") {
     val base = scratch("tablesql_multi")
     graft.util.Staging.deleteRecursive(base)
@@ -88,7 +102,7 @@ class TableSqlSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$base/data")
     val vdir = s"$base/versions"
     VersionLog.commitSnapshot(spark, vdir,
-      FileSkipping.buildManifestStats(spark, s"$base/data", "k", Seq("x")))
+      FileSkipping.buildManifest(spark, s"$base/data", "k", Seq("x")))
     val mreg = Map("mtbl" -> TableSql.TableRef(s"$base/data", vdir, "k"))
     // the head snapshot's per-file x extents == a fresh scan of its files
     def assertStatsFresh(after: String): Unit = {

@@ -199,7 +199,7 @@ class VersionLogEdgeSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$base/data")
     val vdir = s"$base/versions"
     VersionLog.commitSnapshot(spark, vdir,
-      FileSkipping.buildManifestStats(spark, s"$base/data", "zk", Seq("x", "y")))
+      FileSkipping.buildManifest(spark, s"$base/data", "zk", Seq("x", "y")))
     val delta = withZk(src.filter(col("id") % 17 === 0)
       .withColumn("price", col("price") * 2))
     // the snapshot's x/y stats ride the merge: no column list to pass
