@@ -60,16 +60,15 @@ object FileSkipping {
     statsFor(spark, listParquet(fs, p).toSeq.sorted, keyCol, extraCols)
   }
 
-  /** Files whose [min_key, max_key] can contain at least one key of the
-    * single-column `keys` frame — a broadcast range semi-join against
-    * the \|files\|-row manifest, shared by the MERGE's hit probe and
-    * [[semiJoinReadVersion]]. */
-  private def rangeHitFiles(manifest: DataFrame, keys: DataFrame): Array[String] =
+  /** The manifest rows whose [min_key, max_key] can contain at least one
+    * key of the single-column `keys` frame — a broadcast range semi-join
+    * against the \|files\|-row manifest, shared by the MERGE's hit probe
+    * and [[semiJoinReadVersion]]. */
+  private def rangeHitFiles(manifest: DataFrame, keys: DataFrame): DataFrame =
     manifest.join(
-        broadcast(keys.toDF("__k").distinct()),
-        coalesce(col("__k") >= col("min_key") && col("__k") <= col("max_key"), lit(false)),
-        "left_semi")
-      .select("file").collect().map(_.getString(0)).sorted
+      broadcast(keys.toDF("__k").distinct()),
+      coalesce(col("__k") >= col("min_key") && col("__k") <= col("max_key"), lit(false)),
+      "left_semi")
 
   /** DYNAMIC FILE PRUNING — the read side of the MERGE's range probe:
     * open only the files of version `v` whose key range can contain a
@@ -83,9 +82,7 @@ object FileSkipping {
     * must be broadcast-small, same economics as the MERGE delta. */
   def semiJoinReadVersion(spark: SparkSession, versionsDir: String, v: Int,
                           keys: DataFrame): DataFrame =
-    VersionLog.readAdmitted(spark, versionsDir, v) { man =>
-      man.filter(col("file").isin(rangeHitFiles(man, keys).toIndexedSeq: _*))
-    }
+    VersionLog.readAdmitted(spark, versionsDir, v)(rangeHitFiles(_, keys))
 
   /** Zero-row frame carrying the table's schema — the empty-hit branch
     * of the MERGE probes and of [[bloomPointRead]] (snapshot reads have
@@ -104,16 +101,22 @@ object FileSkipping {
     }
 
   /** Recursive parquet-file listing through the Hadoop FileSystem — how
-    * every verb finds the files it just wrote into its private slot. */
+    * every verb finds the files it just wrote into its private slot, and
+    * how [[buildManifest]] finds a layout's files. Like Spark's file
+    * index, a file or directory below `path` whose name starts with `_`
+    * or `.` is hidden (a `_temporary` commit dir, checksum files). */
   private def listParquet(fs: org.apache.hadoop.fs.FileSystem,
                           path: org.apache.hadoop.fs.Path): Set[String] =
     if (!fs.exists(path)) Set.empty
     else {
+      val rootDepth = fs.makeQualified(path).depth()
       val out = Set.newBuilder[String]
       val it = fs.listFiles(path, /* recursive = */ true)
       while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) out += f.getPath.toUri.toString
+        val f = it.next().getPath
+        val hidden = Iterator.iterate(f)(_.getParent).takeWhile(_.depth() > rootDepth)
+          .exists(q => q.getName.startsWith("_") || q.getName.startsWith("."))
+        if (f.getName.endsWith(".parquet") && !hidden) out += f.toUri.toString
       }
       out.result()
     }
@@ -885,6 +888,7 @@ object FileSkipping {
       requireUniqueKeys(delta, keyCol)
       enforceConstraints(spark, versionsDir, rv, delta, "the MERGE delta")
       val hit = rangeHitFiles(snap, delta.select(col(keyCol)))
+        .select("file").collect().map(_.getString(0)).sorted
       // hit files read WITH their deletion vectors applied: the rewrite
       // below replaces these files wholesale, so reading raw content
       // would resurrect every DV-deleted row into the replacements (the
@@ -1041,7 +1045,8 @@ object FileSkipping {
       // forces the whole pinned set (its rows live anywhere)
       val victims: Seq[String] =
         if (smArms.nonEmpty) snap.select("file").collect().map(_.getString(0)).toSeq.sorted
-        else rangeHitFiles(snap, delta.select(col(keyCol))).toSeq
+        else rangeHitFiles(snap, delta.select(col(keyCol)))
+          .select("file").collect().map(_.getString(0)).toSeq.sorted
       val touched = (
         if (victims.nonEmpty)
           VersionLog.readRowsWithDv(spark, stored, dvMapOf(snap, victims.toIndexedSeq))

@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
   *     rebases;
   *   - multi-column stats carried IN the snapshot schema give 2D
   *     file-pruned reads at both a pinned version and the post-merge
-  *     head (the q202 shape), with strictly fewer files opened.
+  *     head (the q202 shape), with strictly fewer files opened;
+  *   - [[FileSkipping.buildManifest]] lists a layout's files as Spark's
+  *     reader does: `_`/`.`-named files and dirs below it are hidden.
   */
 class VersionLogEdgeSpec extends SparkSpec {
   import graft.io.{FileSkipping, VersionLog}
@@ -50,6 +52,24 @@ class VersionLogEdgeSpec extends SparkSpec {
     FileSkipping.buildManifest(spark, s"$base/data", "k").drop("n_keys")
       .write.mode("overwrite").parquet(s"$base/manifest")
     base
+  }
+
+  test("buildManifest lists a layout's files as Spark's reader does: _ and . names are hidden") {
+    val base = freshTable("hidden")
+    val data = java.nio.file.Paths.get(s"$base/data")
+    val one = data.toFile.listFiles().map(_.toPath)
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    for (d <- Seq("_temporary/0", ".staging")) {
+      java.nio.file.Files.createDirectories(data.resolve(d))
+      java.nio.file.Files.copy(one, data.resolve(s"$d/${one.getFileName}"))
+    }
+    java.nio.file.Files.copy(one, data.resolve(s"_${one.getFileName}"))
+    val man = FileSkipping.buildManifest(spark, s"$base/data", "k")
+    val listed = man.select("file").collect().map(_.getString(0)).toSet
+    val read = spark.read.parquet(s"$base/data").select(input_file_name()).distinct()
+      .collect().map(_.getString(0)).toSet
+    assert(listed.size == 4 && listed == read)
+    assert(man.agg(sum("n_rows")).head().getLong(0) == 4000L)
   }
 
   test("corrupt _head pointer (Int overflow digits) degrades to the listing, never throws") {
